@@ -1,0 +1,5 @@
+"""KG benchmark: staged build and a SPARQL mix on ``local[nproc]``.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the root of a checkout; see ``perfbench/README.md``.
+"""
