@@ -8,9 +8,9 @@ Usage:
         [--no-resume] [--canonicalize] \
         [--mappings-dir /data/mappings]
 
-The work dir accumulates one sub-table per stage (parquet; Iceberg
-writeTo in a catalog deployment) and doubles as the checkpoint: rerun
-the same command after a failure and completed stages are skipped.
+The work dir accumulates one parquet sub-table per stage and doubles
+as the checkpoint: rerun the same command after a failure and
+completed stages are skipped.
 """
 
 from __future__ import annotations
@@ -39,11 +39,6 @@ def main(argv=None):
                     help="SHACL-lite shapes file (JSON list of shape "
                          "dicts, see operators/shacl.py); writes the "
                          "violation report to <work>/shacl_report")
-    ap.add_argument("--format", default="parquet",
-                    choices=["parquet", "iceberg"],
-                    help="stage checkpoint format: iceberg = snapshot "
-                         "tables in a configured catalog (needs the "
-                         "iceberg-spark-runtime jar on the classpath)")
     args = ap.parse_args(argv)
 
     if args.mappings_dir:
@@ -62,7 +57,7 @@ def main(argv=None):
     from rdf_converter_spark.pipelines.runner import run_pipeline
 
     out = run_pipeline(spark, args.input, args.work,
-                       resume=not args.no_resume, fmt=args.format)
+                       resume=not args.no_resume)
     n = out["triples"].count()
     print("TRIPLES=%d" % n)
 

@@ -1,18 +1,19 @@
 # -*- coding: utf-8 -*-
 """Fused single-pass parse: every document kind in ONE mapInPandas
-crossing.
+crossing — the package's only parse path.
 
-The per-kind parse stages (ld.parse_ld_programs, pa.parse_pa, ...)
-each scan the routed table and pay one Python/Arrow round trip per
-partition; with K kinds the corpus crosses the JVM<->Python boundary
-K times (plus cache-fill races when the branches share a lazy
-persist). At 10^12 documents the parse is the pipeline's dominant
-cost, so the volume path parses each partition EXACTLY ONCE: one
-Arrow batch in, rows grouped by ``doc_type`` and dispatched to the
-same per-kind derive kernels, one union-schema batch out. Downstream
+A parse per kind would scan the routed table once per kind and pay one
+Python/Arrow round trip per partition each time; with K kinds the
+corpus would cross the JVM<->Python boundary K times. At 10^12
+documents the parse is the pipeline's dominant cost, so every build
+(the staged ``parsed_docs`` stage, the single-plan builds) parses each
+partition EXACTLY ONCE: one Arrow batch in, rows grouped by
+``doc_type`` and dispatched to the per-kind derive kernels, one
+union-schema batch out. Downstream
 consumers filter the fused frame by kind — pure JVM scans of the
 (checkpointed) parsed columns, which are far narrower than the raw
-payloads.
+payloads. The per-kind helpers (``ld.parse_ld_programs``,
+``pa.parse_pa``, ...) are this parse restricted to one kind.
 
 Schemas have no cross-kind name/type conflicts (asserted at import
 time); absent columns are null for rows of other kinds.

@@ -2,10 +2,11 @@
 """INA Legal Deposit pipeline (reference: ld_converter.py).
 
 Stage layout:
-  parse+derive  — one ``mapInPandas`` pass over routed ld_program /
-                  ld_segment payloads; all byte-exact scalar work
-                  (slugs, sha1 URIs, datetime/duration quirks) happens
-                  here inside Arrow batches via the textkit kernels.
+  parse+derive  — the per-row derive kernels of ld_program /
+                  ld_segment payloads, run inside the fused Arrow parse
+                  (pipelines.fused); all byte-exact scalar work (slugs,
+                  sha1 URIs, datetime/duration quirks) happens there via
+                  the textkit kernels.
   emit          — pure Spark: one array-of-triple-structs per row
                   (static bundle + F.transform over multi-valued
                   arrays), one explode, empty-object gate.
@@ -17,7 +18,7 @@ Stage layout:
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -26,7 +27,6 @@ from pyspark.sql import types as T
 
 from .. import config, mappings
 from ..operators.emit import cached_exprs, explode_triples, triple, uref
-from ..sources.units import parse_csv_units_batched
 from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, RDFS_LABEL, XSD
 from ..textkit import (
     RADIO_CHANNELS,
@@ -271,41 +271,18 @@ def _derive_ld_segment(url, dataset, file, row_idx, row: pd.Series) -> dict:
     return out
 
 
-def _parser(derive, schema):
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = parse_csv_units_batched(
-                [bytes(p) for p in pdf["payload"]]
-            )
-            recs = [
-                derive(u, d, f, r, row)
-                for u, d, f, r, row in zip(
-                    pdf["url"], pdf["dataset"], pdf["file"], pdf["row"], rows
-                )
-            ]
-            yield pd.DataFrame(recs, columns=cols)
-
-    return run
-
-
 def parse_ld_programs(routed: DataFrame) -> DataFrame:
-    src = routed.filter(F.col("doc_type") == "ld_program").select(
-        "url", "dataset", "file", "row", "payload"
-    )
-    return src.mapInPandas(
-        _parser(_derive_ld_program, LD_PROGRAM_SCHEMA), LD_PROGRAM_SCHEMA
-    )
+    from . import fused
+
+    return fused.of_kind(fused.parse_all(routed, kinds=("ld_program",)),
+                         "ld_program")
 
 
 def parse_ld_segments(routed: DataFrame) -> DataFrame:
-    src = routed.filter(F.col("doc_type") == "ld_segment").select(
-        "url", "dataset", "file", "row", "payload"
-    )
-    return src.mapInPandas(
-        _parser(_derive_ld_segment, LD_SEGMENT_SCHEMA), LD_SEGMENT_SCHEMA
-    )
+    from . import fused
+
+    return fused.of_kind(fused.parse_all(routed, kinds=("ld_segment",)),
+                         "ld_segment")
 
 
 # --------------------------------------------------------------------------

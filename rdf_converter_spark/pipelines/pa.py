@@ -2,8 +2,9 @@
 """INA Professional Archive pipeline (reference: pa_converter.py).
 
 Stage layout:
-  parse+derive — one ``mapInPandas`` pass per payload (all URI minting
-                 and scalar formatting); the only cross-row state,
+  parse+derive — the per-row derive kernel, run inside the fused Arrow
+                 parse (pipelines.fused): all URI minting and scalar
+                 formatting; the only cross-row state,
                  ``Heure de diffusion 2`` (extract_time's stale
                  broadcast_time carry, pa_converter.py:66-79), is left
                  to a native window over the global source order.
@@ -19,8 +20,6 @@ Stage layout:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -28,7 +27,6 @@ from pyspark.sql import types as T
 
 from .. import config, mappings
 from ..operators.emit import cached_exprs, explode_triples, triple, uref
-from ..sources.units import parse_csv_units_batched
 from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, RDFS_LABEL, SKOS_NOTE, XSD
 from ..textkit import (
     clean_string_pa,
@@ -262,25 +260,9 @@ def _derive_pa(url, dataset, file, row_idx, row: pd.Series) -> dict:
 
 
 def parse_pa(routed: DataFrame) -> DataFrame:
-    src = routed.filter(F.col("doc_type") == "pa").select(
-        "url", "dataset", "file", "row", "payload"
-    )
-    cols = [f.name for f in PA_SCHEMA.fields]
+    from . import fused
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = parse_csv_units_batched(
-                [bytes(p) for p in pdf["payload"]]
-            )
-            recs = [
-                _derive_pa(u, d, f, r, row)
-                for u, d, f, r, row in zip(
-                    pdf["url"], pdf["dataset"], pdf["file"], pdf["row"], rows
-                )
-            ]
-            yield pd.DataFrame(recs, columns=cols)
-
-    return src.mapInPandas(run, PA_SCHEMA)
+    return fused.of_kind(fused.parse_all(routed, kinds=("pa",)), "pa")
 
 
 def with_heure2(pa: DataFrame) -> DataFrame:

@@ -1,19 +1,28 @@
 # -*- coding: utf-8 -*-
 """Full KG-construction run: web_pages -> routed -> parsed -> triples
--> deduplicated triple table (+ canonical entity map), with staged
-checkpoint/resume, lineage and metrics (plans.checkpoint).
+-> deduplicated triple table, with staged checkpoint/resume, lineage
+and metrics (plans.checkpoint).
 
-Stage graph (shuffle budget at 10^12 docs):
-  route         1 full corpus scan, no shuffle, written partitioned by
-                doc_type (downstream parses are partition-pruned)
-  parse_*       per-kind Arrow parse; no shuffle
-  pa_heure      global-order window (quirk F14) — single sort of the
-                PA slice only
-  triples_*     per-kind explode emission; no shuffle
-  ld_seg_times / pa_seg_times   J2 joins (AQE broadcasts lineage side)
-  flow_* / subtitles            J3/J4 joins against lineage tables
-  triples       union + salted dedup — THE pipeline shuffle; map-side
-                partial dedup collapses hub triples before exchange
+Stage graph of ``run_pipeline`` (8 stages; shuffle budget at 10^12
+docs):
+  routed        1 full corpus scan, no shuffle, written partitioned by
+                doc_type (the parse scans are partition-pruned)
+  parsed_docs   ONE fused Arrow parse of every document kind
+                (pipelines.fused), written partitioned by doc_type;
+                each kind is read back with ``fused.of_kind`` — a
+                partition-pruned JVM scan; no shuffle
+  parsed_flow   flow-mapping rows, pure JVM
+  lineage_ld / lineage_pa / lineage_yle
+                identifier -> URI tables the link joins run against
+  pa_derived    global-order window (quirk F14) — single sort of the
+                PA slice only — plus the J2 segment-time join
+  triples       ``assemble_triples``: per-kind explode emission, J2/J3/J4
+                joins (AQE broadcasts the lineage side), union + dedup
+                — THE pipeline shuffle; map-side partial dedup
+                collapses hub triples before exchange
+
+``build_triples_inmem`` runs the same parse and the same
+``assemble_triples`` as one plan, without stage tables.
 """
 
 from __future__ import annotations
@@ -28,6 +37,7 @@ from ..plans.checkpoint import StageRunner
 from ..sources.route import route
 from ..sources.web_pages import read_web_pages
 from . import flow as flp
+from . import fused as fup
 from . import ld as ldp
 from . import pa as pap
 from . import subtitles as subp
@@ -35,33 +45,27 @@ from . import yle as ylep
 from .vocab import ina_vocab, yle_vocab
 
 
-def build_triples_inmem(
-    spark: SparkSession, routed: DataFrame, dedup: bool = True
+def assemble_triples(
+    spark: SparkSession,
+    programs: DataFrame,
+    segments: DataFrame,
+    pa_full: DataFrame,
+    yle: DataFrame,
+    asr: DataFrame,
+    flow: DataFrame,
+    ld_lin: DataFrame,
+    pa_lin: DataFrame,
+    yle_lin: DataFrame,
+    dedup: bool = True,
 ) -> DataFrame:
-    """Single-plan variant (no staged materialization): routed rows ->
-    deduplicated triple table. Used by benchmarks and the streaming
-    foreachBatch path; the staged ``run_pipeline`` is the resumable
-    production shape.
+    """Every graph's triples from the parsed kinds and their lineage
+    tables: the 11-part union (per-kind emission, the controlled
+    vocabularies, the flow links and the subtitles), deduplicated.
 
-    Parse strategy: ONE fused Python pass over the corpus
-    (pipelines.fused), materialized via eager localCheckpoint — every
-    downstream branch (triples, lineage, joins) is then a pure-JVM
-    scan of the narrow parsed columns. The r01 version persisted
-    ``routed`` lazily and ran one mapInPandas per kind: K Python
-    crossings per partition plus cache-fill races between branches."""
-    from . import fused as fup
-
-    parsed = fup.parse_all(routed).localCheckpoint(eager=True)
-    programs = fup.of_kind(parsed, "ld_program")
-    segments = fup.of_kind(parsed, "ld_segment")
-    pa = fup.of_kind(parsed, "pa")
-    pa_full = pap.pa_with_segment_times(pap.with_heure2(pa))
-    yle = fup.of_kind(parsed, "yle")
-    asr = fup.of_kind(parsed, "asr")
-    flow = flp.parse_flow(routed)
-    ld_lin = ldp.ld_lineage(programs)
-    pa_lin = pap.pa_lineage(pa)
-    yle_lin = ylep.yle_lineage(yle)
+    ``dedup=False`` lets callers that need a different survivor key
+    (the compat CLI dedups within (graph, yle dataset) so a triple
+    emitted by pages of TWO datasets reaches both datasets' files, like
+    the reference's per-dataset graphs) run their own dedup_triples."""
     parts = [
         ldp.ld_program_triples(programs),
         ina_vocab(spark, "ld"),
@@ -78,11 +82,38 @@ def build_triples_inmem(
     acc = parts[0]
     for p in parts[1:]:
         acc = acc.unionByName(p, allowMissingColumns=True)
-    # dedup=False lets callers that need a different survivor key (the
-    # compat CLI dedups within (graph, yle dataset) so a triple emitted
-    # by pages of TWO datasets reaches both datasets' files, like the
-    # reference's per-dataset graphs) run their own dedup_triples.
     return dedup_triples(acc) if dedup else acc
+
+
+def build_triples_inmem(
+    spark: SparkSession, routed: DataFrame, dedup: bool = True
+) -> DataFrame:
+    """Single-plan variant (no staged materialization): routed rows ->
+    deduplicated triple table. Used by benchmarks and the streaming
+    foreachBatch path; the staged ``run_pipeline`` is the resumable
+    production shape.
+
+    Parse strategy: ONE fused Python pass over the corpus
+    (pipelines.fused), materialized via eager localCheckpoint — every
+    downstream branch (triples, lineage, joins) is then a pure-JVM
+    scan of the narrow parsed columns."""
+    parsed = fup.parse_all(routed).localCheckpoint(eager=True)
+    programs = fup.of_kind(parsed, "ld_program")
+    pa = fup.of_kind(parsed, "pa")
+    yle = fup.of_kind(parsed, "yle")
+    return assemble_triples(
+        spark,
+        programs=programs,
+        segments=fup.of_kind(parsed, "ld_segment"),
+        pa_full=pap.pa_with_segment_times(pap.with_heure2(pa)),
+        yle=yle,
+        asr=fup.of_kind(parsed, "asr"),
+        flow=flp.parse_flow(routed),
+        ld_lin=ldp.ld_lineage(programs),
+        pa_lin=pap.pa_lineage(pa),
+        yle_lin=ylep.yle_lineage(yle),
+        dedup=dedup,
+    )
 
 
 def build_triples_extraction(spark: SparkSession, routed: DataFrame) -> DataFrame:
@@ -96,8 +127,6 @@ def build_triples_extraction(spark: SparkSession, routed: DataFrame) -> DataFram
 
     One fused Python parse pass (pipelines.fused), eagerly
     checkpointed; emission is JVM-only from the parsed columns."""
-    from . import fused as fup
-
     parsed = fup.parse_all(
         routed, kinds=("ld_program", "pa", "yle")
     ).localCheckpoint(eager=True)
@@ -127,18 +156,16 @@ def run_pipeline(
     work_dir: str,
     resume: bool = True,
     route_partitions: int = 0,
-    fmt: str = "parquet",
 ) -> Dict[str, DataFrame]:
     """Execute the full pipeline; returns the named output frames.
 
     ``route_partitions`` spreads the routed materialization when the
     input arrives in fewer splits than the cluster has slots (small
     files bin-packed by maxPartitionBytes would otherwise cap the
-    parallelism of every downstream per-kind parse); 0 = keep the
-    scan's partitioning (the right choice when the input is already a
-    well-partitioned table).
+    parallelism of the parse); 0 = keep the scan's partitioning (the
+    right choice when the input is already a well-partitioned table).
     """
-    sr = StageRunner(spark, work_dir, resume=resume, fmt=fmt)
+    sr = StageRunner(spark, work_dir, resume=resume)
 
     def build_routed() -> DataFrame:
         r = route(read_web_pages(spark, web_pages_path))
@@ -147,14 +174,11 @@ def run_pipeline(
         return r
 
     routed = sr.stage("routed", build_routed, partition_by=["doc_type"])
-
-    programs = sr.stage("parsed_ld_program",
-                        lambda: ldp.parse_ld_programs(routed))
-    segments = sr.stage("parsed_ld_segment",
-                        lambda: ldp.parse_ld_segments(routed))
-    pa = sr.stage("parsed_pa", lambda: pap.parse_pa(routed))
-    yle = sr.stage("parsed_yle", lambda: ylep.parse_yle(routed))
-    asr = sr.stage("parsed_asr", lambda: subp.parse_asr(routed))
+    parsed = sr.stage("parsed_docs", lambda: fup.parse_all(routed),
+                      partition_by=["doc_type"])
+    programs = fup.of_kind(parsed, "ld_program")
+    pa = fup.of_kind(parsed, "pa")
+    yle = fup.of_kind(parsed, "yle")
     flow = sr.stage("parsed_flow", lambda: flp.parse_flow(routed))
 
     ld_lin = sr.stage("lineage_ld", lambda: ldp.ld_lineage(programs))
@@ -165,28 +189,22 @@ def run_pipeline(
     pa_lin = sr.stage("lineage_pa", lambda: pap.pa_lineage(pa))
     yle_lin = sr.stage("lineage_yle", lambda: ylep.yle_lineage(yle))
 
-    def build_triples() -> DataFrame:
-        parts = [
-            ldp.ld_program_triples(programs),
-            ina_vocab(spark, "ld"),
-            ldp.ld_segment_triples(
-                ldp.ld_segments_with_times(segments, programs)
-            ),
-            pap.pa_triples(pa_full),
-            ina_vocab(spark, "pa"),
-            ylep.yle_triples(yle),
-            yle_vocab(spark, "yle"),
-            flp.ld_flow_triples(flow, ld_lin),
-            flp.pa_flow_triples(flow, pa_lin),
-            flp.yle_flow_triples(flow, yle_lin),
-            subp.subtitle_triples(asr, ld_lin),
-        ]
-        acc = parts[0]
-        for p in parts[1:]:
-            acc = acc.unionByName(p, allowMissingColumns=True)
-        return dedup_triples(acc)
-
-    triples = sr.stage("triples", build_triples, partition_by=["graph"])
+    triples = sr.stage(
+        "triples",
+        lambda: assemble_triples(
+            spark,
+            programs=programs,
+            segments=fup.of_kind(parsed, "ld_segment"),
+            pa_full=pa_full,
+            yle=yle,
+            asr=fup.of_kind(parsed, "asr"),
+            flow=flow,
+            ld_lin=ld_lin,
+            pa_lin=pa_lin,
+            yle_lin=yle_lin,
+        ),
+        partition_by=["graph"],
+    )
     sr.write_metrics()
     return {
         "routed": routed,

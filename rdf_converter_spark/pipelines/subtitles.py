@@ -1,8 +1,9 @@
 # -*- coding: utf-8 -*-
 """ASR subtitle pipeline (pa_converter.py:596-669).
 
-Parse: one ``mapInPandas`` pass over ASR XML payloads -> one row per
-non-empty speech segment (S4), carrying the within-file sequence.
+Parse: the fused Arrow parse (pipelines.fused) of ASR XML payloads ->
+one row per non-empty speech segment (S4), carrying the within-file
+sequence.
 Link (J4): the reference builds {identifier -> URI} from the LD
 lineage with R-prefix *and* extension stripped, but probes it with
 only the extension stripped — so R-prefixed subtitle files never
@@ -13,16 +14,12 @@ order — ``row_number`` over (identifier, seq).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config
 from ..operators.emit import explode_triples, triple, uref
-from ..sources.units import parse_asr_unit
 from ..terms import EB, RDF_TYPE, XSD
 
 BASE = config.BASE
@@ -44,27 +41,9 @@ ASR_SCHEMA = T.StructType(
 
 
 def parse_asr(routed: DataFrame) -> DataFrame:
-    src = routed.filter(F.col("doc_type") == "asr").select(
-        "url", "file", "payload"
-    )
-    cols = [f.name for f in ASR_SCHEMA.fields]
+    from . import fused
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for url, fname, payload in zip(
-                pdf["url"], pdf["file"], pdf["payload"]
-            ):
-                for seq, r in enumerate(parse_asr_unit(bytes(payload), fname)):
-                    recs.append(
-                        {
-                            "url": url, "file": fname, "seq": seq,
-                            **r,
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=cols)
-
-    return src.mapInPandas(run, ASR_SCHEMA)
+    return fused.of_kind(fused.parse_all(routed, kinds=("asr",)), "asr")
 
 
 def subtitle_triples(asr: DataFrame, ld_lineage: DataFrame) -> DataFrame:

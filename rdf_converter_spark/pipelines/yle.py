@@ -1,19 +1,19 @@
 # -*- coding: utf-8 -*-
 """Yle MAObject pipeline (reference: yle_converter.py).
 
-One ``mapInPandas`` pass parses each XML document and derives every
-URI/lexical (E8: repeated MVAttribute groups come out as arrays of
-pre-derived structs with their positional index — the reference's
-``enumerate`` feeds ``/subtitling/{n}`` URIs and first-run logic, A5).
+The fused Arrow parse (pipelines.fused) runs ``_derive_yle`` on each
+XML document, which derives every URI/lexical (E8: repeated
+MVAttribute groups come out as arrays of pre-derived structs with
+their positional index — the reference's ``enumerate`` feeds
+``/subtitling/{n}`` URIs and first-run logic, A5).
 Emission is a single explode per document; the intra-document GUID
 join (J5) happens inside the parser — no shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -328,23 +328,9 @@ def _derive_yle(url, dataset, file, row_idx, payload: bytes) -> dict:
 
 
 def parse_yle(routed: DataFrame) -> DataFrame:
-    src = routed.filter(F.col("doc_type") == "yle").select(
-        "url", "dataset", "file", "row", "payload"
-    )
-    cols = [f.name for f in YLE_SCHEMA.fields]
+    from . import fused
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [
-                _derive_yle(u, d, f, r, bytes(p))
-                for u, d, f, r, p in zip(
-                    pdf["url"], pdf["dataset"], pdf["file"], pdf["row"],
-                    pdf["payload"],
-                )
-            ]
-            yield pd.DataFrame(recs, columns=cols)
-
-    return src.mapInPandas(run, YLE_SCHEMA)
+    return fused.of_kind(fused.parse_all(routed, kinds=("yle",)), "yle")
 
 
 def _yle_bundle():

@@ -15,8 +15,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..operators.emit import dedup_triples
+from ..operators.merge import KEY
 from ..pipelines.runner import build_triples_extraction
 from ..sources.route import route
 from ..sources.web_pages import WEB_PAGES_SCHEMA
@@ -53,6 +56,37 @@ def stream_triples(
     return writer.start()
 
 
+def merge_batch(base: DataFrame, delta: DataFrame,
+                pages: DataFrame) -> DataFrame:
+    """Merge one batch's triples (``delta``, each row tagged with the
+    ``src_url`` of a page that emitted it) into the store rows ``base``.
+
+    ``pages`` holds the batch's page urls (one ``src_url`` column). A
+    (subj, pred) group the batch re-states is REPLACED by the batch's
+    rows when every stored row of it came from a page of this batch
+    (a re-crawl updates its entity's triples in place); a group that
+    also holds rows from pages outside the batch — an agent's roles,
+    a collection's parts, a channel's labels, stated by many pages —
+    keeps them and gains the batch's rows. New pages therefore only
+    add triples: a store fed the corpus in batches holds the triples
+    of the whole corpus. Rows are unique on (graph, triple key).
+
+    Only the stored rows of re-stated groups are checked against the
+    page set, and the batch-sized key sets are broadcast; the final
+    dedup shuffles the touched buckets, not the store. Limit: a stored
+    triple records one page, so a value that a re-crawled page no
+    longer states survives in a group other pages also state."""
+    keys = delta.select(*KEY).distinct()
+    restated = base.join(F.broadcast(keys), KEY, "left_semi")
+    shared = (
+        restated.join(F.broadcast(pages), "src_url", "left_anti")
+        .select(*KEY).distinct()
+    )
+    replaced = keys.join(shared, KEY, "left_anti")
+    kept = base.join(F.broadcast(replaced), KEY, "left_anti")
+    return dedup_triples(kept.unionByName(delta))
+
+
 def stream_triples_upsert(
     spark: SparkSession,
     web_pages_path: str,
@@ -61,10 +95,10 @@ def stream_triples_upsert(
     max_files_per_trigger: int = 64,
 ):
     """Incremental extraction that MAINTAINS a triple store instead of
-    appending: each micro-batch's triples replace the store's
-    (subj, pred) groups they re-state (operators/merge.upsert_triples)
-    — re-crawled pages update their entity's triples in place rather
-    than accumulating duplicates awaiting a periodic dedup.
+    appending: each micro-batch's triples merge into the store
+    (``merge_batch``) — re-crawled pages update their entity's triples
+    in place, new pages add theirs, and nothing accumulates duplicates
+    awaiting a periodic dedup.
 
     Scale shape: the store is hash-bucketed on ``subj`` and written
     with DYNAMIC partition overwrite, so a micro-batch rewrites only
@@ -80,10 +114,6 @@ def stream_triples_upsert(
     in place — impossible here (extraction emits no tombstones), but
     a deployment adding deletes needs the Iceberg MERGE path.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators.merge import upsert_triples
-
     reader = (
         spark.readStream.schema(WEB_PAGES_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -93,16 +123,20 @@ def stream_triples_upsert(
     ckpt_path = os.path.join(out_dir, "_upsert_checkpoint")
 
     def _store_exists(s) -> bool:
-        # Hadoop FS check, not os.path.exists: the store may live on
-        # hdfs:///s3a:// where a driver-local stat is always False and
-        # the merge path would silently overwrite touched buckets
-        # with delta-only rows
+        # a committed bucket partition, not a root _SUCCESS: dynamic
+        # partition overwrite never writes the root marker, so that
+        # check sent every batch down the "no store yet" branch and
+        # each batch replaced the store. Hadoop FS, not os.path: the
+        # store may live on hdfs:///s3a://, where a driver-local stat
+        # is always False. Uncommitted output sits in a hidden
+        # .spark-staging-* directory, which the glob does not match.
         jvm = s.sparkContext._jvm
         conf = s.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(store, "_SUCCESS")
+        pattern = jvm.org.apache.hadoop.fs.Path(
+            os.path.join(store, "bucket=*")
         )
-        return path.getFileSystem(conf).exists(path)
+        found = pattern.getFileSystem(conf).globStatus(pattern)
+        return bool(found) and any(st.isDirectory() for st in found)
 
     def process_batch(batch_df, batch_id: int):
         s = batch_df.sparkSession
@@ -117,7 +151,8 @@ def stream_triples_upsert(
             base = s.read.parquet(store).filter(
                 F.col("bucket").isin(touched)
             )
-            merged = upsert_triples(base, delta)
+            pages = batch_df.select(F.col("url").alias("src_url")).distinct()
+            merged = merge_batch(base, delta, pages)
         else:
             merged = delta.dropDuplicates()
         (
