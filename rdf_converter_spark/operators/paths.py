@@ -10,13 +10,19 @@ variable. This module evaluates the path algebra relationally:
 - ``^p``   inverse    -> column swap (zero cost)
 - ``p/q``  sequence   -> relational composition (equi-join o=s)
 - ``p|q``  alternation-> zero-shuffle Union
-- ``p+``   one-or-more-> iterative doubling with per-round distinct +
-  localCheckpoint; early-exits when converged (then the result is the
-  exact unbounded ``+``), otherwise covers paths of length
-  <= 2^max_rounds — the scale-honest bounded form, same contract as
-  ``graph.py:khop_neighborhood``. A corpus-scale ``+`` over a
-  10^12-edge relation is a connected-components-shaped job; for
-  hierarchies that are *schema-sized* use ``rdfs.transitive_closure``.
+- ``p+``   one-or-more-> iterative doubling; early-exits when
+  converged (then the result is the exact unbounded ``+``), otherwise
+  covers paths of length <= 2^max_rounds — the scale-honest bounded
+  form, same contract as ``graph.py:khop_neighborhood``. Dispatched by
+  size: a step relation of at most ``_DRIVER_ROWS`` rows (the bound
+  ``isokit``'s driver path uses) is pulled in ONE bounded Arrow
+  collect and closed on the driver in Python sets, then shipped back
+  as one Arrow table — one Spark job instead of a checkpoint and a
+  count per round. A larger step relation, or a closure that grows
+  past the cap, runs the distributed doubling loop (per-round distinct
+  + localCheckpoint). A corpus-scale ``+`` over a 10^12-edge relation
+  is a connected-components-shaped job; for hierarchies that are
+  *schema-sized* use ``rdfs.transitive_closure``.
 - ``p*`` / ``p?`` zero-or-more / zero-or-one -> the ``+`` closure
   (resp. the step itself) unioned with the identity relation over the
   node universe of the INPUT triple table (SPARQL's zero-length path
@@ -41,12 +47,18 @@ metacharacters ``/ | ^ + * ? ! ( )``; precedence alt < seq < postfix.
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import Any, Dict, List, Optional, Set, Tuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _META = "<>()|/^+*?!"
+
+# Largest step relation (and closure) closed on the driver — the
+# collect bound isokit's driver-side path uses; beyond it the closure
+# runs as distributed doubling rounds.
+_DRIVER_ROWS = 200_000
 
 
 def _tokenize(path: str) -> List[Tuple[str, str]]:
@@ -234,8 +246,22 @@ def _closure(step: DataFrame, max_rounds: int,
     when it converges within ``max_rounds``, else bounded at paths of
     length <= 2^max_rounds (module docstring). With ``keys`` the
     closure joins carry the partition columns, so paths never cross
-    partition values."""
+    partition values, and a null key or node composes with nothing
+    (SQL equality never matches null).
+
+    Size dispatch: ONE collect of at most ``_DRIVER_ROWS + 1`` step
+    rows through Arrow; when the step and every round's closure stay
+    within ``_DRIVER_ROWS`` rows, the rounds run on the driver and the
+    result returns as one Arrow table (no further Spark job until the
+    caller's own action). Otherwise the distributed loop below runs,
+    with a ``distinct().localCheckpoint()`` and a ``count()`` per
+    round."""
     ks = list(keys)
+    table = step.limit(_DRIVER_ROWS + 1).toArrow()
+    if table.num_rows <= _DRIVER_ROWS:
+        closed = _closure_local(table, max_rounds, len(ks))
+        if closed is not None:
+            return step.sparkSession.createDataFrame(closed, step.schema)
     cur = step.distinct().localCheckpoint()
     n = cur.count()
     for _ in range(max_rounds):
@@ -253,6 +279,53 @@ def _closure(step: DataFrame, max_rounds: int,
             return nxt  # converged: exact unbounded closure
         cur, n = nxt, m
     return cur  # bounded: paths of length <= 2^max_rounds
+
+
+def _closure_local(table: pa.Table, max_rounds: int,
+                   nkeys: int) -> Optional[pa.Table]:
+    """The doubling rounds of ``_closure`` over a collected step
+    relation (columns: ``nkeys`` partition keys, subj, obj), one key
+    value at a time; None once the closure outgrows ``_DRIVER_ROWS``
+    rows. Rows with a null key are kept (deduplicated) but never
+    compose, and a null node never joins — as under SQL equality."""
+    groups: Dict[tuple, Set[Tuple[Any, Any]]] = {}
+    for row in zip(*(c.to_pylist() for c in table.columns)):
+        groups.setdefault(row[:nkeys], set()).add(row[nkeys:])
+    out: List[tuple] = []
+    for key, rel in groups.items():
+        if None not in key:
+            rel = _double(rel, max_rounds, _DRIVER_ROWS - len(out))
+            if rel is None:
+                return None
+        out.extend(key + edge for edge in rel)
+        if len(out) > _DRIVER_ROWS:
+            return None
+    cols = list(zip(*out)) or [()] * table.num_columns
+    return pa.table([pa.array(c, type=f.type)
+                     for c, f in zip(cols, table.schema)],
+                    schema=table.schema)
+
+
+def _double(rel: Set[Tuple[Any, Any]], max_rounds: int,
+            room: int) -> Optional[Set[Tuple[Any, Any]]]:
+    """Closure of one key's edge set by up to ``max_rounds`` doubling
+    rounds (rel := rel ∪ rel∘rel), stopping at the fixpoint; None as
+    soon as it holds more than ``room`` edges."""
+    for _ in range(max_rounds):
+        succ: Dict[Any, List[Any]] = {}
+        for s, o in rel:
+            if s is not None:
+                succ.setdefault(s, []).append(o)
+        nxt = set(rel)
+        for s, m in rel:
+            if m is not None:
+                nxt.update((s, o) for o in succ.get(m, ()))
+                if len(nxt) > room:
+                    return None
+        if len(nxt) == len(rel):
+            return rel  # converged: exact unbounded closure
+        rel = nxt
+    return rel
 
 
 def _identity(triples: DataFrame, keys: tuple = ()) -> DataFrame:

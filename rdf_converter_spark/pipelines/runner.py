@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.emit import dedup_triples
-from ..plans.checkpoint import StageRunner
+from ..plans.checkpoint import StageRunner, listing_sha1, package_sha1
 from ..sources.route import route
 from ..sources.web_pages import read_web_pages
 from . import flow as flp
@@ -164,8 +164,18 @@ def run_pipeline(
     files bin-packed by maxPartitionBytes would otherwise cap the
     parallelism of the parse); 0 = keep the scan's partitioning (the
     right choice when the input is already a well-partitioned table).
+
+    With ``resume`` a completed stage of ``work_dir`` is read back
+    only when the run fingerprint — the input listing, the
+    ``route_partitions`` setting and the package sources — equals the
+    one in ``work_dir/_run.json``; otherwise every stage is recomputed
+    and ``_run.json`` records why.
     """
-    sr = StageRunner(spark, work_dir, resume=resume)
+    sr = StageRunner(spark, work_dir, resume=resume, fingerprint={
+        "inputs": listing_sha1(spark, web_pages_path),
+        "route_partitions": route_partitions,
+        "sources": package_sha1(),
+    })
 
     def build_routed() -> DataFrame:
         r = route(read_web_pages(spark, web_pages_path))

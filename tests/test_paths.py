@@ -164,3 +164,135 @@ def test_no_cartesian_plan(triples):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan
     assert "BroadcastNestedLoop" not in plan
+
+
+# --- size dispatch: driver closure vs the distributed doubling loop ---
+
+_NODES = ["n%d" % i for i in range(5)]
+
+
+def _bounded_reach(edges, length):
+    """(s, o) pairs joined by a path of 1..length edges."""
+    succ = {}
+    for s, o in edges:
+        succ.setdefault(s, set()).add(o)
+    out = set()
+    for s in {s for s, _ in edges}:
+        frontier = {s}
+        for _ in range(length):
+            frontier = {o for n in frontier for o in succ.get(n, ())}
+            if not frontier:
+                break
+            out |= {(s, o) for o in frontier}
+    return out
+
+
+def _expected(rows, op, max_rounds, keyed):
+    """The SPARQL answer of ``?x p<op> ?y`` over ``rows`` (graph, subj,
+    pred, obj): per graph when keyed, where a null graph keeps its own
+    edges and composes with nothing."""
+    def key_of(g):
+        return (g,) if keyed else ()
+
+    step, universe = {}, {}
+    for g, s, p, o in rows:
+        universe.setdefault(key_of(g), set()).update((s, o))
+        if p == "p":
+            step.setdefault(key_of(g), set()).add((s, o))
+    out = set()
+    for k, edges in step.items():
+        rel = edges
+        if op in ("+", "*") and None not in k:
+            rel = _bounded_reach(edges, 2 ** max_rounds)
+        out |= {k + e for e in rel}
+    if op in ("*", "?"):
+        out |= {k + (n, n) for k, ns in universe.items() for n in ns}
+    return out
+
+
+def test_driver_and_distributed_closures_agree(spark):
+    """The driver closure (step within ``_DRIVER_ROWS``) and the
+    distributed doubling loop (forced by a cap of 0) return the same
+    rows and columns for ``+``, ``*`` and ``?``, unkeyed or keyed by a
+    graph column that may be null, bounded at paths of length
+    <= 2^max_rounds; both equal a breadth-first reference."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from rdf_converter_spark.operators import paths
+
+    edge = st.tuples(st.sampled_from(["g1", "g2", None]),
+                     st.sampled_from(_NODES), st.sampled_from(["p", "q"]),
+                     st.sampled_from(_NODES))
+    chain20 = [("g1", "c%02d" % i, "p", "c%02d" % (i + 1))
+               for i in range(20)]
+
+    @settings(max_examples=4, deadline=None, derandomize=True)
+    @given(rows=st.lists(edge, min_size=1, max_size=12),
+           chain=st.integers(0, 20), op=st.sampled_from(["+", "*", "?"]),
+           max_rounds=st.integers(1, 4), keyed=st.booleans())
+    @example(rows=[("g1", "a", "q", "b")], chain=0, op="+",
+             max_rounds=2, keyed=True)  # empty step relation
+    @example(rows=[(None, "a", "p", "b"), (None, "b", "p", "a"),
+                   ("g1", "a", "p", "b"), ("g1", "b", "p", "c"),
+                   ("g2", "c", "p", "c")],
+             chain=0, op="+", max_rounds=2, keyed=True)  # null key
+    @example(rows=[("g2", "a", "p", "a")], chain=20, op="+",
+             max_rounds=1, keyed=False)
+    @example(rows=[("g2", "a", "p", "a")], chain=20, op="*",
+             max_rounds=3, keyed=True)
+    @example(rows=[(None, "a", "p", "b")], chain=20, op="+",
+             max_rounds=4, keyed=True)
+    def check(rows, chain, op, max_rounds, keyed):
+        rows = rows + chain20[:chain]
+        t = spark.createDataFrame(
+            rows, "graph string, subj string, pred string, obj string")
+        keys = ("graph",) if keyed else ()
+
+        def run():
+            out = path_match(t, "?x", "p" + op, "?y",
+                             max_rounds=max_rounds, partition_cols=keys)
+            return out.dtypes, sorted(map(tuple, out.collect()), key=repr)
+
+        driver = run()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(paths, "_DRIVER_ROWS", 0)
+            distributed = run()
+        assert driver == distributed
+        assert set(driver[1]) == _expected(rows, op, max_rounds, keyed)
+        assert len(set(driver[1])) == len(driver[1])
+
+    check()
+
+
+def test_empty_step_closes_to_an_empty_frame_with_its_schema(spark):
+    from rdf_converter_spark.operators.paths import _closure
+
+    step = spark.createDataFrame(
+        [], "graph string, subj string, obj string")
+    out = _closure(step, 3, ("graph",))
+    assert out.schema == step.schema
+    assert out.collect() == []
+
+
+def test_plus_query_launches_at_most_two_jobs(spark, tmp_path):
+    """Lowering ``?x <p>+ ?y`` and collecting it costs one bounded
+    Arrow collect of the step relation plus at most one job for the
+    result — not a checkpoint and a count per doubling round."""
+    from rdf_converter_spark.graph import SparkGraph
+
+    rows = [("n%02d" % i, "p", "n%02d" % (i + 1)) for i in range(30)]
+    rows += [("n30", "p", "n00"), ("a", "q", "b")]
+    path = str(tmp_path / "graph")
+    spark.createDataFrame(rows, ["subj", "pred", "obj"]).write.parquet(path)
+    g = SparkGraph(spark.read.parquet(path))
+    sc = spark.sparkContext
+    sc.setJobGroup("paths-job-count", "p+ lowering and collect")
+    try:
+        got = g.query("SELECT ?x ?y WHERE { ?x <p>+ ?y }").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # a 31-node cycle bounded at paths of length <= 2^4
+    assert len(got) == 31 * 16
+    assert len(sc.statusTracker().getJobIdsForGroup("paths-job-count")) <= 2
