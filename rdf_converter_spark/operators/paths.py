@@ -14,13 +14,12 @@ variable. This module evaluates the path algebra relationally:
   converged (then the result is the exact unbounded ``+``), otherwise
   covers paths of length <= 2^max_rounds — the scale-honest bounded
   form, same contract as ``graph.py:khop_neighborhood``. Dispatched by
-  size: a step relation of at most ``_DRIVER_ROWS`` rows (the bound
-  ``isokit``'s driver path uses) is pulled in ONE bounded Arrow
-  collect and closed on the driver in Python sets, then shipped back
-  as one Arrow table — one Spark job instead of a checkpoint and a
-  count per round. A larger step relation, or a closure that grows
-  past the cap, runs the distributed doubling loop (per-round distinct
-  + localCheckpoint). A corpus-scale ``+`` over a 10^12-edge relation
+  size: a step relation of at most ``_DRIVER_ROWS`` rows is pulled in
+  ONE bounded Arrow collect and closed on the driver with Arrow hash
+  joins, then shipped back as one Arrow table — one Spark job instead
+  of a checkpoint and a count per round. A larger step relation, or a
+  closure that grows past the cap, runs the distributed doubling loop
+  (per-round distinct + localCheckpoint). A corpus-scale ``+`` over a 10^12-edge relation
   is a connected-components-shaped job; for hierarchies that are
   *schema-sized* use ``rdfs.transitive_closure``.
 - ``p*`` / ``p?`` zero-or-more / zero-or-one -> the ``+`` closure
@@ -47,17 +46,21 @@ metacharacters ``/ | ^ + * ? ! ( )``; precedence alt < seq < postfix.
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional, Set, Tuple
+from typing import List, Optional, Tuple
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _META = "<>()|/^+*?!"
 
-# Largest step relation (and closure) closed on the driver — the
-# collect bound isokit's driver-side path uses; beyond it the closure
-# runs as distributed doubling rounds.
+# Largest step relation (and closure) closed on the driver; beyond it
+# the closure runs as distributed doubling rounds. On a 4-core host a
+# one-round closure costs the same wall time either way at ~200k rows
+# (less CPU on the driver), and a deeper one favours the driver; a
+# round's self-join may reach 4x the cap (~32 bytes a row for short
+# IRIs in Arrow).
 _DRIVER_ROWS = 200_000
 
 
@@ -250,18 +253,22 @@ def _closure(step: DataFrame, max_rounds: int,
     (SQL equality never matches null).
 
     Size dispatch: ONE collect of at most ``_DRIVER_ROWS + 1`` step
-    rows through Arrow; when the step and every round's closure stay
-    within ``_DRIVER_ROWS`` rows, the rounds run on the driver and the
+    rows through Arrow; when the step and every round stay within the
+    cap (``_closure_local``), the rounds run on the driver and the
     result returns as one Arrow table (no further Spark job until the
     caller's own action). Otherwise the distributed loop below runs,
     with a ``distinct().localCheckpoint()`` and a ``count()`` per
-    round."""
+    round, from the collected rows when the step fit."""
     ks = list(keys)
+    spark = step.sparkSession
     table = step.limit(_DRIVER_ROWS + 1).toArrow()
     if table.num_rows <= _DRIVER_ROWS:
-        closed = _closure_local(table, max_rounds, len(ks))
+        closed = _closure_local(table, max_rounds, ks)
         if closed is not None:
-            return step.sparkSession.createDataFrame(closed, step.schema)
+            return spark.createDataFrame(closed, step.schema)
+        # the step fits but its closure does not: the distributed
+        # rounds start from the collected rows, not a recomputed step
+        step = spark.createDataFrame(table, step.schema)
     cur = step.distinct().localCheckpoint()
     n = cur.count()
     for _ in range(max_rounds):
@@ -282,50 +289,49 @@ def _closure(step: DataFrame, max_rounds: int,
 
 
 def _closure_local(table: pa.Table, max_rounds: int,
-                   nkeys: int) -> Optional[pa.Table]:
+                   keys: List[str]) -> Optional[pa.Table]:
     """The doubling rounds of ``_closure`` over a collected step
-    relation (columns: ``nkeys`` partition keys, subj, obj), one key
-    value at a time; None once the closure outgrows ``_DRIVER_ROWS``
-    rows. Rows with a null key are kept (deduplicated) but never
-    compose, and a null node never joins — as under SQL equality."""
-    groups: Dict[tuple, Set[Tuple[Any, Any]]] = {}
-    for row in zip(*(c.to_pylist() for c in table.columns)):
-        groups.setdefault(row[:nkeys], set()).add(row[nkeys:])
-    out: List[tuple] = []
-    for key, rel in groups.items():
-        if None not in key:
-            rel = _double(rel, max_rounds, _DRIVER_ROWS - len(out))
-            if rel is None:
-                return None
-        out.extend(key + edge for edge in rel)
-        if len(out) > _DRIVER_ROWS:
-            return None
-    cols = list(zip(*out)) or [()] * table.num_columns
-    return pa.table([pa.array(c, type=f.type)
-                     for c, f in zip(cols, table.schema)],
-                    schema=table.schema)
-
-
-def _double(rel: Set[Tuple[Any, Any]], max_rounds: int,
-            room: int) -> Optional[Set[Tuple[Any, Any]]]:
-    """Closure of one key's edge set by up to ``max_rounds`` doubling
-    rounds (rel := rel ∪ rel∘rel), stopping at the fixpoint; None as
-    soon as it holds more than ``room`` edges."""
+    relation (columns: ``keys``, subj, obj), as Arrow hash joins on
+    the driver; None as soon as a round's closure would hold more than
+    ``_DRIVER_ROWS`` rows, or its self-join, counted before it runs,
+    more than ``4 * _DRIVER_ROWS``. The join keys are the partition
+    keys plus the joined node, compared by equality: a null key or
+    node never composes (as under SQL equality), and a row with a
+    null key is only deduplicated."""
+    cols = keys + ["subj", "obj"]
+    rel = _distinct(table, cols)
     for _ in range(max_rounds):
-        succ: Dict[Any, List[Any]] = {}
-        for s, o in rel:
-            if s is not None:
-                succ.setdefault(s, []).append(o)
-        nxt = set(rel)
-        for s, m in rel:
-            if m is not None:
-                nxt.update((s, o) for o in succ.get(m, ()))
-                if len(nxt) > room:
-                    return None
-        if len(nxt) == len(rel):
-            return rel  # converged: exact unbounded closure
+        if _hop_rows(rel, keys) > 4 * _DRIVER_ROWS:
+            return None
+        hop = rel.join(rel.rename_columns(keys + ["_mid", "_obj"]),
+                       keys=keys + ["obj"], right_keys=keys + ["_mid"],
+                       join_type="inner", use_threads=False)
+        nxt = _distinct(pa.concat_tables(
+            [rel, hop.select(keys + ["subj", "_obj"]).rename_columns(cols)]),
+            cols)
+        if nxt.num_rows > _DRIVER_ROWS:
+            return None
+        if nxt.num_rows == rel.num_rows:
+            break  # converged: exact unbounded closure
         rel = nxt
-    return rel
+    return rel.select(cols).cast(table.schema)
+
+
+def _distinct(table: pa.Table, cols: List[str]) -> pa.Table:
+    return table.group_by(cols, use_threads=False).aggregate([])
+
+
+def _hop_rows(rel: pa.Table, keys: List[str]) -> int:
+    """Rows of the self-join ``rel ∘ rel`` before deduplication: the
+    sum, over every (keys, node), of the edges into it times the edges
+    out of it — two grouped counts and one join of the counts."""
+    ins = rel.group_by(keys + ["obj"], use_threads=False).aggregate(
+        [([], "count_all")])
+    outs = rel.group_by(keys + ["subj"], use_threads=False).aggregate(
+        [([], "count_all")]).rename_columns(keys + ["node", "n_out"])
+    both = ins.join(outs, keys=keys + ["obj"], right_keys=keys + ["node"],
+                    join_type="inner", use_threads=False)
+    return pc.sum(pc.multiply(both["count_all"], both["n_out"])).as_py() or 0
 
 
 def _identity(triples: DataFrame, keys: tuple = ()) -> DataFrame:

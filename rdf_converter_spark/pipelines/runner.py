@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.emit import dedup_triples
-from ..plans.checkpoint import StageRunner, listing_sha1, package_sha1
+from ..plans.checkpoint import (StageRunner, listing_sha1, mappings_sha1,
+                                package_sha1)
 from ..sources.route import route
 from ..sources.web_pages import read_web_pages
 from . import flow as flp
@@ -167,14 +168,16 @@ def run_pipeline(
 
     With ``resume`` a completed stage of ``work_dir`` is read back
     only when the run fingerprint — the input listing, the
-    ``route_partitions`` setting and the package sources — equals the
-    one in ``work_dir/_run.json``; otherwise every stage is recomputed
-    and ``_run.json`` records why.
+    ``route_partitions`` setting, the package sources and the
+    ``MEMAD_MAPPINGS_DIR`` vocabularies — equals the one in
+    ``work_dir/_run.json``; otherwise every stage is recomputed and
+    ``_run.json`` records why.
     """
     sr = StageRunner(spark, work_dir, resume=resume, fingerprint={
         "inputs": listing_sha1(spark, web_pages_path),
         "route_partitions": route_partitions,
         "sources": package_sha1(),
+        "mappings": mappings_sha1(),
     })
 
     def build_routed() -> DataFrame:

@@ -9,10 +9,11 @@ resumable handles, per BASELINE north_rule.
 
 A completed stage is resumed only under the run fingerprint it was
 written under. ``<work>/_run.json`` holds the fingerprint (for
-``run_pipeline``: the input listing, the routing setting and the
-package sources), the stages completed under it, and why the stages
-were recomputed when they were: a missing or different fingerprint
-recomputes every stage instead of returning a stale table.
+``run_pipeline``: the input listing, the routing setting, the package
+sources and the override vocabularies), the stages completed under it,
+and why the stages were recomputed when they were: a missing or
+different fingerprint recomputes every stage instead of returning a
+stale table.
 
 Each completed stage appends a metrics row (rows, partitions, files,
 seconds) and per-file lineage rows (stage, write-task id, file, row
@@ -24,18 +25,19 @@ no footer reads anywhere, on the driver or on the executors.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import re
 import time
+from importlib import resources
 from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _TASK_ID = re.compile(r"part-(\d+)")
-_PACKAGE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _local(uri: str) -> str:
@@ -48,31 +50,72 @@ def _local(uri: str) -> str:
 
 
 def listing_sha1(spark: SparkSession, path: str) -> str:
-    """SHA-1 of the sorted (path, length, modification time) of every
-    file under ``path``, listed through the Hadoop ``FileSystem`` API
-    (so any filesystem Spark reads from)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(hpath, True)
-    files = []
-    while it.hasNext():
-        st = it.next()
-        files.append((st.getPath().toString(), st.getLen(),
-                      st.getModificationTime()))
-    return hashlib.sha1(json.dumps(sorted(files)).encode()).hexdigest()
+    """Digest of the (path, length, modification time) of every data
+    file ``path`` names — a directory, a file or a glob, as
+    ``spark.read`` accepts. Spark's file index lists them through the
+    Hadoop ``FileSystem`` API (in parallel for large listings) and
+    ``binaryFile`` reads each status without the content; one JVM-side
+    aggregate folds them into an order-free (count, hash sums) row, so
+    the driver receives one row whatever the number of files."""
+    files = (spark.read.format("binaryFile")
+             .option("recursiveFileLookup", "true").load(path))
+    key = F.concat_ws("\t", "path", "length",
+                      F.unix_millis("modificationTime"))
+    row = files.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(key).cast("decimal(20,0)")),
+        F.sum(F.hash(key).cast("bigint")),
+    ).first()
+    return hashlib.sha1(json.dumps([str(v) for v in row]).encode()
+                        ).hexdigest()
+
+
+def _tree_sha1(root, suffixes: tuple) -> Optional[str]:
+    """SHA-1 of the files under ``root`` (an ``importlib.resources``
+    traversable, so also a directory inside a zip) whose names end in
+    ``suffixes``, by relative path and content; None when there is no
+    such file."""
+    h = hashlib.sha1()
+    found = False
+    todo = [("", root)]
+    while todo:
+        rel, node = todo.pop()
+        for child in sorted(node.iterdir(), key=lambda c: c.name,
+                            reverse=True):
+            name = rel + "/" + child.name
+            if child.is_dir():
+                todo.append((name, child))
+            elif child.name.endswith(suffixes):
+                found = True
+                h.update(name.encode() + b"\0" + child.read_bytes())
+    return h.hexdigest() if found else None
 
 
 def package_sha1() -> str:
     """SHA-1 of the package's ``.py`` and ``.json`` sources (code and
-    mapping tables), by relative path."""
+    vendored mapping tables), read through ``importlib.resources`` so
+    it also hashes a package imported from a ``--py-files`` zip.
+    Raises when no source is found rather than return a hash of
+    nothing that every later run would match."""
+    digest = _tree_sha1(resources.files(__package__.split(".")[0]),
+                        (".py", ".json"))
+    if digest is None:
+        raise RuntimeError("no package sources found to fingerprint")
+    return digest
+
+
+def mappings_sha1() -> Optional[str]:
+    """SHA-1 of the override vocabularies ``mappings.load`` reads from
+    ``MEMAD_MAPPINGS_DIR`` (the ``*.json`` files directly in it); None
+    when the variable is unset, so the vendored tables — hashed with
+    the package sources — are the ones in use."""
+    override = os.environ.get("MEMAD_MAPPINGS_DIR")
+    if not override:
+        return None
     h = hashlib.sha1()
-    for d, _, names in sorted(os.walk(_PACKAGE)):
-        for n in sorted(names):
-            if n.endswith((".py", ".json")):
-                f = os.path.join(d, n)
-                h.update(os.path.relpath(f, _PACKAGE).encode() + b"\0")
-                with open(f, "rb") as fh:
-                    h.update(fh.read())
+    for f in sorted(glob.glob(os.path.join(override, "*.json"))):
+        with open(f, "rb") as fh:
+            h.update(os.path.basename(f).encode() + b"\0" + fh.read())
     return h.hexdigest()
 
 

@@ -211,11 +211,13 @@ def _expected(rows, op, max_rounds, keyed):
 
 
 def test_driver_and_distributed_closures_agree(spark):
-    """The driver closure (step within ``_DRIVER_ROWS``) and the
-    distributed doubling loop (forced by a cap of 0) return the same
-    rows and columns for ``+``, ``*`` and ``?``, unkeyed or keyed by a
-    graph column that may be null, bounded at paths of length
-    <= 2^max_rounds; both equal a breadth-first reference."""
+    """The driver closure (step within ``_DRIVER_ROWS``), the
+    distributed doubling loop (forced by a cap of 0) and the hand-over
+    between them (a cap the step fits in but a growing closure does
+    not) return the same rows and columns for ``+``, ``*`` and ``?``,
+    unkeyed or keyed by a graph column that may be null, bounded at
+    paths of length <= 2^max_rounds; all equal a breadth-first
+    reference."""
     from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
@@ -255,24 +257,14 @@ def test_driver_and_distributed_closures_agree(spark):
             return out.dtypes, sorted(map(tuple, out.collect()), key=repr)
 
         driver = run()
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(paths, "_DRIVER_ROWS", 0)
-            distributed = run()
-        assert driver == distributed
+        for cap in (0, sum(1 for r in rows if r[2] == "p")):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(paths, "_DRIVER_ROWS", cap)
+                assert run() == driver, cap
         assert set(driver[1]) == _expected(rows, op, max_rounds, keyed)
         assert len(set(driver[1])) == len(driver[1])
 
     check()
-
-
-def test_empty_step_closes_to_an_empty_frame_with_its_schema(spark):
-    from rdf_converter_spark.operators.paths import _closure
-
-    step = spark.createDataFrame(
-        [], "graph string, subj string, obj string")
-    out = _closure(step, 3, ("graph",))
-    assert out.schema == step.schema
-    assert out.collect() == []
 
 
 def test_plus_query_launches_at_most_two_jobs(spark, tmp_path):

@@ -269,3 +269,77 @@ def test_resume_on_new_inputs_recomputes_every_stage(spark, tmp_path_factory):
     assert all(stages().values()) and len(stages()) == 8
     run = json.load(open(os.path.join(work, "_run.json")))
     assert run["recomputed"] is None
+
+
+def test_resume_after_an_override_mapping_change_recomputes_every_stage(
+        spark, tmp_path, monkeypatch):
+    """The vocabularies ``MEMAD_MAPPINGS_DIR`` overrides are part of
+    the run fingerprint: an unchanged override resumes every stage, an
+    edited one recomputes them all and ``_run.json`` says why."""
+    from fixtures.generator import build_corpus
+    from rdf_converter_spark import mappings
+    from rdf_converter_spark.pipelines.runner import run_pipeline
+
+    build_corpus(str(tmp_path / "corpus"), n_ld=4, n_pa=4, n_yle=2,
+                 n_asr=1, write_reference_layout=False)
+    pages = str(tmp_path / "corpus" / "web_pages")
+    override = tmp_path / "mappings"
+    override.mkdir()
+    table = dict(mappings.load("yle_channel2code"))
+    (override / "yle_channel2code.json").write_text(json.dumps(table))
+    monkeypatch.setenv("MEMAD_MAPPINGS_DIR", str(override))
+    work = str(tmp_path / "work")
+
+    def run():
+        run_pipeline(spark, pages, work)
+        metrics = json.load(open(os.path.join(work, "_metrics.json")))
+        run = json.load(open(os.path.join(work, "_run.json")))
+        return [m["resumed"] for m in metrics], run["recomputed"]
+
+    try:
+        assert run() == ([False] * 8, "no _run.json in the work dir")
+        assert run() == ([True] * 8, None)
+        table["unused-test-channel"] = "x"
+        (override / "yle_channel2code.json").write_text(json.dumps(table))
+        assert run() == ([False] * 8, "fingerprint changed: mappings")
+    finally:
+        mappings.load.cache_clear()
+
+
+def test_input_listing_digest_follows_the_files(spark, tmp_path):
+    """``listing_sha1`` accepts a directory or a glob naming the same
+    files with the same digest, and changes when a file changes."""
+    from rdf_converter_spark.plans.checkpoint import listing_sha1
+
+    d = tmp_path / "in"
+    spark.range(10).repartition(2).write.parquet(str(d))
+    first = listing_sha1(spark, str(d))
+    assert listing_sha1(spark, str(d / "*.parquet")) == first
+    part = sorted(d.glob("*.parquet"))[0]
+    os.utime(part, ns=(0, part.stat().st_mtime_ns + 10**9))
+    assert listing_sha1(spark, str(d)) != first
+
+
+def test_package_digest_is_the_same_from_a_py_files_zip(tmp_path):
+    """``package_sha1`` hashes the package it was imported from, also
+    from the ``--py-files`` zip ``scripts/package.py`` builds — not a
+    constant hash of nothing."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "scripts"))
+    try:
+        import package
+    finally:
+        sys.path.pop(0)
+    from rdf_converter_spark.plans.checkpoint import package_sha1
+
+    zipped = package.build(str(tmp_path / "rdf_converter_spark.zip"))
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "from rdf_converter_spark.plans import checkpoint as c; "
+            "assert '.zip' in c.__file__, c.__file__; "
+            "print(c.package_sha1())")
+    out = subprocess.run([sys.executable, "-c", code, zipped], cwd=tmp_path,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == package_sha1()
