@@ -299,7 +299,9 @@ def _closure_local(table: pa.Table, max_rounds: int,
     node never composes (as under SQL equality), and a row with a
     null key is only deduplicated."""
     cols = keys + ["subj", "obj"]
-    rel = _distinct(table, cols)
+    # the join output is nullable whatever its inputs; so is every round
+    rel = _distinct(table.cast(pa.schema(
+        [f.with_nullable(True) for f in table.schema])), cols)
     for _ in range(max_rounds):
         if _hop_rows(rel, keys) > 4 * _DRIVER_ROWS:
             return None

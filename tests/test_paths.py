@@ -159,6 +159,21 @@ def test_bounded_plus_on_long_chain(spark):
         "n01", "n02", "n03", "n04"]
 
 
+def test_plus_over_non_nullable_columns(spark):
+    """A step relation whose columns are declared NOT NULL closes like
+    any other: the driver rounds' joins yield nullable columns, and the
+    result keeps the step's schema."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField(c, T.StringType(), False)
+                           for c in ("subj", "pred", "obj")])
+    t = spark.createDataFrame(
+        [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "a")], schema)
+    out = path_match(t, "?x", "p+", "?y")
+    assert [f.nullable for f in out.schema] == [False, False]
+    assert len(_pairs(out)) == 9
+
+
 def test_no_cartesian_plan(triples):
     out = path_match(triples, "?x", "knows/name", "?n")
     plan = out._jdf.queryExecution().executedPlan().toString()
