@@ -19,9 +19,9 @@ variable. This module evaluates the path algebra relationally:
   joins, then shipped back as one Arrow table — one Spark job instead
   of a checkpoint and a count per round. A larger step relation, or a
   closure that grows past the cap, runs the distributed doubling loop
-  (per-round distinct + localCheckpoint). A corpus-scale ``+`` over a 10^12-edge relation
-  is a connected-components-shaped job; for hierarchies that are
-  *schema-sized* use ``rdfs.transitive_closure``.
+  (per-round distinct + localCheckpoint). A corpus-scale ``+`` over a
+  10^12-edge relation is a connected-components-shaped job; for
+  hierarchies that are *schema-sized* use ``rdfs.transitive_closure``.
 - ``p*`` / ``p?`` zero-or-more / zero-or-one -> the ``+`` closure
   (resp. the step itself) unioned with the identity relation over the
   node universe of the INPUT triple table (SPARQL's zero-length path
@@ -299,7 +299,8 @@ def _closure_local(table: pa.Table, max_rounds: int,
     node never composes (as under SQL equality), and a row with a
     null key is only deduplicated."""
     cols = keys + ["subj", "obj"]
-    # the join output is nullable whatever its inputs; so is every round
+    # join outputs are nullable whatever their inputs, so every round
+    # works on nullable columns and the result is cast back at the end
     rel = _distinct(table.cast(pa.schema(
         [f.with_nullable(True) for f in table.schema])), cols)
     for _ in range(max_rounds):
