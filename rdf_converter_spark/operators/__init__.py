@@ -1,2 +1,4 @@
 """Relational operators: triple emission, dedup, canonicalization,
-and the large-scale training-data toolkit."""
+entity linking, exports, the SPARQL query surface over the KG, and
+what is left of the training-data toolkit (curation, media decoding,
+event joins, link-graph analytics)."""

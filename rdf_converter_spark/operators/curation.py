@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 def _hash_key(col, salt: str):
     """int(md5(key|salt)[:8], 16) — the engine-portable uniform hash
-    used across the dedup/minhash family."""
+    the DuckDB oracles compute the same way."""
     return F.conv(
         F.substring(
             F.md5(F.concat(col.cast("string"), F.lit("|" + salt))), 1, 8

@@ -2,8 +2,8 @@
 """Event-stream derivations over the ``events`` table
 (event_id, ts, user_id, event_type, value, props).
 
-Complements the streaming twins in ``streaming/windows.py`` with the
-batch window-function surface a clickstream/telemetry pipeline needs.
+The batch window-function surface a clickstream/telemetry pipeline
+needs.
 Everything is a single hash exchange on the partition key plus an
 in-partition sort — the same cost envelope as the as-of join
 (operators/asof.py), and the shape that scales: per-key state during

@@ -8,7 +8,7 @@ Once blank nodes enter the picture (the r6 Turtle 1.1 reader, any
 external RDF), set equality is the wrong test: blank node labels are
 arbitrary, so two serializations of the SAME graph differ textually.
 rdflib ships ``compare.to_canonical_graph`` for this; rdflib is not
-installable in this environment (BENCH.md install log), so this module
+installable in this environment, so this module
 provides the engine's own DataFrame-native equivalent.
 
 Algorithm: iterative hash color refinement (1-dimensional

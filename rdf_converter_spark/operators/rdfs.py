@@ -68,9 +68,8 @@ def transitive_closure(
     Input is ontology-/chain-sized by contract (see module
     docstring); corpus-scale dense graphs are a connected-components
     job (operators/cc.py). A MULTI-predicate closure that also needs
-    inverse/symmetric interaction lives in
-    ``operators/owl.py:owl_entail_lite`` (its fixpoint interleaves
-    the rules per round, which this single-relation loop cannot)."""
+    inverse/symmetric interaction needs a fixpoint that interleaves
+    the rules per round, which this single-relation loop cannot do."""
     cols = [child, parent]
     acc = edges.select(*cols).distinct().localCheckpoint()
     delta = acc

@@ -122,7 +122,9 @@ def build_triples_extraction(spark: SparkSession, routed: DataFrame) -> DataFram
     document kinds, skipping the lineage-table side branches (segment
     relative times, flow links, subtitles) whose inputs are orders of
     magnitude smaller than the corpus. This is the job whose throughput
-    must scale with executors at 10^12 docs; used by the scaling bench.
+    must scale with executors at 10^12 docs; used by the streaming
+    upsert (streaming/incremental.py) and by
+    perfbench/repro_upsert_success.py.
     PA rows get null relative-time columns (their start/end triples are
     gated) — programs, the overwhelming majority, are unaffected.
 

@@ -11,7 +11,7 @@ page, so this module does two jobs:
    rows (the engine-wide term schema);
 2. ``jsonld_from_html`` — extract every ld+json island from an HTML
    column and parse it, one ``mapInPandas`` Arrow pass over the
-   pages table (pairs with ``operators/htmlkit.py``'s text path).
+   pages table (pairs with ``sources/extract.py``'s text path).
 
 Supported JSON-LD 1.1 subset (processing-model corners are refused
 loudly, never guessed):

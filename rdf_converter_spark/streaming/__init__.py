@@ -1,2 +1,2 @@
-"""Structured Streaming: incremental triple extraction, watermarked
-windows, stateful sessionization."""
+"""Structured Streaming: incremental triple extraction into a
+maintained triple store."""

@@ -9,6 +9,11 @@ batch) keeps one code path for both modes; the output table is
 append-only and the global set semantics are restored by the periodic
 batch dedup/canonicalization (or an Iceberg MERGE in a catalog
 deployment). Checkpointing makes the stream exactly-once at the sink.
+
+The volume path is narrower than a ``job.py`` build: it emits the
+program, PA and Yle triples, but no segment-time, flow-link or
+subtitle triples (``build_triples_extraction`` skips the lineage-table
+branches those need), so the maintained store lacks them.
 """
 
 from __future__ import annotations

@@ -114,28 +114,6 @@ def test_doc_chunks_cover_and_clamp(spark):
     assert [r["chunk"] for r in by_doc[3]] == ["a b c"]
 
 
-def test_anchor_texts_dominant_tiebreak(spark):
-    from rdf_converter_spark.operators.htmlkit import anchor_texts
-
-    pages = spark.createDataFrame(
-        [("u1", '<a href="t">Alpha</a> <a href="t">Beta</a>'),
-         ("u2", '<a href="t">Beta</a> <a href="t">Alpha</a>'),
-         ("u3", '<a href="t">Alpha</a> <a href="x">Only</a>')],
-        "url string, html_text string",
-    )
-    out = {r["href"]: r for r in anchor_texts(pages).collect()}
-    t = out["t"]
-    assert (t["n_links"], t["n_sources"], t["n_anchors"]) == (5, 3, 2)
-    assert t["top_anchor"] == "Alpha"  # 3 Alpha vs 2 Beta
-    assert out["x"]["top_anchor"] == "Only"
-    # exact tie -> lexicographically smallest anchor
-    tied = spark.createDataFrame(
-        [("u1", '<a href="t">b</a> <a href="t">a</a>')],
-        "url string, html_text string",
-    )
-    assert anchor_texts(tied).collect()[0]["top_anchor"] == "a"
-
-
 def test_label_propagation_two_cliques(spark):
     from rdf_converter_spark.operators.graph import label_propagation
 

@@ -1,11 +1,10 @@
 # -*- coding: utf-8 -*-
-"""Batch event windows (operators/events.py), OLAP rollup and BM25
-(operators/textstats.py) on hand-computable inputs."""
+"""Batch event windows and interval joins (operators/events.py) on
+hand-computable inputs."""
 
 from datetime import datetime
 
 from rdf_converter_spark.operators.events import event_deltas
-from rdf_converter_spark.operators.textstats import bm25_score, corpus_rollup
 
 
 def _ts(s):
@@ -28,59 +27,6 @@ def test_event_deltas(spark):
     assert got[2]["value_delta"] == 3.5 and got[2]["gap_seconds"] == 30
     assert got[3]["value_delta"] == -0.5 and got[3]["gap_seconds"] == 90
     assert got[4]["value_delta"] is None  # other user's first event
-
-
-def test_corpus_rollup_levels(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "x", "en", "web", 10),
-            (2, "x", "en", "book", 20),
-            (3, "x", "fr", "web", 30),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    rows = corpus_rollup(docs).collect()
-    by_key = {(r["lang"], r["source"]): r for r in rows}
-    assert by_key[("en", "web")]["n_docs"] == 1
-    assert by_key[("en", None)]["total_chars"] == 30  # lang subtotal
-    assert by_key[(None, None)]["total_chars"] == 60  # grand total
-    assert by_key[(None, None)]["gid"] == 3 and by_key[("en", None)]["gid"] == 1
-    assert len(rows) == 3 + 2 + 1
-
-
-def test_bm25_orders_by_saturated_tf_and_rarity(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "data data data other words here"),  # common term, high tf
-            (2, "merge appears once in this doc"),  # rare term
-            (3, "data once plus filler filler filler"),
-            (4, "no query words at all right here"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["score"] for r in
-           bm25_score(docs, ["data", "merge"]).collect()}
-    assert 4 not in got  # no match -> no row
-    assert got[2] > got[3]  # rare term beats one hit of a common one
-    assert got[1] > got[3]  # higher tf beats lower tf, same term
-    assert all(v > 0 for v in got.values())
-
-
-def test_hll_estimate_within_expected_error(spark):
-    """m=64 registers -> ~13% standard error; assert a generous 3-
-    sigma bound on a synthetic high-cardinality corpus, and that the
-    exact twin is exact."""
-    from rdf_converter_spark.operators.textstats import hll_distinct
-
-    docs = spark.createDataFrame(
-        [(i, " ".join("w%d" % (i * 40 + j) for j in range(40)), "xx")
-         for i in range(100)],
-        "doc_id long, text string, lang string",
-    )
-    r = hll_distinct(docs).collect()[0]
-    # 100 docs x 38 unique 3-shingles, zero overlap across docs
-    assert r["n_exact"] == 3800
-    assert abs(r["n_est"] - r["n_exact"]) / r["n_exact"] < 0.4
 
 
 def test_interval_point_join_matches_brute_force(spark):

@@ -1,9 +1,8 @@
 # -*- coding: utf-8 -*-
 """Graph analytics (operators/graph.py) + incremental triple upsert
-(operators/merge.py) + Unicode normalization (textstats.normalize_text)
-on hand-computable inputs. The sf0.01 DuckDB oracles cover the same
-operators end-to-end; these pin the semantics on graphs small enough
-to verify by eye."""
+(operators/merge.py) on hand-computable inputs. The sf0.01 DuckDB
+oracles cover the same operators end-to-end; these pin the semantics
+on graphs small enough to verify by eye."""
 
 from pyspark.sql import functions as F
 
@@ -135,119 +134,6 @@ def test_upsert_is_idempotent(spark):
     once = upsert_triples(base, delta)
     twice = upsert_triples(once, delta)
     assert sorted(once.collect()) == sorted(twice.collect())
-
-
-def test_normalize_text_composes_and_casefolds(spark):
-    from rdf_converter_spark.operators.textstats import normalize_text
-
-    docs = spark.createDataFrame(
-        [(1, "Cafe\u0301 TIME"), (2, "plain")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in normalize_text(docs).collect()}
-    assert got[1]["norm_text"] == "caf\u00e9 time"
-    # decomposed e + U+0301 (2 codepoints) composes to 1
-    assert got[1]["n_cp_raw"] == 10 and got[1]["n_cp_norm"] == 9
-    assert got[2]["norm_text"] == "plain"
-    assert got[2]["n_cp_raw"] == got[2]["n_cp_norm"] == 5
-
-
-def test_line_dedup_drops_repeated_chunks(spark):
-    from rdf_converter_spark.operators.dedup import line_dedup
-
-    boiler = "one two three four five"  # the repeated "line"
-    docs = spark.createDataFrame(
-        [
-            (1, boiler + " aa bb cc dd ee"),
-            (2, boiler + " ff gg hh ii jj"),
-            (3, "kk ll mm nn oo pp qq rr ss tt"),
-            (4, "short text"),  # < width words -> one short tail chunk
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in line_dedup(docs, width=5).collect()}
-    # boilerplate chunk appears in docs 1+2 -> dropped from BOTH
-    assert got[1]["new_text"] == "aa bb cc dd ee"
-    assert got[2]["new_text"] == "ff gg hh ii jj"
-    assert (got[1]["n_chunks"], got[1]["n_kept"]) == (2, 1)
-    # unique doc keeps everything, in original order
-    assert got[3]["new_text"] == "kk ll mm nn oo pp qq rr ss tt"
-    assert (got[3]["n_chunks"], got[3]["n_kept"]) == (2, 2)
-    # sub-width doc keeps its whole text as one short chunk — the
-    # dedup must never drop a document's own tail words
-    assert (got[4]["n_chunks"], got[4]["n_kept"], got[4]["new_text"]) == (
-        1, 1, "short text",
-    )
-
-
-def test_line_dedup_keeps_trailing_words(spark):
-    from rdf_converter_spark.operators.dedup import line_dedup
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e tail words here"),  # 8 words: 5 + 3-word tail
-         (2, "")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in line_dedup(docs, width=5).collect()}
-    assert got[1]["new_text"] == "a b c d e tail words here"
-    assert (got[1]["n_chunks"], got[1]["n_kept"]) == (2, 2)
-    assert (got[2]["n_chunks"], got[2]["n_kept"], got[2]["new_text"]) == (
-        0, 0, "",
-    )
-
-
-def test_span_dedup_overlapping_cross_doc(spark):
-    from rdf_converter_spark.operators.dedup import span_dedup
-
-    shared = "w1 w2 w3 w4"  # one full window shared by docs 1+2
-    docs = spark.createDataFrame(
-        [
-            (1, shared + " aa bb"),   # 6 words -> 3 spans, 1 duplicated
-            (2, "zz " + shared),      # 5 words -> 2 spans, 1 duplicated
-            (3, "p q r s t u"),       # unique -> 3 spans, 0 duplicated
-            (4, "too short"),         # < window -> 0 spans
-            (5, ""),                  # empty split guard -> 0 spans
-            (6, "x y x y x y x y"),   # self-repeating only -> NOT dup
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in span_dedup(docs, window=4).collect()}
-    assert (got[1]["n_spans"], got[1]["dup_spans"]) == (3, 1)
-    assert (got[2]["n_spans"], got[2]["dup_spans"]) == (2, 1)
-    assert (got[3]["n_spans"], got[3]["dup_spans"]) == (3, 0)
-    assert (got[4]["n_spans"], got[4]["dup_spans"]) == (0, 0)
-    assert (got[5]["n_spans"], got[5]["dup_spans"]) == (0, 0)
-    # within-doc repetition alone never counts as corpus duplication
-    assert (got[6]["n_spans"], got[6]["dup_spans"]) == (5, 0)
-    assert got[1]["dup_ratio"] == 1 / 3
-    assert got[5]["dup_ratio"] == 0.0
-
-
-def test_span_dedup_counts_every_overlapping_instance(spark):
-    from rdf_converter_spark.operators.dedup import span_dedup
-
-    # doc 1 contains the shared window TWICE; both instances count in
-    # dup_spans (instance-level, like the paper's span removal)
-    docs = spark.createDataFrame(
-        [(1, "a b c d x a b c d"), (2, "a b c d")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in span_dedup(docs, window=4).collect()}
-    assert (got[1]["n_spans"], got[1]["dup_spans"]) == (6, 2)
-    assert (got[2]["n_spans"], got[2]["dup_spans"]) == (1, 1)
-
-
-def test_length_percentiles_exact(spark):
-    from rdf_converter_spark.operators.textstats import length_percentiles
-
-    docs = spark.createDataFrame(
-        [(i, "x", "en", "s", n) for i, n in enumerate([10, 20, 30, 40])],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    r = {x["lang"]: x for x in length_percentiles(docs).collect()}["en"]
-    # linear interpolation over [10,20,30,40]
-    assert (r["p25"], r["p50"], r["p75"]) == (17.5, 25.0, 32.5)
-    assert (r["min_chars"], r["max_chars"], r["n_docs"]) == (10, 40, 4)
 
 
 def test_khop_neighborhood_min_hops(spark):

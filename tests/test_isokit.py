@@ -4,7 +4,7 @@
 The reference compares graphs by exact triple-set equality because its
 converters emit ground terms only; isokit supplies the
 ``rdflib.compare.isomorphic`` equivalent (rdflib itself is not
-installable here — BENCH.md install log) for graphs that DO carry
+installable here) for graphs that DO carry
 blank nodes, e.g. anything read back through the full Turtle 1.1
 parser. Covers: label-invariance, soundness (non-isomorphic graphs
 rejected even when 1-WL alone cannot tell them apart), literal/bnode

@@ -171,211 +171,3 @@ def test_incremental_store_never_exchanged(spark):
     # exchange may appear between the store scan and the union
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
-
-
-# --- OWL-lite property entailment (operators/owl.py) ------------------
-
-OWL = "http://www.w3.org/2002/07/owl#"
-RDF_T = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-
-
-def _owl(spark, rows):
-    return spark.createDataFrame(
-        rows, "subj string, pred string, obj string, obj_is_uri boolean"
-    )
-
-
-def _triples_set(df):
-    return {(r.subj, r.pred, r.obj) for r in df.collect()}
-
-
-def test_owl_inverse_both_directions(spark):
-    from rdf_converter_spark.operators.owl import owl_entail_lite
-
-    t = _owl(spark, [
-        ("p", OWL + "inverseOf", "q", True),
-        ("a", "p", "b", True),
-        ("c", "q", "d", True),
-        ("a", "p", "literal", False),  # literals never invert
-    ])
-    got = _triples_set(owl_entail_lite(t))
-    assert ("b", "q", "a") in got and ("d", "p", "c") in got
-    assert ("literal", "q", "a") not in got
-    assert ("a", "p", "b") in got  # input preserved
-
-
-def test_owl_symmetric(spark):
-    from rdf_converter_spark.operators.owl import owl_entail_lite
-
-    t = _owl(spark, [
-        ("knows", RDF_T, OWL + "SymmetricProperty", True),
-        ("a", "knows", "b", True),
-        ("a", "likes", "b", True),
-    ])
-    got = _triples_set(owl_entail_lite(t))
-    assert ("b", "knows", "a") in got
-    assert ("b", "likes", "a") not in got
-
-
-def test_owl_transitive_chain_and_symmetric_interplay(spark):
-    from rdf_converter_spark.operators.owl import owl_entail_lite
-
-    t = _owl(spark, [
-        ("part", RDF_T, OWL + "TransitiveProperty", True),
-        ("part", RDF_T, OWL + "SymmetricProperty", True),
-        ("a", "part", "b", True),
-        ("b", "part", "c", True),
-    ])
-    got = _triples_set(owl_entail_lite(t))
-    # chain closure
-    assert ("a", "part", "c") in got
-    # symmetric back-edges participate in the closure: full clique
-    # incl. self-loops on {a, b, c}
-    for x in "abc":
-        for y in "abc":
-            assert (x, "part", y) in got, (x, y)
-
-
-def test_owl_inverse_symmetric_interaction(spark):
-    """ADVICE r4: 'p inverseOf q' + 'q a SymmetricProperty' — the
-    symmetric rule must fire on the inverse-DERIVED q-edge (and its
-    inverse back through p), not just on asserted triples."""
-    from rdf_converter_spark.operators.owl import owl_entail_lite
-
-    t = _owl(spark, [
-        ("p", OWL + "inverseOf", "q", True),
-        ("q", RDF_T, OWL + "SymmetricProperty", True),
-        ("a", "p", "b", True),
-    ])
-    got = _triples_set(owl_entail_lite(t))
-    assert ("b", "q", "a") in got      # inverse of the asserted edge
-    assert ("a", "q", "b") in got      # symmetric twin of the DERIVED edge
-    assert ("b", "p", "a") in got      # inverse of that twin
-    assert ("a", "p", "b") in got
-
-
-def test_owl_transitive_inverse_interaction(spark):
-    """Transitive-closure outputs of p must produce inverse q-edges."""
-    from rdf_converter_spark.operators.owl import owl_entail_lite
-
-    t = _owl(spark, [
-        ("p", RDF_T, OWL + "TransitiveProperty", True),
-        ("p", OWL + "inverseOf", "q", True),
-        ("a", "p", "b", True),
-        ("b", "p", "c", True),
-    ])
-    got = _triples_set(owl_entail_lite(t))
-    assert ("a", "p", "c") in got      # chain closure
-    assert ("c", "q", "a") in got      # inverse of the CLOSURE edge
-    assert ("c", "q", "b") in got and ("b", "q", "a") in got
-
-
-def test_owl_no_axioms_is_identity(spark):
-    from rdf_converter_spark.operators.owl import owl_entail_lite
-
-    t = _owl(spark, [
-        ("a", "p", "b", True),
-        ("a", "p", "lit", False),
-        ("a", "p", "b", True),  # dup collapses
-    ])
-    out = owl_entail_lite(t)
-    assert _triples_set(out) == {("a", "p", "b"), ("a", "p", "lit")}
-    assert out.count() == 2
-
-
-def test_owl_ifp_key_sameas(spark):
-    from rdf_converter_spark.operators.owl import (
-        OWL_SAMEAS, owl_key_sameas)
-
-    t = _owl(spark, [
-        ("isbn", RDF_T, OWL + "InverseFunctionalProperty", True),
-        ("b1", "isbn", "978-3-16", False),
-        ("b2", "isbn", "978-3-16", False),
-        ("b3", "isbn", "978-3-16", False),
-        ("b4", "isbn", "978-0-00", False),   # singleton key: no link
-        ("x1", "title", "978-3-16", False),  # non-key predicate
-    ])
-    got = _triples_set(owl_key_sameas(t))
-    # star form: every member links to the group minimum, linear
-    assert got == {("b2", OWL_SAMEAS, "b1"), ("b3", OWL_SAMEAS, "b1")}
-
-
-def test_owl_fp_object_sameas_uri_only(spark):
-    from rdf_converter_spark.operators.owl import (
-        OWL_SAMEAS, owl_key_sameas)
-
-    t = _owl(spark, [
-        ("mother", RDF_T, OWL + "FunctionalProperty", True),
-        ("kid", "mother", "alice", True),
-        ("kid", "mother", "alicia", True),
-        ("kid2", "mother", "beth", True),       # single value: no link
-        ("kid", "nick", "a", False),
-        ("kid", "nick", "b", False),            # non-key predicate
-        ("kid3", "mother", "lit1", False),      # literal conflict:
-        ("kid3", "mother", "lit2", False),      # validation, not sameAs
-    ])
-    got = _triples_set(owl_key_sameas(t))
-    assert got == {("alicia", OWL_SAMEAS, "alice")}
-
-
-def test_owl_key_sameas_full_term_identity(spark):
-    from rdf_converter_spark.operators.owl import owl_key_sameas
-
-    rows = [
-        ("code", RDF_T, OWL + "InverseFunctionalProperty", True,
-         None, None),
-        ("a", "code", "5", False, None,
-         "http://www.w3.org/2001/XMLSchema#integer"),
-        ("b", "code", "5", False, "en", None),  # "5"@en != "5"^^int
-    ]
-    t = spark.createDataFrame(
-        rows, "subj string, pred string, obj string, obj_is_uri "
-              "boolean, obj_lang string, obj_datatype string")
-    assert owl_key_sameas(t).count() == 0
-
-
-def test_owl_key_sameas_no_axioms_empty(spark):
-    from rdf_converter_spark.operators.owl import owl_key_sameas
-
-    t = _owl(spark, [("a", "p", "b", True)])
-    out = owl_key_sameas(t)
-    assert out.count() == 0
-    assert out.columns == t.columns
-
-
-def test_owl_key_sameas_feeds_smush(spark):
-    from rdf_converter_spark.operators.owl import (
-        owl_key_sameas, sameas_smush)
-
-    t = _owl(spark, [
-        ("mail", RDF_T, OWL + "InverseFunctionalProperty", True),
-        ("p1", "mail", "x@y", False),
-        ("p2", "mail", "x@y", False),
-        ("p1", "name", "Pat", False),
-        ("p2", "age", "44", False),
-    ])
-    merged = sameas_smush(t.unionByName(owl_key_sameas(t)))
-    got = _triples_set(merged)
-    assert ("p1", "name", "Pat") in got
-    assert ("p1", "age", "44") in got      # p2's fact moved to p1
-    assert not any(s == "p2" for s, _, _ in got)
-
-
-def test_owl_key_sameas_null_term_columns_link(spark):
-    # regression: the 6-column schema carries null obj_lang /
-    # obj_datatype on plain literals; a null-unsafe key join dropped
-    # every such group silently (window partitioning is null-safe)
-    from rdf_converter_spark.operators.owl import (
-        OWL_SAMEAS, owl_key_sameas)
-
-    rows = [
-        ("mail", RDF_T, OWL + "InverseFunctionalProperty", True,
-         None, None),
-        ("p1", "mail", "x@y", False, None, None),
-        ("p2", "mail", "x@y", False, None, None),
-    ]
-    t = spark.createDataFrame(
-        rows, "subj string, pred string, obj string, obj_is_uri "
-              "boolean, obj_lang string, obj_datatype string")
-    got = {(r.subj, r.pred, r.obj) for r in owl_key_sameas(t).collect()}
-    assert got == {("p2", OWL_SAMEAS, "p1")}

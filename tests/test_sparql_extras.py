@@ -1,7 +1,6 @@
 # -*- coding: utf-8 -*-
-"""SPARQL aggregates, solution modifiers, VALUES, ASK, DESCRIBE
-(operators/bgp.py), owl:sameAs smushing (operators/owl.py) and VoID
-statistics (operators/void.py)."""
+"""SPARQL aggregates, solution modifiers, VALUES, ASK, DESCRIBE and
+UPDATE ... WHERE (operators/bgp.py)."""
 import pytest
 from pyspark.sql import functions as F
 
@@ -223,61 +222,5 @@ def test_update_where_needs_a_template(spark):
 
 # ---------------------------------------------------------------- sameAs
 
-def test_sameas_smush_merges_chains(spark):
-    from rdf_converter_spark.operators.owl import OWL_SAMEAS, sameas_smush
-
-    rows = [
-        # chain a = b = c must merge transitively onto 'a'
-        ("b", OWL_SAMEAS, "a", True, None, None),
-        ("b", OWL_SAMEAS, "c", True, None, None),
-        ("a", "name", "Alpha", False, None, None),
-        ("b", "name", "Alpha", False, None, None),   # collapses with ^
-        ("c", "worksAt", "d", True, None, None),
-        ("e", "knows", "b", True, None, None),       # URI object rewritten
-        ("f", "name", "b", False, None, None),       # literal 'b' untouched
-    ]
-    t = spark.createDataFrame(
-        rows,
-        "subj string, pred string, obj string, obj_is_uri boolean, "
-        "obj_lang string, obj_datatype string",
-    )
-    out = sameas_smush(t)
-    got = sorted((r.subj, r.pred, r.obj) for r in out.collect())
-    assert got == [
-        ("a", "name", "Alpha"),
-        ("a", "worksAt", "d"),
-        ("e", "knows", "a"),
-        ("f", "name", "b"),
-    ]
-    kept = sameas_smush(t, keep_sameas=True)
-    sa = [(r.subj, r.obj) for r in kept.collect() if r.pred == OWL_SAMEAS]
-    assert sa == [("a", "a")]  # reflexive canonical self-loop only
-
 
 # ------------------------------------------------------------------ VoID
-
-def test_void_stats_sections(spark):
-    from rdf_converter_spark.operators.void import RDF_TYPE, void_stats
-
-    rows = [
-        ("a", RDF_TYPE, "Person"),
-        ("b", RDF_TYPE, "Person"),
-        ("a", "knows", "b"),
-        ("a", "name", "Alice"),
-        ("b", "name", "Alice"),
-    ]
-    t = spark.createDataFrame(rows, ["subj", "pred", "obj"])
-    out = {(r.section, r.key): r for r in void_stats(t).collect()}
-
-    ds = out[("dataset", "(all)")]
-    assert (ds.triples, ds.distinct_subjects, ds.distinct_objects) == (
-        5, 2, 3)
-    nm = out[("property", "name")]
-    assert (nm.triples, nm.distinct_subjects, nm.distinct_objects) == (
-        2, 2, 1)
-    cp = out[("class", "Person")]
-    # class partition = ALL triples whose subject is a Person instance
-    assert (cp.triples, cp.distinct_subjects) == (5, 2)
-    # approx path returns the same shape (values are estimates)
-    approx = void_stats(t, approx=True)
-    assert approx.columns == out[("dataset", "(all)")].__fields__
