@@ -1044,8 +1044,7 @@ def q_nt_parse(spark, sf_dir):
     FORMATTED in-plan by the writer's expression and PARSED BACK by
     the reader; the DuckDB oracle predicts the parsed result
     arithmetically from the documents table with zero NT code, so a
-    bug in either escape or unescape breaks the hash (png_pipeline
-    oracle style)."""
+    bug in either escape or unescape breaks the hash."""
     from rdf_converter_spark.operators.export import nt_line
     from rdf_converter_spark.sources.rdf import parse_ntriples
 
@@ -1813,48 +1812,10 @@ def q_decontaminate(spark, sf_dir):
     return decontaminate(docs, bench, n=5).orderBy("doc_id")
 
 
-def q_multimodal_features(spark, sf_dir):
-    from rdf_converter_spark.operators.multimodal import (
-        documents_as_media, media_features,
-    )
-
-    media = documents_as_media(_t(spark, sf_dir, "documents"))
-    return media_features(media).select(
-        "media_id", "n_bytes", "digest"
-    ).orderBy("media_id")
 
 
-def q_media_headers(spark, sf_dir):
-    """Real library-free media decode: every document becomes an
-    actual 24-bit BMP (dims a pure function of doc_id), Spark parses
-    the bytes back (magic, header fields, stride-padded size) while
-    the oracle predicts the same values arithmetically."""
-    from rdf_converter_spark.operators.multimodal import (
-        documents_as_bmp, media_features,
-    )
-
-    media = documents_as_bmp(_t(spark, sf_dir, "documents"))
-    return media_features(media).select(
-        "media_id",
-        F.col("meta.format").alias("fmt"),
-        F.col("meta.width").cast("long").alias("width"),
-        F.col("meta.height").cast("long").alias("height"),
-        F.col("meta.channels").cast("long").alias("channels"),
-        "n_bytes",
-    ).orderBy("media_id")
 
 
-def q_png_pipeline(spark, sf_dir):
-    """Real zlib PNG round trip: every document becomes a compressed
-    PNG whose pixels tile md5-hex(text); Spark inflates + unfilters
-    the bytes back and digests the decoded pixels, while the oracle
-    reconstructs the same digest purely arithmetically."""
-    from rdf_converter_spark.operators.multimodal import (
-        decoded_pixel_digest, documents_as_png,
-    )
-
-    media = documents_as_png(_t(spark, sf_dir, "documents"))
-    return decoded_pixel_digest(media).orderBy("media_id")
 
 
 def q_asof_join(spark, sf_dir):
@@ -1878,38 +1839,8 @@ def q_asof_join(spark, sf_dir):
     return asof_join(left, right).orderBy("event_id")
 
 
-def q_png_variants(spark, sf_dir):
-    """Four PNG sample layouts on one pipeline: 8-bit RGB, 16-bit
-    RGB (pixel in the high byte, complement in the low — a decoder
-    reading the wrong byte fails the digest), 8-bit palette over the
-    gray identity palette, and Adam7-interlaced 8-bit RGB (the
-    deinterlacing scatter must land every pass pixel exactly). The
-    oracle reconstructs every decoded-pixel digest without PNG code:
-    v0/v1/v3 = md5 of the tiled md5-hex, v2 = the same tiled bytes
-    each tripled by the palette map."""
-    from rdf_converter_spark.operators.multimodal import (
-        decoded_pixel_digest, documents_as_png_variants,
-    )
-
-    media = documents_as_png_variants(_t(spark, sf_dir, "documents"))
-    return decoded_pixel_digest(media).orderBy("media_id")
 
 
-def q_jpeg_pipeline(spark, sf_dir):
-    """Real baseline-JPEG round trip (operators/jpegkit.py): every
-    document becomes a 4:2:0 Huffman JPEG whose 8x8 blocks are each a
-    constant md5-hex char of the text; Spark walks the markers,
-    entropy-decodes, dequantizes, IDCTs, upsamples chroma and digests
-    the decoded RGB — the oracle reconstructs the same digest purely
-    arithmetically (constant blocks are DC-only, and a DC quantizer
-    of 8 makes the quantized DC exactly v-128, so real lossy-format
-    machinery round-trips losslessly on this input)."""
-    from rdf_converter_spark.operators.multimodal import (
-        decoded_pixel_digest, documents_as_jpeg,
-    )
-
-    media = documents_as_jpeg(_t(spark, sf_dir, "documents"))
-    return decoded_pixel_digest(media).orderBy("media_id")
 
 
 def q_entity_linking(spark, sf_dir):
@@ -3537,7 +3468,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # correctness gate covers the first 50 entries, and the window
     # ROTATES each round so no query's driver evidence goes stale
     # (VERDICT r5 item 3). Each group header names the round that
-    # last verified its queries; with 86 queries and a 50-row window
+    # last verified its queries; with 81 queries and a 50-row window
     # the entries past the window lead the next rotation.
     return {
         # -- new in r6 (no driver row yet) ----------------------------
@@ -3555,9 +3486,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sparql_text_from": q_sparql_text_from,
         "graph_isomorphism": q_graph_isomorphism,
         # -- last verified in CORRECTNESS_r03 --------------------------
-        "multimodal_features": q_multimodal_features,
-        "media_headers": q_media_headers,
-        "png_pipeline": q_png_pipeline,
         "entity_linking": q_entity_linking,
         "cc_components": q_cc_components,
         "url_dedup": q_url_dedup,
@@ -3620,8 +3548,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunks": q_doc_chunks,
         "triple_upsert": q_triple_upsert,
         "snapshot_diff": q_snapshot_diff,
-        "png_variants": q_png_variants,
-        "jpeg_pipeline": q_jpeg_pipeline,
         "sparql_text": q_sparql_text,
         "sparql_text_path": q_sparql_text_path,
         "sparql_text_quads": q_sparql_text_quads,
@@ -3826,55 +3752,6 @@ def oracle_sql() -> dict[str, str]:
               FROM lineitem
             ) GROUP BY 1, 2 ORDER BY 1, 2
         """,
-        # the oracle rebuilds the tiled md5-hex pixel payload and
-        # digests it directly — no PNG code on the DuckDB side; Spark
-        # must actually inflate + unfilter to produce the same digest
-        "png_pipeline": """
-            SELECT doc_id AS media_id,
-                   'png' AS fmt,
-                   4 + doc_id % 9 AS width,
-                   4 + doc_id % 5 AS height,
-                   md5(substr(
-                     repeat(md5(text),
-                            CAST((4 + doc_id % 9) * (4 + doc_id % 5)
-                                 * 3 // 32 + 1 AS INT)),
-                     1,
-                     CAST((4 + doc_id % 9) * (4 + doc_id % 5) * 3
-                          AS INT)
-                   )) AS pixel_md5
-            FROM documents ORDER BY media_id
-        """,
-        "jpeg_pipeline": """
-            WITH chars AS (
-              SELECT doc_id,
-                     2 + doc_id % 4 AS wb,
-                     1 + doc_id % 3 AS hb,
-                     md5(text) AS hx
-              FROM documents
-            ),
-            rows_ AS (
-              SELECT doc_id, wb, hb, by,
-                     string_agg(
-                       repeat(substr(
-                         hx, CAST((by * wb + bx) % 32 + 1 AS INT), 1
-                       ), 24),
-                       '' ORDER BY bx
-                     ) AS rowstr
-              FROM chars,
-                   unnest(range(0, hb)) t1(by),
-                   unnest(range(0, wb)) t2(bx)
-              GROUP BY doc_id, wb, hb, by
-            )
-            SELECT doc_id AS media_id,
-                   'jpeg' AS fmt,
-                   wb * 8 AS width,
-                   hb * 8 AS height,
-                   md5(string_agg(repeat(rowstr, 8), '' ORDER BY by))
-                     AS pixel_md5
-            FROM rows_
-            GROUP BY doc_id, wb, hb
-            ORDER BY media_id
-        """,
         "asof_join": """
             WITH l AS (
               SELECT event_id, user_id, ts, value FROM events
@@ -3889,39 +3766,6 @@ def oracle_sql() -> dict[str, str]:
               ON l.user_id = r.user_id AND l.ts >= r.ts
             ORDER BY l.event_id
         """,
-        "png_variants": """
-            WITH base AS (
-              SELECT doc_id,
-                     4 + doc_id % 9 AS w,
-                     4 + doc_id % 5 AS h,
-                     doc_id % 4 AS v,
-                     md5(text) AS seed
-              FROM documents
-            ), px AS (
-              SELECT doc_id, w, h, v,
-                     substr(
-                       repeat(seed, CAST(w * h * 3 // 32 + 1 AS INT)),
-                       1,
-                       CAST(w * h * (CASE WHEN v = 2 THEN 1 ELSE 3 END)
-                            AS INT)
-                     ) AS tiled
-              FROM base
-            )
-            SELECT doc_id AS media_id,
-                   'png' AS fmt,
-                   w AS width,
-                   h AS height,
-                   CASE WHEN v = 2 THEN
-                     -- gray identity palette triples every index byte
-                     md5(array_to_string(list_transform(
-                       range(1, CAST(w * h AS INT) + 1),
-                       i -> repeat(substr(tiled, i, 1), 3)
-                     ), ''))
-                   ELSE md5(tiled) END AS pixel_md5
-            FROM px ORDER BY media_id
-        """,
-        # rational tf-idf: integer-exact score so both engines rank
-        # bit-identically (float log idf differs in the last ulp)
         "deterministic_split": """
             SELECT doc_id,
               CASE
@@ -4268,25 +4112,6 @@ def oracle_sql() -> dict[str, str]:
             FROM ev JOIN dim USING (event_type)
             WHERE vm * n > 2 * s
             ORDER BY event_id
-        """,
-        "multimodal_features": """
-            SELECT doc_id AS media_id,
-                   octet_length(encode(text)) AS n_bytes,
-                   md5(text) AS digest
-            FROM documents ORDER BY media_id
-        """,
-        # the engine PARSES real BMP bytes; the oracle PREDICTS the
-        # header fields from the generating formulas (w=8+id%16,
-        # h=8+id%8, 54-byte header + 4-byte-aligned BGR rows)
-        "media_headers": """
-            SELECT doc_id AS media_id,
-                   'bmp' AS fmt,
-                   8 + doc_id % 16 AS width,
-                   8 + doc_id % 8 AS height,
-                   CAST(3 AS BIGINT) AS channels,
-                   54 + ((3 * (8 + doc_id % 16) + 3) // 4) * 4
-                      * (8 + doc_id % 8) AS n_bytes
-            FROM documents ORDER BY media_id
         """,
         "domain_quota_sample": """
             WITH d AS (%s),

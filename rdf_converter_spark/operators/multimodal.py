@@ -1,69 +1,11 @@
 # -*- coding: utf-8 -*-
-"""Multimodal columns: image/audio/video as opaque ``binary`` with
-typed metadata. The Spark-side plumbing (schema, batching, UDF
-signatures, partition behaviour) is real and tested; the codec step is
-STUBBED (no image/audio libs in this container) behind
-``NotImplementedError`` with a deterministic fake used by tests.
-
-Pattern: ``mapInPandas`` over (id, media binary, media_type) — one
-Arrow batch in, one batch of (id, feature columns) out; heavy bytes
-never leave the JVM->Arrow path more than once, and the decode UDF is
-the template where a real PIL/ffmpeg call would slot in.
+"""Media helpers left from the deleted media toolkit: a netpbm (PPM)
+header parser and a numpy nearest-neighbor resize. No KG entry point
+imports this module; it is one of the ``DEFERRED`` entries of
+``tests/test_package_reach.py`` and goes with the rest of them.
 """
 
 from __future__ import annotations
-
-import hashlib
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media", T.BinaryType(), True),
-        T.StructField("media_type", T.StringType(), True),
-    ]
-)
-
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("digest", T.StringType()),
-        T.StructField("meta", META_SCHEMA),
-        T.StructField("feat", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def parse_bmp_header(data: bytes):
-    """Width/height/bpp from a BMP (BITMAPINFOHEADER) — pure byte
-    reads, no imaging library. Height may be negative (top-down)."""
-    if len(data) < 54 or data[:2] != b"BM":
-        return None
-    w = int.from_bytes(data[18:22], "little", signed=True)
-    h = int.from_bytes(data[22:26], "little", signed=True)
-    bpp = int.from_bytes(data[28:30], "little")
-    return {
-        "format": "bmp", "width": abs(w), "height": abs(h),
-        "channels": max(bpp // 8, 1), "sample_rate": None,
-        "duration_ms": None,
-    }
 
 
 def parse_ppm_header(data: bytes):
@@ -99,350 +41,6 @@ def parse_ppm_header(data: bytes):
     }
 
 
-def parse_wav_header(data: bytes):
-    """RIFF/WAVE chunk walk: sample_rate/channels/bits from the fmt
-    chunk, duration from the data chunk length."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        return None
-    pos, n = 12, len(data)
-    rate = channels = bits = None
-    data_len = data_off = None
-    while pos + 8 <= n:
-        cid = data[pos:pos + 4]
-        size = int.from_bytes(data[pos + 4:pos + 8], "little")
-        if cid == b"fmt ":
-            fmt = data[pos + 8:pos + 8 + size]
-            if len(fmt) >= 16:
-                channels = int.from_bytes(fmt[2:4], "little")
-                rate = int.from_bytes(fmt[4:8], "little")
-                bits = int.from_bytes(fmt[14:16], "little")
-        elif cid == b"data":
-            data_len = size
-            data_off = pos + 8
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if rate is None:
-        return None
-    dur = None
-    if data_len is not None and channels and bits:
-        bytes_per_s = rate * channels * (bits // 8)
-        if bytes_per_s:
-            dur = int(round(1000.0 * data_len / bytes_per_s))
-    return {
-        "format": "wav", "width": None, "height": None,
-        "channels": channels, "sample_rate": rate, "duration_ms": dur,
-        "_data_offset": data_off, "_data_len": data_len,
-        "_frame_bytes": (channels or 1) * ((bits or 8) // 8),
-    }
-
-
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunk(ctype: bytes, payload: bytes) -> bytes:
-    """length + type + payload + CRC32 — the one PNG chunk writer
-    every encoder in this module shares (keeping N copies in sync is
-    how ancillary-chunk bugs are born)."""
-    import struct
-    import zlib
-
-    body = ctype + payload
-    return (struct.pack(">I", len(payload)) + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF))
-
-
-
-def parse_png_header(data: bytes):
-    """Width/height/bit-depth/color-type from the IHDR chunk."""
-    if len(data) < 33 or data[:8] != _PNG_MAGIC or data[12:16] != b"IHDR":
-        return None
-    w = int.from_bytes(data[16:20], "big")
-    h = int.from_bytes(data[20:24], "big")
-    color_type = data[25]
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
-    return {
-        "format": "png", "width": w, "height": h,
-        "channels": channels, "sample_rate": None, "duration_ms": None,
-        "_bit_depth": data[24], "_color_type": color_type,
-        "_interlace": data[28],
-    }
-
-
-# Adam7 pass grid: (x_start, y_start, x_step, y_step) per pass, in
-# stream order. Each pass is its own filtered sub-image; deinterlacing
-# is a strided numpy scatter into the final sample plane.
-_ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-
-def _png_unfilter(raw, pos, h, stride, bpp):
-    """Undo the per-row filters (None/Sub/Up/Average/Paeth) for one
-    (sub-)image of ``h`` rows starting at byte ``pos`` of the inflated
-    stream; returns ``(rows (h, stride) uint8, next_pos)``."""
-    import numpy as np
-
-    need = h * (stride + 1)
-    if len(raw) - pos < need:
-        raise NotImplementedError("truncated PNG stream")
-    rows = np.frombuffer(raw, np.uint8, count=need,
-                         offset=pos).reshape(h, stride + 1)
-    filters, lines = rows[:, 0], rows[:, 1:].astype(np.int16)
-    out = np.zeros((h, stride), np.uint8)
-    for y in range(h):
-        line = lines[y].copy()
-        prev = out[y - 1].astype(np.int16) if y else np.zeros(
-            stride, np.int16
-        )
-        f = filters[y]
-        if f == 0:
-            cur = line
-        elif f == 2:  # Up
-            cur = (line + prev) & 0xFF
-        else:  # Sub/Average/Paeth carry left-to-right state
-            cur = np.zeros(stride, np.int16)
-            for x in range(stride):
-                a = cur[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                if f == 1:
-                    cur[x] = (line[x] + a) & 0xFF
-                elif f == 3:
-                    cur[x] = (line[x] + ((a + b) >> 1)) & 0xFF
-                else:  # Paeth
-                    c = prev[x - bpp] if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (
-                        b if pb <= pc else c
-                    )
-                    cur[x] = (line[x] + pred) & 0xFF
-        out[y] = cur.astype(np.uint8)
-    return out, pos + need
-
-
-def decode_png(data: bytes):
-    """Decode a PNG to an (h, w, 3) uint8 RGB array with ONLY stdlib
-    zlib + numpy: walk the chunks, inflate IDAT, undo the per-row
-    filters (None/Sub/Up/Average/Paeth), then map to RGB. Supported
-    sample layouts: 8-bit gray/RGB/gray+alpha/RGBA, 16-bit the same
-    (high byte kept — the standard 16→8 downsample), 8-bit palette
-    (PLTE lookup) and 1/2/4-bit palette or grayscale (bit-unpacked),
-    each in both non-interlaced and Adam7-interlaced form (every pass
-    filtered independently, scattered back on the pass grid). JPEG
-    still raises — the honest limit of a library-free decoder."""
-    import zlib
-
-    import numpy as np
-
-    hdr = parse_png_header(data)
-    if hdr is None:
-        raise NotImplementedError("not a PNG")
-    depth, ctype_ = hdr["_bit_depth"], hdr["_color_type"]
-    if hdr["_interlace"] not in (0, 1):
-        raise NotImplementedError(
-            "PNG interlace method %d unknown" % hdr["_interlace"]
-        )
-    if ctype_ not in (0, 2, 3, 4, 6):
-        raise NotImplementedError("unknown PNG color type %d" % ctype_)
-    if depth == 16 and ctype_ == 3:
-        raise NotImplementedError("16-bit palette is not a valid PNG")
-    if depth not in (8, 16) and not (
-        depth in (1, 2, 4) and ctype_ in (0, 3)
-    ):
-        raise NotImplementedError(
-            "PNG bit depth %d with color type %d not decodable "
-            "without codecs" % (depth, ctype_)
-        )
-    w, h, nch = hdr["width"], hdr["height"], hdr["channels"]
-    idat, palette, pos = [], None, 8
-    while pos + 8 <= len(data):
-        size = int.from_bytes(data[pos:pos + 4], "big")
-        ctag = data[pos + 4:pos + 8]
-        if ctag == b"IDAT":
-            idat.append(data[pos + 8:pos + 8 + size])
-        elif ctag == b"PLTE":
-            palette = np.frombuffer(
-                data, np.uint8, count=size - size % 3, offset=pos + 8
-            ).reshape(-1, 3)
-        elif ctag == b"IEND":
-            break
-        pos += 12 + size  # len + type + payload + crc
-    if ctype_ == 3 and (palette is None or not len(palette)):
-        raise NotImplementedError("palette PNG without PLTE chunk")
-    raw = zlib.decompress(b"".join(idat))
-    # filters operate on BYTES; the left-neighbor offset is the whole
-    # pixel's byte width (min 1 for sub-byte depths)
-    bpp = max(nch * depth // 8, 1)
-    passes = _ADAM7 if hdr["_interlace"] == 1 else ((0, 0, 1, 1),)
-    # assemble raw per-pixel samples (palette index / gray value /
-    # channel bytes, 16-bit already high-byte-reduced) across passes
-    samples = np.zeros((h, w, nch), np.uint8)
-    pos = 0
-    for x0, y0, dx, dy in passes:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp <= 0 or hp <= 0:
-            continue  # empty Adam7 pass for small images
-        stride = (wp * nch * depth + 7) // 8
-        rows, pos = _png_unfilter(raw, pos, hp, stride, bpp)
-        if depth in (1, 2, 4):  # sub-byte gray or palette indices
-            bits = np.unpackbits(rows, axis=1)[:, : wp * depth]
-            weights = 1 << np.arange(depth - 1, -1, -1)
-            sub = (bits.reshape(hp, wp, depth) * weights).sum(
-                axis=2
-            ).astype(np.uint8)[:, :, None]
-        else:
-            sub = rows.reshape(hp, wp, nch * (depth // 8))
-            if depth == 16:
-                sub = sub[:, :, ::2]  # big-endian high byte per sample
-        samples[y0::dy, x0::dx] = sub
-    if depth in (1, 2, 4):
-        vals = samples[:, :, 0]
-        if ctype_ == 3:
-            return palette[np.minimum(vals, len(palette) - 1)].copy()
-        scale = 255 // ((1 << depth) - 1)  # gray: expand to full range
-        return np.repeat(
-            (vals * scale).astype(np.uint8)[:, :, None], 3, axis=2
-        )
-    if ctype_ == 3:
-        return palette[np.minimum(samples[:, :, 0],
-                                  len(palette) - 1)].copy()
-    if nch == 1:
-        return np.repeat(samples, 3, axis=2)
-    if nch == 2:  # gray + alpha
-        return np.repeat(samples[:, :, :1], 3, axis=2)
-    return samples[:, :, :3].copy()  # RGB / RGBA minus alpha
-
-
-def encode_png(arr) -> bytes:
-    """(h, w, 3) uint8 RGB -> PNG (filter 0, one zlib IDAT) with
-    stdlib zlib only — used by tests and as a compact re-encode
-    target."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[:2]
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-    return (_PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-            + _png_chunk(b"IEND", b""))
-
-
-def encode_png_adam7(arr) -> bytes:
-    """(h, w, 3) uint8 RGB -> Adam7-interlaced PNG (filter-0 rows in
-    the 7-pass stream order): decode_png must run the deinterlacing
-    scatter to recover ``arr`` — pixels land wrong if any pass grid
-    offset is off by one."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[:2]
-    parts = []
-    for x0, y0, dx, dy in _ADAM7:
-        sub = arr[y0::dy, x0::dx]
-        for y in range(sub.shape[0]):
-            if sub.shape[1]:  # empty passes contribute no bytes
-                parts.append(b"\x00" + sub[y].tobytes())
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)
-    return (_PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(b"".join(parts), 6))
-            + _png_chunk(b"IEND", b""))
-
-
-_META_KEYS = ("format", "width", "height", "channels", "sample_rate",
-              "duration_ms")
-
-
-def decode_media_header(data: bytes) -> dict:
-    """Dispatch on magic bytes; unknown payloads get all-null metadata
-    (format None) rather than an error — at crawl scale unparseable
-    blobs are data, not exceptions."""
-    from rdf_converter_spark.operators.jpegkit import parse_jpeg_header
-
-    for parser in (parse_bmp_header, parse_ppm_header, parse_wav_header,
-                   parse_png_header, parse_jpeg_header):
-        hdr = parser(data)
-        if hdr is not None:
-            return {k: hdr.get(k) for k in _META_KEYS}
-    return {k: None for k in _META_KEYS}
-
-
-def decode_image(data: bytes):
-    """Decode an image to an (h, w, 3) uint8 RGB numpy array with no
-    imaging library: 24-bit uncompressed BMP (BGR rows, 4-byte
-    aligned, bottom-up unless the height is negative), P6 PPM
-    (maxval < 256), and non-interlaced PNG (stdlib zlib inflate +
-    numpy unfiltering — 8/16-bit gray/RGB/RGBA and 1/2/4/8-bit
-    palette, see decode_png), and baseline sequential Huffman JPEG
-    (jpegkit: full entropy decode, IDCT, 4:2:0/4:4:4 upsampling).
-    Progressive/arithmetic JPEG and compressed BMP still raise — the
-    honest slot where PIL would go (codecs not installed here)."""
-    import numpy as np
-
-    hdr = parse_bmp_header(data)
-    if hdr is not None:
-        w, h = hdr["width"], hdr["height"]
-        bpp = int.from_bytes(data[28:30], "little")
-        comp = int.from_bytes(data[30:34], "little")
-        if bpp != 24 or comp != 0:
-            raise NotImplementedError(
-                "only uncompressed 24-bit BMP decodable without codecs"
-            )
-        off = int.from_bytes(data[10:14], "little")
-        stride = ((w * 3) + 3) // 4 * 4
-        raw = np.frombuffer(data, np.uint8, count=stride * h, offset=off)
-        arr = raw.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-        top_down = int.from_bytes(data[22:26], "little", signed=True) < 0
-        if not top_down:
-            arr = arr[::-1]
-        return arr[:, :, ::-1].copy()  # BGR -> RGB
-    p = parse_ppm_header(data)
-    if p is not None and p["format"] == "ppm" and p["channels"] == 3:
-        w, h, off = p["width"], p["height"], p["_data_offset"]
-        raw = np.frombuffer(data, np.uint8, count=w * h * 3, offset=off)
-        return raw.reshape(h, w, 3).copy()
-    if data[:8] == _PNG_MAGIC:
-        return decode_png(data)  # stdlib-zlib inflate + unfilter
-    if data[:2] == b"\xff\xd8":
-        from rdf_converter_spark.operators.jpegkit import decode_jpeg
-
-        return decode_jpeg(data)  # baseline Huffman decode (jpegkit)
-    raise NotImplementedError(
-        "image codecs not installed in this container"
-    )
-
-
-def encode_bmp(arr) -> bytes:
-    """(h, w, 3) uint8 RGB -> uncompressed 24-bit bottom-up BMP."""
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[:2]
-    stride = ((w * 3) + 3) // 4 * 4
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # RGB->BGR
-    body = rows.tobytes()
-    size = 54 + len(body)
-    head = (
-        b"BM" + size.to_bytes(4, "little") + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little") + len(body).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2
-        + (0).to_bytes(4, "little") * 2
-    )
-    return head + body
-
-
 def resize_nearest(arr, width: int, height: int):
     """Nearest-neighbor resize of an (h, w, 3) array via numpy index
     grids — one vectorized gather, no imaging library."""
@@ -452,411 +50,3 @@ def resize_nearest(arr, width: int, height: int):
     ys = (np.arange(height) * h) // height
     xs = (np.arange(width) * w) // width
     return arr[ys[:, None], xs[None, :]]
-
-
-def _fake_features(data: bytes, dims: int = 8):
-    """Deterministic stand-in for a visual/audio embedding: bytes of
-    the sha256 digest scaled to [0, 1). Keeps the full Spark plumbing
-    (schema, Arrow batch shape) testable without codecs."""
-    h = hashlib.sha256(data).digest()
-    return [h[i] / 256.0 for i in range(dims)]
-
-
-def media_features(media: DataFrame, use_codec: bool = False) -> DataFrame:
-    """binary media -> (n_bytes, digest, feat).
-
-    ``n_bytes``/``digest`` are plain JVM expressions (``F.length``/
-    ``F.md5`` on the binary column — no Python in that path, r01 spent
-    3 s of headline running them in a per-blob loop). Only the feature
-    vector — the slot where a real codec/embedding call lives — is an
-    Arrow-batched ``pandas_udf``; because it is a separate projected
-    column (not a mapInPandas that swallows the whole row), Catalyst
-    PRUNES it away when a downstream query never selects ``feat``.
-    """
-    codec = use_codec
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def feat_udf(blobs: pd.Series) -> pd.Series:
-        out = []
-        for blob in blobs:
-            data = bytes(blob) if blob is not None else b""
-            if codec:
-                decode_image(data)  # NotImplementedError by design
-            out.append(_fake_features(data))
-        return pd.Series(out)
-
-    @F.pandas_udf(META_SCHEMA)
-    def meta_udf(blobs: pd.Series) -> pd.DataFrame:
-        rows = [
-            decode_media_header(bytes(b) if b is not None else b"")
-            for b in blobs
-        ]
-        return pd.DataFrame(rows, columns=_META_KEYS)
-
-    blob = F.coalesce(F.col("media"), F.lit(b""))
-    return media.select(
-        "media_id",
-        F.length(blob).cast("long").alias("n_bytes"),
-        F.md5(blob).alias("digest"),
-        meta_udf(F.col("media")).alias("meta"),
-        feat_udf(F.col("media")).alias("feat"),
-    )
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BinaryType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int = 64, height: int = 64,
-                  use_codec: bool = False) -> DataFrame:
-    """Resize: binary in -> binary out per Arrow batch. Uncompressed
-    24-bit BMP / P6 PPM payloads are REALLY decoded, nearest-neighbor
-    resized (vectorized numpy gather) and re-encoded as BMP — no
-    imaging library needed. Other payloads: ``use_codec=True`` raises
-    through the honest PIL slot, else the deterministic byte-tile fake
-    keeps batch shapes/schema testable."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        size = width * height
-        for pdf in batches:
-            out = []
-            for blob in pdf["media"]:
-                data = bytes(blob) if blob is not None else b""
-                try:
-                    arr = decode_image(data)
-                    out.append(encode_bmp(resize_nearest(arr, width,
-                                                         height)))
-                    continue
-                # unparseable blobs are data, not exceptions (the
-                # decode_media_header contract): a payload whose
-                # leading bytes mimic a magic number can fail past
-                # the probe — truncated P6 body (ValueError from
-                # np.frombuffer), corrupt IDAT (zlib.error), bad
-                # header math (anything) — and one poison blob must
-                # not kill the stage unless codec strictness was
-                # asked for
-                except Exception:
-                    if use_codec:
-                        raise
-                reps = (size // max(len(data), 1)) + 1
-                out.append((data * reps)[:size])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [width] * len(out),
-                    "height": [height] * len(out),
-                    "resized": out,
-                }
-            )
-
-    return media.select("media_id", "media").mapInPandas(run, RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, n_frames: int = 4,
-                  use_codec: bool = False) -> DataFrame:
-    """Frame sampling: one binary payload -> n frame rows (1:N Arrow
-    batch fan-out, the shape a real ffmpeg probe would have). WAV
-    payloads are REALLY sampled — n equal time windows of whole PCM
-    frames from the data chunk (sample-aligned, no codec needed);
-    other payloads fall back to deterministic equal byte slices."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nos, frames = [], [], []
-            for mid, blob in zip(pdf["media_id"], pdf["media"]):
-                data = bytes(blob) if blob is not None else b""
-                # WAV first: PCM windowing needs no codec, so the
-                # use_codec strictness probe must not reject audio
-                # payloads that the real path below fully handles
-                wav = parse_wav_header(data)
-                if use_codec and wav is None:
-                    decode_image(data)
-                if wav is not None and wav.get("_data_len"):
-                    off, dlen = wav["_data_offset"], wav["_data_len"]
-                    fb = max(wav["_frame_bytes"], 1)
-                    n_pcm = dlen // fb
-                    step = max(n_pcm // n_frames, 1)
-                    for k in range(n_frames):
-                        a = off + k * step * fb
-                        b = min(off + (k + 1) * step * fb, off + dlen)
-                        ids.append(mid)
-                        nos.append(k)
-                        frames.append(data[a:b])
-                    continue
-                step = max(len(data) // n_frames, 1)
-                for k in range(n_frames):
-                    ids.append(mid)
-                    nos.append(k)
-                    frames.append(data[k * step:(k + 1) * step])
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_no": nos, "frame": frames}
-            )
-
-    return media.select("media_id", "media").mapInPandas(run, FRAME_SCHEMA)
-
-
-def documents_as_bmp(docs: DataFrame) -> DataFrame:
-    """Synthesize a REAL 24-bit BMP per document: width/height are
-    pure functions of doc_id (w = 8 + id % 16, h = 8 + id % 8 — the
-    DuckDB oracle recomputes them without parsing bytes) and the pixel
-    payload tiles the text bytes. Exercises the whole decode path
-    (magic, header fields, stride padding) on data an independent
-    engine can predict."""
-    import numpy as np
-
-    @F.pandas_udf(T.BinaryType())
-    def mk(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            w, h = 8 + int(i) % 16, 8 + int(i) % 8
-            raw = (t or "x").encode("utf-8") or b"x"
-            reps = (w * h * 3) // len(raw) + 1
-            arr = np.frombuffer(
-                (raw * reps)[: w * h * 3], np.uint8
-            ).reshape(h, w, 3)
-            out.append(encode_bmp(arr))
-        return pd.Series(out)
-
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        mk("doc_id", "text").alias("media"),
-        F.lit("image/bmp").alias("media_type"),
-    )
-
-
-def documents_as_png(docs: DataFrame) -> DataFrame:
-    """A REAL zlib-compressed PNG per document: dims are pure
-    functions of doc_id (w = 4 + id % 9, h = 4 + id % 5) and the RGB
-    payload tiles the ASCII md5-hex of the text — so an independent
-    engine can reconstruct the exact pixel bytes (and their digest)
-    without any PNG code, while Spark must actually inflate and
-    unfilter to get them back."""
-    import numpy as np
-
-    @F.pandas_udf(T.BinaryType())
-    def mk(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            w, h = 4 + int(i) % 9, 4 + int(i) % 5
-            seed = hashlib.md5(
-                (t or "").encode("utf-8")
-            ).hexdigest().encode("ascii")
-            reps = (w * h * 3) // len(seed) + 1
-            arr = np.frombuffer(
-                (seed * reps)[: w * h * 3], np.uint8
-            ).reshape(h, w, 3)
-            out.append(encode_png(arr))
-        return pd.Series(out)
-
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        mk("doc_id", "text").alias("media"),
-        F.lit("image/png").alias("media_type"),
-    )
-
-
-def encode_png16(arr) -> bytes:
-    """(h, w, 3) uint8 RGB -> 16-bit RGB PNG whose HIGH bytes are the
-    given samples (low bytes are the complement, so a decoder that
-    read the wrong byte is caught): decode_png must recover exactly
-    ``arr``."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[:2]
-    wide = np.empty((h, w, 3, 2), np.uint8)
-    wide[:, :, :, 0] = arr
-    wide[:, :, :, 1] = 255 - arr
-    raw = b"".join(b"\x00" + wide[y].tobytes() for y in range(h))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 2, 0, 0, 0)
-    return (_PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-            + _png_chunk(b"IEND", b""))
-
-
-def encode_png_palette_gray(idx) -> bytes:
-    """(h, w) uint8 index array -> 8-bit palette PNG over the 256-
-    entry gray palette (i, i, i): decode_png must map each index
-    through PLTE, tripling every byte."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    idx = np.asarray(idx, dtype=np.uint8)
-    h, w = idx.shape[:2]
-    plte = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(h))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    return (_PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"PLTE", plte.tobytes())
-            + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-            + _png_chunk(b"IEND", b""))
-
-
-def documents_as_png_variants(docs: DataFrame) -> DataFrame:
-    """Like documents_as_png but cycling doc_id % 4 through four
-    decodable sample layouts — 8-bit RGB, 16-bit RGB (high byte
-    carries the pixel), 8-bit palette over the gray identity palette,
-    and Adam7-interlaced 8-bit RGB — so the oracle still predicts
-    every decoded-pixel digest arithmetically (v0/v1/v3 digest the
-    tiled md5-hex itself, v2 the same bytes tripled) while Spark must
-    run four genuinely different decode paths."""
-    import numpy as np
-
-    @F.pandas_udf(T.BinaryType())
-    def mk(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            w, h = 4 + int(i) % 9, 4 + int(i) % 5
-            seed = hashlib.md5(
-                (t or "").encode("utf-8")
-            ).hexdigest().encode("ascii")
-            v = int(i) % 4
-            npx = w * h * (1 if v == 2 else 3)
-            reps = npx // len(seed) + 1
-            tiled = np.frombuffer((seed * reps)[:npx], np.uint8)
-            if v == 0:
-                out.append(encode_png(tiled.reshape(h, w, 3)))
-            elif v == 1:
-                out.append(encode_png16(tiled.reshape(h, w, 3)))
-            elif v == 2:
-                out.append(encode_png_palette_gray(tiled.reshape(h, w)))
-            else:
-                out.append(encode_png_adam7(tiled.reshape(h, w, 3)))
-        return pd.Series(out)
-
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        mk("doc_id", "text").alias("media"),
-        F.lit("image/png").alias("media_type"),
-    )
-
-
-def documents_as_jpeg(docs: DataFrame) -> DataFrame:
-    """A REAL 4:2:0 Huffman JPEG per document — baseline SOF0,
-    PROGRESSIVE SOF2 for every third doc, and 12-BIT extended-
-    sequential SOF1 for ids ≡ 1 (mod 5) of the rest — built so the
-    round trip is BIT-EXACT: the image is a grid of (2 + id % 4) x
-    (1 + id % 3) 8x8 blocks, each a CONSTANT gray pixel equal to one
-    ASCII char of md5-hex(text). A constant block has only a DC
-    coefficient, and with a DC quantizer of 8 the quantized DC is
-    exactly ``v - 128`` — so Spark must run the full decode path
-    (marker walk, Huffman entropy decode — multi-scan successive
-    approximation for the SOF2 third — dequantize, IDCT, chroma
-    upsample, YCbCr->RGB) yet lands on arithmetically predictable
-    pixels the oracle reconstructs with no JPEG code (gray content
-    keeps the JFIF color transform lossless: Cb = Cr = 128).
-
-    The 12-bit variants scale the same pixels x16 (value ``16*v``,
-    DC quantizer 128: quantized DC is again exactly ``v - 128``, and
-    the decoder's >>4 tone-map lands on ``v``) — the digest the
-    oracle predicts is IDENTICAL across all three processes while
-    the decode path additionally exercises SOF1, the 2048 level
-    shift and 16-bit Pq=1 DQT segments."""
-    import numpy as np
-
-    from rdf_converter_spark.operators.jpegkit import (
-        encode_jpeg, encode_jpeg_progressive, quality_tables,
-    )
-
-    ql, qc = (t.copy() for t in quality_tables(90))
-    ql[0] = 8
-    qc[0] = 8
-    ql12, qc12 = ql * 16, qc * 16
-
-    @F.pandas_udf(T.BinaryType())
-    def mk(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            wb, hb = 2 + int(i) % 4, 1 + int(i) % 3
-            seed = hashlib.md5(
-                (t or "").encode("utf-8")
-            ).hexdigest().encode("ascii")
-            reps = (wb * hb) // len(seed) + 1
-            blocks = np.frombuffer(
-                (seed * reps)[: wb * hb], np.uint8
-            ).reshape(hb, wb)
-            img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-            rgb = np.repeat(img[:, :, None], 3, 2)
-            # every third document is a PROGRESSIVE (SOF2) stream,
-            # and ids ≡ 1 (mod 5) of the rest are 12-BIT SOF1 — same
-            # pixels after the decoder's tone-map, so the oracle's
-            # digest prediction is untouched while the decode path
-            # must handle all three processes (a real crawl mixes
-            # them too)
-            if int(i) % 3 == 0:
-                data = encode_jpeg_progressive(
-                    rgb, subsampling="420", quant_tables=(ql, qc))
-            elif int(i) % 5 == 1:
-                data = encode_jpeg(
-                    rgb.astype(np.uint16) * 16, subsampling="420",
-                    quant_tables=(ql12, qc12), precision=12)
-            else:
-                data = encode_jpeg(
-                    rgb, subsampling="420", quant_tables=(ql, qc))
-            out.append(data)
-        return pd.Series(out)
-
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        mk("doc_id", "text").alias("media"),
-        F.lit("image/jpeg").alias("media_type"),
-    )
-
-
-def decoded_pixel_digest(media: DataFrame) -> DataFrame:
-    """(media_id, fmt, width, height, pixel_md5): parse the header AND
-    fully decode the image, digesting the raw RGB bytes — the
-    round-trip proof that the decoder reproduces the original pixels,
-    checkable by an engine that only knows the generating formula."""
-    import numpy as np  # noqa: F401
-
-    @F.pandas_udf(T.StringType())
-    def pix_md5(blobs: pd.Series) -> pd.Series:
-        out = []
-        for b in blobs:
-            arr = decode_image(bytes(b) if b is not None else b"")
-            out.append(hashlib.md5(arr.tobytes()).hexdigest())
-        return pd.Series(out)
-
-    feats = media_features(media)
-    return media.join(
-        feats.select("media_id", "meta"), "media_id"
-    ).select(
-        "media_id",
-        F.col("meta.format").alias("fmt"),
-        F.col("meta.width").cast("long").alias("width"),
-        F.col("meta.height").cast("long").alias("height"),
-        pix_md5(F.col("media")).alias("pixel_md5"),
-    )
-
-
-def documents_as_media(docs: DataFrame) -> DataFrame:
-    """Synthesize a media table from documents: text bytes stand in
-    for an encoded image payload (deterministic)."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("media"),
-        F.lit("image/fake").alias("media_type"),
-    )

@@ -90,9 +90,9 @@ def build_triples_inmem(
     spark: SparkSession, routed: DataFrame, dedup: bool = True
 ) -> DataFrame:
     """Single-plan variant (no staged materialization): routed rows ->
-    deduplicated triple table. Used by benchmarks and the streaming
-    foreachBatch path; the staged ``run_pipeline`` is the resumable
-    production shape.
+    deduplicated triple table. Used by ``convert.py``, the benchmark's
+    fused cross-check and tests; the staged ``run_pipeline`` is the
+    resumable production shape.
 
     Parse strategy: ONE fused Python pass over the corpus
     (pipelines.fused), materialized via eager localCheckpoint — every

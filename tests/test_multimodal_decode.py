@@ -1,21 +1,12 @@
 # -*- coding: utf-8 -*-
-"""Library-free media decode: BMP/PPM/WAV header parse, uncompressed
-BMP/P6 pixel decode, nearest-neighbor resize, WAV frame sampling.
-Reference parity target: the reference treats media refs as opaque
-strings (yle_converter.py emits media URLs only); these operators are
-the LLM-pipeline extension surface, verified against self-generated
-payloads with independently predictable headers."""
+"""The media helpers left in ``operators/multimodal.py``: PPM header
+parse and nearest-neighbor resize, on self-generated payloads with
+independently predictable headers."""
 
 import numpy as np
-import pytest
 
 from rdf_converter_spark.operators.multimodal import (
-    decode_image,
-    decode_media_header,
-    encode_bmp,
-    parse_bmp_header,
     parse_ppm_header,
-    parse_wav_header,
     resize_nearest,
 )
 
@@ -25,84 +16,9 @@ def _arr(h, w, seed=3):
     return rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
-def test_bmp_round_trip_odd_width_exercises_stride_padding():
-    # w=5: row = 15 bytes, padded to 16 — decode must drop the pad
-    a = _arr(7, 5)
-    data = encode_bmp(a)
-    hdr = parse_bmp_header(data)
-    assert (hdr["format"], hdr["width"], hdr["height"]) == ("bmp", 5, 7)
-    assert hdr["channels"] == 3
-    np.testing.assert_array_equal(decode_image(data), a)
-
-
-def test_bmp_top_down_negative_height():
-    a = _arr(4, 6)
-    data = bytearray(encode_bmp(a))
-    # flip to top-down: negate height, reverse stored row order
-    data[22:26] = (-4).to_bytes(4, "little", signed=True)
-    stride = ((6 * 3) + 3) // 4 * 4
-    rows = [bytes(data[54 + i * stride:54 + (i + 1) * stride])
-            for i in range(4)]
-    data[54:] = b"".join(reversed(rows))
-    out = decode_image(bytes(data))
-    np.testing.assert_array_equal(out, a)
-    assert parse_bmp_header(bytes(data))["height"] == 4
-
-
-def test_ppm_p6_with_comments_and_decode():
-    a = _arr(3, 4)
-    data = b"P6\n# a comment\n4 3\n# another\n255\n" + a.tobytes()
-    hdr = parse_ppm_header(data)
-    assert (hdr["format"], hdr["width"], hdr["height"],
-            hdr["channels"]) == ("ppm", 4, 3, 3)
-    np.testing.assert_array_equal(decode_image(data), a)
-
-
 def test_ppm_p5_gray_header():
     hdr = parse_ppm_header(b"P5 10 6 255 " + b"\x00" * 60)
     assert (hdr["width"], hdr["height"], hdr["channels"]) == (10, 6, 1)
-
-
-def _wav(rate=8000, channels=2, bits=16, seconds=1.0, extra_chunk=True):
-    n = int(rate * seconds)
-    body = b"\x01\x02" * channels * n  # bits==16
-    fmt = (
-        (1).to_bytes(2, "little") + channels.to_bytes(2, "little")
-        + rate.to_bytes(4, "little")
-        + (rate * channels * bits // 8).to_bytes(4, "little")
-        + (channels * bits // 8).to_bytes(2, "little")
-        + bits.to_bytes(2, "little")
-    )
-    chunks = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    if extra_chunk:  # odd-sized chunk: the walker must word-align
-        chunks += b"LIST" + (3).to_bytes(4, "little") + b"abc\x00"
-    chunks += b"data" + len(body).to_bytes(4, "little") + body
-    return (b"RIFF" + (4 + len(chunks)).to_bytes(4, "little")
-            + b"WAVE" + chunks)
-
-
-def test_wav_header_rate_channels_duration():
-    hdr = parse_wav_header(_wav(rate=8000, channels=2, bits=16,
-                                seconds=0.5))
-    assert hdr["format"] == "wav"
-    assert hdr["sample_rate"] == 8000
-    assert hdr["channels"] == 2
-    assert hdr["duration_ms"] == 500
-    assert hdr["_frame_bytes"] == 4
-
-
-def test_decode_media_header_dispatch_and_unknown():
-    assert decode_media_header(encode_bmp(_arr(2, 2)))["format"] == "bmp"
-    assert decode_media_header(_wav())["format"] == "wav"
-    meta = decode_media_header(b"\x89PNG\r\n\x1a\n garbage")
-    assert all(v is None for v in meta.values())
-    assert set(meta) == {"format", "width", "height", "channels",
-                         "sample_rate", "duration_ms"}
-
-
-def test_decode_image_still_raises_for_compressed_formats():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
 
 
 def test_resize_nearest_identity_and_downscale():
@@ -112,321 +28,3 @@ def test_resize_nearest_identity_and_downscale():
     assert small.shape == (2, 4, 3)
     # nearest-neighbor: every output pixel is some input pixel
     np.testing.assert_array_equal(small[0, 0], a[0, 0])
-
-
-def test_resize_round_trips_through_bmp():
-    a = _arr(10, 9)
-    out = decode_image(encode_bmp(resize_nearest(a, 4, 4)))
-    np.testing.assert_array_equal(out, resize_nearest(a, 4, 4))
-
-
-def test_spark_resize_real_for_bmp_fake_for_unknown(spark):
-    from pyspark.sql import functions as F
-
-    from rdf_converter_spark.operators.multimodal import resize_images
-
-    bmp = encode_bmp(_arr(6, 6, seed=1))
-    rows = [(0, bytearray(bmp)), (1, bytearray(b"not-an-image"))]
-    media = spark.createDataFrame(rows, "media_id long, media binary")
-    out = {r["media_id"]: r for r in
-           resize_images(media, width=3, height=3).collect()}
-    real = decode_image(bytes(out[0]["resized"]))
-    np.testing.assert_array_equal(
-        real, resize_nearest(decode_image(bmp), 3, 3)
-    )
-    assert len(out[1]["resized"]) == 9  # fallback byte-tile
-
-
-def test_spark_sample_frames_wav_is_sample_aligned(spark):
-    from rdf_converter_spark.operators.multimodal import sample_frames
-
-    wav = _wav(rate=100, channels=2, bits=16, seconds=1.0)
-    media = spark.createDataFrame(
-        [(7, bytearray(wav))], "media_id long, media binary"
-    )
-    frames = sample_frames(media, n_frames=4).orderBy("frame_no").collect()
-    assert [r["frame_no"] for r in frames] == [0, 1, 2, 3]
-    # 100 PCM frames x 4 bytes -> 4 windows of 25 frames = 100 bytes
-    assert all(len(r["frame"]) == 100 for r in frames)
-    hdr = parse_wav_header(wav)
-    off = hdr["_data_offset"]
-    assert bytes(frames[0]["frame"]) == wav[off:off + 100]
-
-
-def test_spark_media_headers_meta_column(spark):
-    from rdf_converter_spark.operators.multimodal import (
-        documents_as_bmp, media_features,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "text-%d" % i) for i in range(20)], "doc_id long, text string"
-    )
-    out = media_features(documents_as_bmp(docs)).select(
-        "media_id", "meta.*", "n_bytes"
-    ).collect()
-    for r in out:
-        w, h = 8 + r["media_id"] % 16, 8 + r["media_id"] % 8
-        assert (r["format"], r["width"], r["height"]) == ("bmp", w, h)
-        assert r["n_bytes"] == 54 + ((3 * w + 3) // 4) * 4 * h
-
-
-def test_bmp_round_trip_property():
-    """Hypothesis: encode->decode is identity for arbitrary small RGB
-    arrays (stride padding, both dimensions, pixel values)."""
-    try:
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-    except ImportError:  # pragma: no cover
-        import pytest
-        pytest.skip("hypothesis not installed")
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        w=st.integers(min_value=1, max_value=13),
-        h=st.integers(min_value=1, max_value=9),
-        seed=st.integers(min_value=0, max_value=2**31 - 1),
-    )
-    def check(w, h, seed):
-        a = np.random.RandomState(seed).randint(
-            0, 256, size=(h, w, 3), dtype=np.uint8
-        )
-        data = encode_bmp(a)
-        hdr = parse_bmp_header(data)
-        assert (hdr["width"], hdr["height"]) == (w, h)
-        np.testing.assert_array_equal(decode_image(data), a)
-
-    check()
-
-
-def _filter_png_rows(arr, filters):
-    """Inverse of the unfilter pass: produce the filtered scanline
-    bytes for a target image with a chosen filter type per row."""
-    h, w, nch = arr.shape
-    stride = w * nch
-    flat = arr.reshape(h, stride).astype(int)
-    out = []
-    for y, f in enumerate(filters):
-        prev = flat[y - 1] if y else np.zeros(stride, int)
-        cur = flat[y]
-        line = np.zeros(stride, int)
-        for x in range(stride):
-            a = cur[x - nch] if x >= nch else 0
-            b = prev[x]
-            c = prev[x - nch] if x >= nch else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c)
-            line[x] = (cur[x] - pred) & 0xFF
-        out.append(bytes([f]) + bytes(line.astype(np.uint8)))
-    return b"".join(out)
-
-
-def _png_from_raw(w, h, color_type, raw):
-    import struct
-    import zlib
-
-    from rdf_converter_spark.operators.multimodal import _PNG_MAGIC
-
-    def chunk(ctype, payload):
-        body = ctype + payload
-        return (struct.pack(">I", len(payload)) + body
-                + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (_PNG_MAGIC + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw))
-            + chunk(b"IEND", b""))
-
-
-def _png_build(w, h, depth, color_type, raw, palette=None):
-    """Arbitrary-depth PNG builder (filtered raw stream supplied)."""
-    import struct
-    import zlib
-
-    from rdf_converter_spark.operators.multimodal import _PNG_MAGIC
-
-    def chunk(ctype, payload):
-        body = ctype + payload
-        return (struct.pack(">I", len(payload)) + body
-                + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF))
-
-    out = _PNG_MAGIC + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, 0)
-    )
-    if palette is not None:
-        out += chunk(b"PLTE", bytes(np.asarray(palette, np.uint8).ravel()))
-    return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-
-def test_png_round_trip_and_header():
-    from rdf_converter_spark.operators.multimodal import (
-        decode_png, encode_png, parse_png_header,
-    )
-
-    a = _arr(5, 7, seed=9)
-    data = encode_png(a)
-    hdr = parse_png_header(data)
-    assert (hdr["format"], hdr["width"], hdr["height"],
-            hdr["channels"]) == ("png", 7, 5, 3)
-    np.testing.assert_array_equal(decode_png(data), a)
-    assert decode_media_header(data)["format"] == "png"
-
-
-def test_png_all_filter_types_decode():
-    """Sub/Up/Average/Paeth unfiltering must reconstruct exactly."""
-    a = _arr(5, 6, seed=21)
-    raw = _filter_png_rows(a, [0, 1, 2, 3, 4])
-    data = _png_from_raw(6, 5, 2, raw)
-    np.testing.assert_array_equal(decode_image(data), a)
-
-
-def test_png_rgba_and_gray_variants():
-    rng = np.random.RandomState(4)
-    rgba = rng.randint(0, 256, size=(3, 4, 4), dtype=np.uint8)
-    raw = b"".join(b"\x00" + rgba[y].tobytes() for y in range(3))
-    out = decode_image(_png_from_raw(4, 3, 6, raw))
-    np.testing.assert_array_equal(out, rgba[:, :, :3])
-
-    gray = rng.randint(0, 256, size=(3, 4, 1), dtype=np.uint8)
-    raw = b"".join(b"\x00" + gray[y].tobytes() for y in range(3))
-    out = decode_image(_png_from_raw(4, 3, 0, raw))
-    np.testing.assert_array_equal(out, np.repeat(gray, 3, axis=2))
-
-
-def test_png_unsupported_variants_raise():
-    import struct
-    import zlib
-
-    from rdf_converter_spark.operators.multimodal import _PNG_MAGIC
-
-    def chunk(ctype, payload):
-        body = ctype + payload
-        return (struct.pack(">I", len(payload)) + body
-                + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF))
-
-    # unknown interlace method and palette-without-PLTE refuse honestly
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 2)
-    data = (_PNG_MAGIC + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 14))
-            + chunk(b"IEND", b""))
-    with pytest.raises(NotImplementedError):
-        decode_image(data)
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-    data = (_PNG_MAGIC + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 14))
-            + chunk(b"IEND", b""))
-    with pytest.raises(NotImplementedError):
-        decode_image(data)
-
-
-def test_png_adam7_roundtrip():
-    """Adam7 deinterlacing must reproduce the exact pixels for sizes
-    that exercise every pass-grid edge: 1×1 (only pass 1), widths and
-    heights below 8 (several empty passes), and sizes spanning
-    multiple 8×8 tiles."""
-    from rdf_converter_spark.operators.multimodal import (
-        decode_png, encode_png_adam7,
-    )
-
-    rng = np.random.RandomState(23)
-    for w, h in ((1, 1), (2, 2), (3, 5), (7, 4), (8, 8), (13, 9),
-                 (17, 23), (32, 6)):
-        arr = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        out = decode_png(encode_png_adam7(arr))
-        np.testing.assert_array_equal(out, arr)
-
-
-def test_png_adam7_matches_noninterlaced():
-    """The same pixels through the interlaced and sequential encoders
-    decode identically — the scatter is a pure re-ordering."""
-    from rdf_converter_spark.operators.multimodal import (
-        decode_png, encode_png, encode_png_adam7,
-    )
-
-    rng = np.random.RandomState(29)
-    arr = rng.randint(0, 256, size=(11, 19, 3), dtype=np.uint8)
-    np.testing.assert_array_equal(
-        decode_png(encode_png_adam7(arr)), decode_png(encode_png(arr))
-    )
-
-
-def test_png_palette_8bit_decodes_via_plte():
-    from rdf_converter_spark.operators.multimodal import decode_png
-
-    rng = np.random.RandomState(11)
-    palette = rng.randint(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.randint(0, 16, size=(4, 5), dtype=np.uint8)
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(4))
-    out = decode_png(_png_build(5, 4, 8, 3, raw, palette=palette))
-    np.testing.assert_array_equal(out, palette[idx])
-
-
-def test_png_palette_subbyte_depths_decode():
-    from rdf_converter_spark.operators.multimodal import decode_png
-
-    rng = np.random.RandomState(12)
-    for depth in (1, 2, 4):
-        n = 1 << depth
-        palette = rng.randint(0, 256, size=(n, 3), dtype=np.uint8)
-        idx = rng.randint(0, n, size=(3, 9), dtype=np.uint8)
-        # pack w=9 indices of `depth` bits into ceil(9*depth/8) bytes
-        bits = np.unpackbits(idx[:, :, None], axis=2,
-                             count=8)[:, :, 8 - depth:]
-        flat = bits.reshape(3, 9 * depth)
-        stride = (9 * depth + 7) // 8
-        padded = np.zeros((3, stride * 8), np.uint8)
-        padded[:, : 9 * depth] = flat
-        rows = np.packbits(padded, axis=1)
-        raw = b"".join(b"\x00" + rows[y].tobytes() for y in range(3))
-        out = decode_png(_png_build(9, 3, depth, 3, raw, palette=palette))
-        np.testing.assert_array_equal(out, palette[idx], "depth=%d" % depth)
-
-
-def test_png_gray_subbyte_scales_to_full_range():
-    from rdf_converter_spark.operators.multimodal import decode_png
-
-    # 1-bit gray: 0 -> 0, 1 -> 255; w=8 fills the byte exactly
-    bits = np.array([[1, 0, 1, 1, 0, 0, 1, 0]], np.uint8)
-    raw = b"\x00" + np.packbits(bits).tobytes()
-    out = decode_png(_png_build(8, 1, 1, 0, raw))
-    np.testing.assert_array_equal(
-        out, np.repeat((bits * 255)[:, :, None], 3, axis=2)
-    )
-
-
-def test_png_16bit_keeps_high_byte():
-    from rdf_converter_spark.operators.multimodal import decode_png
-
-    rng = np.random.RandomState(13)
-    a16 = rng.randint(0, 65536, size=(3, 4, 3), dtype=np.uint16)
-    raw = b"".join(
-        b"\x00" + a16[y].astype(">u2").tobytes() for y in range(3)
-    )
-    out = decode_png(_png_build(4, 3, 16, 2, raw))
-    np.testing.assert_array_equal(out, (a16 >> 8).astype(np.uint8))
-
-
-def test_png_resize_through_spark_pipeline(spark):
-    from rdf_converter_spark.operators.multimodal import (
-        decode_image as dec, encode_png, resize_images, resize_nearest,
-    )
-
-    png = encode_png(_arr(8, 8, seed=2))
-    media = spark.createDataFrame(
-        [(0, bytearray(png))], "media_id long, media binary"
-    )
-    out = resize_images(media, width=4, height=4).collect()[0]
-    np.testing.assert_array_equal(
-        dec(bytes(out["resized"])),
-        resize_nearest(dec(png), 4, 4),
-    )

@@ -34,13 +34,12 @@ EXCEPTIONS = {
         "R2RML mapping engine, the model for writing emission as data",
 }
 
-# Training-data toolkit modules still exercised by driver queries and
-# their own tests; ROADMAP item 1 deletes them in a later change.
+# Training-data toolkit modules still exercised by their own tests and,
+# all but multimodal, by driver queries; ROADMAP item 1 deletes them in
+# a later change.
 DEFERRED = {
-    "rdf_converter_spark.operators.jpegkit":
-        "JPEG codec behind the multimodal decoders",
     "rdf_converter_spark.operators.multimodal":
-        "media header decode, resize and frame sampling",
+        "PPM header parse and nearest-neighbor resize",
     "rdf_converter_spark.operators.curation":
         "corpus splits, quotas, packing and decontamination",
     "rdf_converter_spark.operators.urlkit":

@@ -93,27 +93,6 @@ def test_aqe_splits_skewed_join(spark):
             conf.set(k, v)
 
 
-def test_media_features_prunes_python_when_feat_unused(spark):
-    """n_bytes/digest are JVM expressions; the feature pandas_udf is a
-    separate projected column, so a query that never selects ``feat``
-    must compile to a plan with NO Python evaluation at all (r01 spent
-    3 s of headline running md5/length in a per-blob Python loop)."""
-    from pyspark.sql import functions as F
-
-    from rdf_converter_spark.operators.multimodal import media_features
-
-    media = spark.range(100).select(
-        F.col("id").alias("media_id"),
-        F.encode(F.col("id").cast("string"), "utf-8").alias("media"),
-    )
-    pruned = media_features(media).select("media_id", "n_bytes", "digest")
-    plan = _plan(pruned)
-    assert "ArrowEvalPython" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-    full = media_features(media).select("media_id", "feat")
-    assert "ArrowEvalPython" in _plan(full)
-
-
 def test_dedup_is_partial_aggregate(spark, routed):
     """dropDuplicates must compile to a two-phase hash aggregate
     (map-side partial collapse of hub triples before the exchange)."""
