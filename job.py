@@ -16,6 +16,7 @@ completed stages are skipped.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
@@ -58,7 +59,10 @@ def main(argv=None):
 
     out = run_pipeline(spark, args.input, args.work,
                        resume=not args.no_resume)
-    n = out["triples"].count()
+    # the triples stage's row count, as the stage runner counted it
+    # after the write (or read it back on resume): no second scan
+    with open(os.path.join(args.work, "_metrics.json")) as fh:
+        n = next(m["rows"] for m in json.load(fh) if m["stage"] == "triples")
     print("TRIPLES=%d" % n)
 
     if args.canonicalize:
@@ -99,8 +103,6 @@ def main(argv=None):
         print("ENTAILED_TRIPLES=%d" % spark.read.parquet(dst).count())
 
     if args.validate:
-        import json
-
         from rdf_converter_spark.operators.shacl import shacl_report
 
         with open(args.validate, "r") as fh:

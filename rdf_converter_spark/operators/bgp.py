@@ -731,7 +731,7 @@ def bgp_aggregate(
     return grouped
 
 
-def ask(
+def ask_probe(
     triples: DataFrame,
     patterns: Sequence[Tuple[str, str, str]],
     optional: Sequence[Sequence[Tuple[str, str, str]]] = (),
@@ -743,18 +743,32 @@ def ask(
     not_exists: Sequence[Sequence[Tuple[str, str, str]]] = (),
     binds: Sequence[Tuple[str, str]] = (),
     term_meta: Sequence[str] = (),
-) -> bool:
-    """SPARQL ``ASK``: does the pattern have at least one solution?
+) -> DataFrame:
+    """The lazy half of SPARQL ``ASK``: the pattern's solutions capped
+    at one row. :func:`probe_hit` runs it.
 
     The ``LocalLimit 1`` sits below every exchange, so each task
     stops at its first hit and the job short-circuits after the
     first non-empty partition — the cost is one probe, not one full
-    BGP evaluation. (The one-row fetch is a driver action by nature;
-    ASK returns a scalar.)"""
-    sols = bgp_match(triples, patterns, optional, filters, minus, values,
+    BGP evaluation."""
+    return bgp_match(triples, patterns, optional, filters, minus, values,
                      exists, not_exists, binds, relations=relations,
-                     term_meta=term_meta)
-    return bool(sols.limit(1).take(1))
+                     term_meta=term_meta).limit(1)
+
+
+def probe_hit(probe: DataFrame) -> bool:
+    """Run an ASK probe: does it hold a row? ``collect`` on the probe
+    itself (``take`` would wrap it in a new plan), so a probe that is
+    run again reuses its optimized and physical plans. (The one-row
+    fetch is a driver action by nature; ASK returns a scalar.)"""
+    return bool(probe.collect())
+
+
+def ask(triples: DataFrame, patterns: Sequence[Tuple[str, str, str]],
+        *args, **kwargs) -> bool:
+    """SPARQL ``ASK``: does the pattern have at least one solution?
+    Takes :func:`ask_probe`'s arguments."""
+    return probe_hit(ask_probe(triples, patterns, *args, **kwargs))
 
 
 def describe(

@@ -117,15 +117,18 @@ most-constrained-first join order, fail-fast cartesian check.
 from __future__ import annotations
 
 import re
+from functools import reduce
 from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bgp import (
-    TaggedLiteral, ask, bgp_aggregate, bgp_match, bgp_union, construct,
-    solution_modifiers,
+    TaggedLiteral, ask_probe, bgp_aggregate, bgp_match, bgp_union,
+    construct, solution_modifiers,
 )
+# answers an ASK from the probe ``lower`` built for it
+from .bgp import probe_hit as ask
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -228,6 +231,14 @@ _UNSUPPORTED_FNS = {
     "now": "not deterministic under distributed re-execution",
     "rand": "not deterministic under distributed re-execution",
 }
+# Spark SQL functions an expression would otherwise pass through to
+# Spark: the clock and random draws are not fixed by the text and the
+# graph, and ``SparkGraph`` re-runs a repeated text's plan
+_UNSUPPORTED_FNS.update(dict.fromkeys((
+    "random", "randn", "randstr", "uniform", "shuffle",
+    "monotonically_increasing_id", "spark_partition_id", "curdate",
+    "current_date", "current_time", "current_timestamp",
+    "localtimestamp"), "not deterministic under distributed re-execution"))
 
 # LANG() returns "" for untagged literals; DATATYPE() follows the
 # SPARQL 1.1 ladder: explicit datatype, else rdf:langString for
@@ -1579,7 +1590,18 @@ def sparql_query(triples: DataFrame, text: str,
     quad table's named-graph column, ``graph_col``. ``FROM`` /
     ``FROM NAMED`` clauses select the dataset from the quad table
     (see ``_apply_dataset``)."""
-    spec = parse_query(text)
+    form, out = lower(triples, parse_query(text), graph_col)
+    return ask(out) if form == "ask" else out
+
+
+def lower(triples: DataFrame, spec: dict,
+          graph_col: str = "graph") -> Tuple[str, DataFrame]:
+    """Lower a parsed spec (``parse_query``, consumed here) to
+    ``(form, DataFrame)``: the solutions of SELECT, the graph of
+    CONSTRUCT/DESCRIBE, the NEW triple table of an update, and for
+    ASK a one-row probe that :func:`ask` runs. Only a property-path
+    closure small enough for the driver runs a job here; the rest
+    is a lazy plan."""
     g = spec["group"]
     triples = _apply_dataset(
         triples, spec, bool(g and g.get("graphs")), graph_col)
@@ -1587,16 +1609,14 @@ def sparql_query(triples: DataFrame, text: str,
         raise SparqlSyntaxError(
             "GRAPH blocks are supported in SELECT text queries only")
     if spec["form"] == "describe":
-        from pyspark.sql import functions as F
-
         from .bgp import describe
         if spec["iri"] is not None:
             # concise bounded description of a named resource: one
             # pushed-down point filter on the subject column
-            return triples.filter(
+            return "describe", triples.filter(
                 F.col("subj") == spec["iri"]).dropDuplicates()
         g = _lower_groups(triples, g, graph_col)
-        return describe(
+        return "describe", describe(
             triples, g["patterns"], spec["var"],
             optional=g["optional"], filters=g["filters"],
             minus=g["minus"], values=g["values"], exists=g["exists"],
@@ -1614,20 +1634,26 @@ def sparql_query(triples: DataFrame, text: str,
             if (plain_only and len(g["unions"]) == 1
                     and all(_is_plain_branch(b)
                             for b in g["unions"][0])):
-                # each branch probes independently — short-circuits
-                # without materializing the union
-                return any(
-                    ask(triples, b["patterns"], filters=b["filters"])
-                    for b in g["unions"][0])
+                # one probe over the bag union of the branches, each
+                # projected to a constant so the limit reaches every
+                # branch; the fetch scans the branches' partitions in
+                # order and stops at the first row
+                hits = [
+                    bgp_match(triples, b["patterns"],
+                              filters=b["filters"]).select(
+                        F.lit(True).alias("hit"))
+                    for b in g["unions"][0]]
+                return "ask", reduce(DataFrame.union, hits).limit(1)
         g = _lower_groups(triples, g, graph_col)
-        return ask(triples, g["patterns"], optional=g["optional"],
-                   filters=g["filters"], minus=g["minus"],
-                   values=g["values"], exists=g["exists"],
-                   not_exists=g["not_exists"], binds=g["binds"],
-                   relations=_group_union_relations(triples, g, graph_col)
-                   + _path_relations(triples, g)
-                   + _subquery_relations(triples, g, graph_col),
-                   term_meta=sorted(g.get("term_meta") or ()))
+        return "ask", ask_probe(
+            triples, g["patterns"], optional=g["optional"],
+            filters=g["filters"], minus=g["minus"],
+            values=g["values"], exists=g["exists"],
+            not_exists=g["not_exists"], binds=g["binds"],
+            relations=_group_union_relations(triples, g, graph_col)
+            + _path_relations(triples, g)
+            + _subquery_relations(triples, g, graph_col),
+            term_meta=sorted(g.get("term_meta") or ()))
     if spec["form"] == "construct":
         if (spec["order_by"] or spec["limit"] is not None
                 or spec["offset"] or spec["group_by"] or spec["having"]):
@@ -1641,7 +1667,7 @@ def sparql_query(triples: DataFrame, text: str,
                 "supported in text form — run the SELECT with the "
                 "modifiers, then construct() from its rows")
         g = _lower_groups(triples, g, graph_col)
-        return construct(
+        return "construct", construct(
             triples, g["patterns"], spec["template"],
             optional=g["optional"], filters=g["filters"],
             minus=g["minus"], values=g["values"], exists=g["exists"],
@@ -1651,8 +1677,8 @@ def sparql_query(triples: DataFrame, text: str,
             + _subquery_relations(triples, g, graph_col),
             term_meta=sorted(g.get("term_meta") or ()))
     if spec["form"] == "update":
-        return _exec_update(triples, spec)
-    return _exec_select(triples, spec, graph_col=graph_col)
+        return "update", _exec_update(triples, spec)
+    return "select", _exec_select(triples, spec, graph_col=graph_col)
 
 
 def _exec_select(triples: DataFrame, spec: dict,

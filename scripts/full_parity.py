@@ -48,10 +48,10 @@ def main():
     spec.loader.exec_module(mod)
 
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master("local[4]")
+        .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", "4g")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

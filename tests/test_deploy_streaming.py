@@ -10,7 +10,7 @@ import subprocess
 import sys
 
 
-def test_spark_submit_py_files(corpus, tmp_path):
+def test_spark_submit_py_files(spark, corpus, tmp_path):
     """The packaged job must run under a real spark-submit with the
     package shipped via --py-files (BASELINE north_star)."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -67,22 +67,18 @@ def test_spark_submit_py_files(corpus, tmp_path):
     n_triples = stdout_int("TRIPLES")
     assert n_triples > 1000
     assert os.path.exists(os.path.join(work, "triples", "_SUCCESS"))
+    tr = spark.read.parquet(os.path.join(work, "triples"))
+    # TRIPLES is read from _metrics.json: it must be the stage's rows
+    assert n_triples == tr.count()
     n_entailed = stdout_int("ENTAILED_TRIPLES")
     n_viol = stdout_int("SHACL_VIOLATIONS")
     assert n_viol > 0
-    import pyspark.sql
-
-    spark = pyspark.sql.SparkSession.getActiveSession()
-    if spark is not None:
-        tr = spark.read.parquet(os.path.join(work, "triples"))
-        # closure is a superset of the (graph-collapsed) input set
-        distinct_spo = tr.select("subj", "pred", "obj").distinct().count()
-        assert n_entailed >= distinct_spo
-        rep = spark.read.parquet(os.path.join(work, "shacl_report"))
-        assert rep.filter(rep.shape == "ChannelShape").count() == 0
-        assert rep.filter(rep.shape == "NoChannelIdShape").count() == n_viol
-    else:
-        assert n_entailed > 1000
+    # closure is a superset of the (graph-collapsed) input set
+    distinct_spo = tr.select("subj", "pred", "obj").distinct().count()
+    assert n_entailed >= distinct_spo
+    rep = spark.read.parquet(os.path.join(work, "shacl_report"))
+    assert rep.filter(rep.shape == "ChannelShape").count() == 0
+    assert rep.filter(rep.shape == "NoChannelIdShape").count() == n_viol
 
 
 def test_streaming_incremental(spark, corpus, tmp_path):

@@ -143,3 +143,97 @@ def test_missing_flag_columns_defaulted(spark):
     assert flags == {"http://o": True, "lit": False}
     with pytest.raises(ValueError, match="missing"):
         SparkGraph(df.select("subj", "pred"))
+
+
+# -- prepared plans: each SPARQL text is lowered once per graph --------
+NAMES = "PREFIX ex: <http://ex.org/> SELECT ?n WHERE { ?p ex:name ?n }"
+
+
+@pytest.fixture()
+def lowerings(monkeypatch):
+    """The forms ``sparql_text.lower`` was called for, in call order."""
+    from rdf_converter_spark.operators import sparql_text
+
+    calls = []
+    real = sparql_text.lower
+
+    def counted(triples, spec, *a, **kw):
+        calls.append(spec["form"])
+        return real(triples, spec, *a, **kw)
+
+    monkeypatch.setattr(sparql_text, "lower", counted)
+    return calls
+
+
+def _names(df):
+    return sorted(r.n for r in df.collect())
+
+
+def test_repeated_select_is_lowered_once(g, lowerings):
+    first = g.query(NAMES)
+    assert _names(first) == ["Alice", "Bob"]
+    again = g.query(NAMES)
+    assert again is first
+    assert _names(again) == ["Alice", "Bob"]
+    assert lowerings == ["select"]
+
+
+def test_ask_is_a_bool_on_first_and_repeated_calls(g, lowerings):
+    pfx = "PREFIX ex: <http://ex.org/> "
+    yes = pfx + "ASK { ?x ex:knows ?y }"
+    no = pfx + "ASK { ?x ex:knows ex:alice }"
+    # a UNION of plain branches lowers to one probe over both
+    union = pfx + "ASK { { ?x ex:knows ex:alice } UNION { ?x ex:name %s } }"
+    union_yes, union_no = union % '"Bob"', union % '"Zed"'
+    for _ in range(2):
+        assert g.query(yes) is True
+        assert g.query(no) is False
+        assert g.query(union_yes) is True
+        assert g.query(union_no) is False
+    assert lowerings == ["ask"] * 4
+
+
+def test_memoized_select_is_a_snapshot_of_its_graph(g):
+    assert _names(g.query(NAMES)) == ["Alice", "Bob"]
+    insert = ('PREFIX ex: <http://ex.org/> '
+              'INSERT DATA { ex:carol ex:name "Carol" }')
+    g2 = g.update(insert)
+    assert g.update(insert) is g2
+    assert _names(g.query(NAMES)) == ["Alice", "Bob"]
+    assert _names(g2.query(NAMES)) == ["Alice", "Bob", "Carol"]
+
+
+def test_refused_text_raises_on_every_call_and_is_not_kept(g, lowerings):
+    from rdf_converter_spark.operators.sparql_text import SparqlSyntaxError
+
+    now = "SELECT ?s ?t WHERE { ?s ?p ?o BIND (NOW() AS ?t) }"
+    # a Spark function that would pass through the rewrite
+    draw = "SELECT ?s WHERE { ?s ?p ?o FILTER (random() < 0.5) }"
+    for _ in range(2):
+        with pytest.raises(SparqlSyntaxError, match="NOW"):
+            g.query(now)
+        with pytest.raises(SparqlSyntaxError, match="RANDOM"):
+            g.query(draw)
+        # update() refuses a query form before lowering it
+        with pytest.raises(ValueError, match="Update"):
+            g.update(NAMES)
+    assert g._prepared == {} and lowerings == []
+    g.query(NAMES)
+    with pytest.raises(ValueError, match="Update"):
+        g.update(NAMES)
+    assert lowerings == ["select"]
+
+
+def test_oldest_text_is_lowered_again_past_the_bound(g, lowerings):
+    from rdf_converter_spark.graph import _PREPARED_MAX
+
+    texts = ["SELECT ?s WHERE { ?s ?p ?o } LIMIT %d" % (i + 1)
+             for i in range(_PREPARED_MAX + 1)]
+    for t in texts:
+        g.query(t)
+    assert len(lowerings) == len(texts)
+    assert len(g._prepared) == _PREPARED_MAX
+    g.query(texts[-1])
+    assert len(lowerings) == len(texts)
+    g.query(texts[0])
+    assert len(lowerings) == len(texts) + 1

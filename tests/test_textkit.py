@@ -7,6 +7,7 @@ re-extract literals from the reference source to guard transcription.
 """
 
 import ast
+import os
 import re
 
 import pytest
@@ -42,7 +43,7 @@ from rdf_converter_spark.textkit import (
     sha1_hex,
 )
 
-REF = "/root/reference"
+REF = os.environ.get("MEMAD_REFERENCE_DIR", "/root/reference")
 
 
 def _ref_literal(path, pattern):
