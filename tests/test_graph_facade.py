@@ -237,3 +237,54 @@ def test_oldest_text_is_lowered_again_past_the_bound(g, lowerings):
     assert len(lowerings) == len(texts)
     g.query(texts[0])
     assert len(lowerings) == len(texts) + 1
+
+
+def test_threads_racing_on_texts_share_one_kept_lowering(g, monkeypatch):
+    """Eight threads (more than the cores) query the same graph: every
+    caller of a text gets the one lowering that was kept, and eviction
+    under the race keeps the memo at its bound without an error."""
+    import sys
+    import threading
+    import time
+
+    from rdf_converter_spark.graph import _PREPARED_MAX
+    from rdf_converter_spark.operators import sparql_text
+
+    def slow_lower(triples, spec, *a, **kw):
+        time.sleep(0.001)  # widen the gap between lookup and store
+        return spec["form"], object()
+
+    monkeypatch.setattr(sparql_text, "lower", slow_lower)
+    few = ["SELECT ?s WHERE { ?s ?p ?o } LIMIT %d" % (i + 1)
+           for i in range(4)]
+    many = ["SELECT ?o WHERE { ?s ?p ?o } LIMIT %d" % (i + 1)
+            for i in range(3 * _PREPARED_MAX)]
+    got = {t: [] for t in few}
+    errors = []
+
+    def client():
+        try:
+            for _ in range(20):
+                for t in few:
+                    got[t].append(g.query(t))
+            for t in many:
+                g.query(t)
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for t in few:
+        assert len(got[t]) == 8 * 20
+        assert all(o is got[t][0] for o in got[t])
+    assert len(g._prepared) == _PREPARED_MAX
