@@ -1599,9 +1599,8 @@ def lower(triples: DataFrame, spec: dict,
     """Lower a parsed spec (``parse_query``, consumed here) to
     ``(form, DataFrame)``: the solutions of SELECT, the graph of
     CONSTRUCT/DESCRIBE, the NEW triple table of an update, and for
-    ASK a one-row probe that :func:`ask` runs. Only a property-path
-    closure small enough for the driver runs a job here; the rest
-    is a lazy plan."""
+    ASK a one-row probe that :func:`ask` runs. Property-path
+    closures run their jobs here; the rest is a lazy plan."""
     g = spec["group"]
     triples = _apply_dataset(
         triples, spec, bool(g and g.get("graphs")), graph_col)
@@ -1637,7 +1636,8 @@ def lower(triples: DataFrame, spec: dict,
                 # one probe over the bag union of the branches, each
                 # projected to a constant so the limit reaches every
                 # branch; the fetch scans the branches' partitions in
-                # order and stops at the first row
+                # order and stops at the first row (an exchange inside
+                # any branch runs before that scan, once per probe)
                 hits = [
                     bgp_match(triples, b["patterns"],
                               filters=b["filters"]).select(
