@@ -3,8 +3,8 @@
 
 ``entry(spark)`` runs the flagship KG-construction query on the
 sf0.001 tables. ``queries()`` exposes one entry per implemented
-operator family (SURVEY.md §2 + the training-data toolkit);
-``oracle_sql()`` gives the DuckDB twin for every SQL-expressible one.
+operator family (SURVEY.md §2); ``oracle_sql()`` gives the DuckDB
+twin for every SQL-expressible one.
 
 All float-producing queries round to 6 dp and compute dot products in
 sequential double math on both engines so value hashes agree.
@@ -466,73 +466,6 @@ SELECT src, dst FROM (
 )
 ORDER BY src, dst
 """ % _KG_TPCH_ORACLE
-
-
-def q_warc_roundtrip(spark, sf_dir):
-    """WARC container round trip (sources/warc.py): two records per
-    document are FORMATTED in-plan (CRLF headers, byte-exact
-    Content-Length) and walked back by the structural record parser.
-    The first payload embeds a fake record boundary
-    (CRLFCRLF + 'WARC/1.0 ...') — a parser that splits on the
-    separator instead of honoring Content-Length emits phantom
-    records and breaks the row count and every digest. The oracle
-    predicts record ids, lengths and payload digests straight from
-    the documents table with zero WARC code."""
-    from rdf_converter_spark.sources.warc import (
-        parse_warc, warc_record_expr,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    sid = F.col("doc_id").cast("string")
-    p1 = F.concat(
-        F.lit("P:"), F.substring("text", 1, 30),
-        F.lit("\r\n\r\nWARC/1.0 decoy\r\nContent-Length: 3\r\n"),
-    )
-    p2 = F.coalesce(F.col("lang"), F.lit(""))
-    uri = F.concat(F.lit("http://kg.test/doc/"), sid)
-    date = F.lit("2024-01-01T00:00:00Z")
-    blob = F.concat(
-        warc_record_expr(
-            uri, date, p1, F.concat(F.lit("<urn:doc:"), sid, F.lit(">"))
-        ),
-        warc_record_expr(
-            uri, date, p2, F.concat(F.lit("<urn:meta:"), sid, F.lit(">")),
-            warc_type="metadata", content_type="text/plain",
-        ),
-    )
-    recs = parse_warc(docs.select(blob.alias("content")), "content")
-    return recs.select(
-        "record_id", "warc_type", "target_uri", "content_length",
-        F.md5("payload").alias("payload_md5"),
-    ).orderBy("record_id")
-
-
-_WARC_ROUNDTRIP_ORACLE = """
-WITH d AS (
-  SELECT doc_id,
-         'P:' || substr(text, 1, 30)
-           || chr(13) || chr(10) || chr(13) || chr(10)
-           || 'WARC/1.0 decoy' || chr(13) || chr(10)
-           || 'Content-Length: 3' || chr(13) || chr(10) AS p1,
-         coalesce(lang, '') AS p2
-  FROM documents
-)
-SELECT record_id, warc_type, target_uri, content_length, payload_md5
-FROM (
-  SELECT '<urn:doc:' || doc_id || '>' AS record_id,
-         'response' AS warc_type,
-         'http://kg.test/doc/' || doc_id AS target_uri,
-         CAST(strlen(p1) AS BIGINT) AS content_length,
-         md5(p1) AS payload_md5
-  FROM d
-  UNION ALL
-  SELECT '<urn:meta:' || doc_id || '>', 'metadata',
-         'http://kg.test/doc/' || doc_id,
-         CAST(strlen(p2) AS BIGINT), md5(p2)
-  FROM d
-)
-ORDER BY record_id
-"""
 
 
 def q_sparql_bind(spark, sf_dir):
@@ -1778,69 +1711,8 @@ def salted_dedup_rows(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Training-data toolkit over documents / embeddings
+# Entity linking, components, KG maintenance and skew-safe joins
 # ---------------------------------------------------------------------------
-
-
-def q_split(spark, sf_dir):
-    """Content-stable train/val/test assignment (hash-bucket, no RNG):
-    both engines derive the split from md5(doc_id|salt) — a row's
-    fate never depends on other rows or execution order."""
-    from rdf_converter_spark.operators.curation import deterministic_split
-
-    return deterministic_split(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "split"
-    ).orderBy("doc_id")
-
-
-def q_lang_quota(spark, sf_dir):
-    from rdf_converter_spark.operators.curation import lang_quota_sample
-
-    return lang_quota_sample(
-        _t(spark, sf_dir, "documents"), quota=30
-    ).select("doc_id", "lang").orderBy("doc_id")
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: docs sharing any word 5-gram with
-    the simulated eval set (doc_id % 97 == 0) get flagged; the
-    benchmark's gram hashes broadcast into the corpus join."""
-    from rdf_converter_spark.operators.curation import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return decontaminate(docs, bench, n=5).orderBy("doc_id")
-
-
-
-
-
-
-
-
-def q_asof_join(spark, sf_dir):
-    """Point-in-time join: each click gets the user's latest purchase
-    at-or-before it. Spark side is the union+window form (ONE
-    exchange, no range-join explosion — operators/asof.py); the
-    oracle is DuckDB's native ASOF JOIN. Right side pre-deduplicated
-    per (user, ts) by max event_id in both engines (equal-timestamp
-    duplicates have no deterministic ASOF winner)."""
-    from rdf_converter_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    right = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.expr("max_by(value, event_id)").alias("value"))
-    )
-    return asof_join(left, right).orderBy("event_id")
-
-
-
-
 
 
 def q_entity_linking(spark, sf_dir):
@@ -1874,45 +1746,6 @@ def q_cc_components(spark, sf_dir):
         .agg(F.count("*").alias("size"))
         .orderBy(F.col("size").desc(), F.col("component"))
     )
-
-
-def _doc_link_edges(spark, sf_dir):
-    from rdf_converter_spark.operators.graph import link_edges
-
-    return link_edges(_t(spark, sf_dir, "documents"))
-
-
-def q_graph_degrees(spark, sf_dir):
-    """Per-node in/out/total degree over the deterministic document
-    link graph (two successor edges + one hub edge per doc — the hub
-    nodes carry crawl-graph skew). Union of two partial aggregations,
-    one exchange on the node key."""
-    from rdf_converter_spark.operators.graph import degree_stats
-
-    return degree_stats(_doc_link_edges(spark, sf_dir)).orderBy("node")
-
-
-def q_triangle_count(spark, sf_dir):
-    """Exact triangle count by degree orientation: wedges enumerate at
-    the lowest-degree endpoint so hubs cost O(deg) not O(deg^2); the
-    oracle is the textbook a<b<c three-way self-join."""
-    from rdf_converter_spark.operators.graph import triangle_count
-
-    return triangle_count(_doc_link_edges(spark, sf_dir))
-
-
-def q_pagerank(spark, sf_dir):
-    """5-iteration PageRank over the document link graph as a driver
-    loop of join+aggregate rounds (one shuffle per iteration,
-    localCheckpoint to flatten lineage); the oracle unrolls the same
-    recurrence as chained CTEs with identical double arithmetic, both
-    sides rounded to 6 dp."""
-    from rdf_converter_spark.operators.graph import pagerank
-
-    pr = pagerank(_doc_link_edges(spark, sf_dir), iters=5, damping=0.85)
-    return pr.select(
-        "node", F.round("rank", 6).alias("rank")
-    ).orderBy("node")
 
 
 def q_triple_upsert(spark, sf_dir):
@@ -1949,121 +1782,6 @@ def q_triple_upsert(spark, sf_dir):
     return upsert_triples(base, upd.unionByName(tomb)).orderBy(
         "subj", "pred", "obj"
     )
-
-
-def q_boilerplate_strip(spark, sf_dir):
-    """Per-host boilerplate removal (operators/curation.py:
-    boilerplate_strip): pages synthesized from documents over 5 hosts
-    — a banner line on 100% of each host's pages (stripped), a
-    newsletter line on the even half (exactly at the 0.5 threshold,
-    stripped), the document text and a per-page ref line (kept). The
-    oracle reproduces the distinct-page frequency, host totals,
-    threshold and ordered reassembly in DuckDB."""
-    from rdf_converter_spark.operators.curation import boilerplate_strip
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("string")
-    host = F.concat(F.lit("h"), (F.col("doc_id") % 5).cast("string"))
-    pages = docs.select(
-        host.alias("host"),
-        F.concat(F.lit("http://"), host, F.lit("/p"), did).alias("url"),
-        F.concat(
-            F.lit("accept all cookies on this site\n"),
-            F.col("text"),
-            F.when(F.col("doc_id") % 2 == 0,
-                   F.lit("\nsubscribe to the weekly newsletter"))
-            .otherwise(F.lit("")),
-            F.lit("\nref "), did,
-        ).alias("text"),
-    )
-    return boilerplate_strip(pages, min_pages=2, max_frac=0.5).orderBy("url")
-
-
-_BOILERPLATE_ORACLE = """
-WITH pages AS (
-  SELECT 'h' || (doc_id % 5)::VARCHAR AS host,
-         'http://h' || (doc_id % 5)::VARCHAR || '/p'
-           || doc_id::VARCHAR AS url,
-         'accept all cookies on this site' || chr(10) || text
-           || CASE WHEN doc_id % 2 = 0
-                   THEN chr(10) || 'subscribe to the weekly newsletter'
-                   ELSE '' END
-           || chr(10) || 'ref ' || doc_id::VARCHAR AS text
-  FROM documents
-), l AS (
-  SELECT host, url, CAST(i AS INT) AS pos, lines[i+1] AS line
-  FROM (SELECT host, url, string_split(text, chr(10)) AS lines
-        FROM pages), unnest(range(0, len(lines))) AS t(i)
-), freq AS (
-  SELECT host, line, count(*) AS npages
-  FROM (SELECT DISTINCT host, url, line FROM l) GROUP BY host, line
-), tot AS (
-  SELECT host, count(*) AS total FROM pages GROUP BY host
-), boiler AS (
-  SELECT f.host, f.line FROM freq f JOIN tot USING (host)
-  WHERE npages >= 2 AND npages / total >= 0.5e0
-), kept AS (
-  SELECT l.url, count(*) AS n_kept,
-         string_agg(l.line, chr(10) ORDER BY l.pos) AS new_text
-  FROM l
-  WHERE NOT EXISTS (SELECT 1 FROM boiler b
-                    WHERE b.host = l.host AND b.line = l.line)
-  GROUP BY l.url
-)
-SELECT p.url, p.host,
-       len(string_split(p.text, chr(10)))::BIGINT AS n_lines,
-       coalesce(k.n_kept, 0)::BIGINT AS n_kept,
-       coalesce(k.new_text, '') AS new_text
-FROM pages p LEFT JOIN kept k USING (url)
-ORDER BY p.url
-"""
-
-
-def q_event_deltas(spark, sf_dir):
-    """Per-user lag window: value delta + inter-event gap, (ts,
-    event_id) ordering for equal-timestamp determinism."""
-    from rdf_converter_spark.operators.events import event_deltas
-
-    return event_deltas(_t(spark, sf_dir, "events")).orderBy("event_id")
-
-
-def q_interval_join(spark, sf_dir):
-    """Bucketized point-in-interval range join (operators/events.py:
-    interval_point_join): error events open half-open windows of
-    (event_id%10+1) minutes; click events are points. All times are
-    epoch-microsecond LONGs (unix_micros / epoch_us — no float or
-    calendar arithmetic), the join is an equi-join on 1-minute bucket
-    ids (never a nested loop — plan-asserted in tests), and the
-    oracle is the naive inequality join DuckDB can afford at sf."""
-    from rdf_converter_spark.operators.events import interval_point_join
-
-    ev = _t(spark, sf_dir, "events")
-    ivals = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("iid"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("start"),
-        (F.unix_micros(F.col("ts").cast("timestamp"))
-         + (F.col("event_id") % 10 + 1) * 60_000_000).alias("end"),
-    )
-    pts = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("pid"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-    )
-    out = interval_point_join(ivals, pts, bucket=60_000_000)
-    return out.select("iid", "pid").orderBy("iid", "pid")
-
-
-_INTERVAL_JOIN_ORACLE = """
-WITH i AS (
-  SELECT event_id AS iid, epoch_us(ts) AS s,
-         epoch_us(ts) + (event_id % 10 + 1) * 60000000 AS e
-  FROM events WHERE event_type = 'error'
-), p AS (
-  SELECT event_id AS pid, epoch_us(ts) AS t
-  FROM events WHERE event_type = 'click'
-)
-SELECT iid, pid FROM i JOIN p ON p.t >= i.s AND p.t < i.e
-ORDER BY iid, pid
-"""
 
 
 def q_skew_salted_join(spark, sf_dir):
@@ -2128,48 +1846,6 @@ def q_star_join_revenue(spark, sf_dir):
     )
 
 
-MIX_WEIGHTS = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
-
-
-def q_mixture_sample(spark, sf_dir):
-    """Pretraining dataset mixing: per-source sampling weights via the
-    content-stable hash-bucket rule (pure filter — zero exchanges);
-    sources outside the mixture spec are dropped."""
-    from rdf_converter_spark.operators.curation import mixture_sample
-
-    return mixture_sample(
-        _t(spark, sf_dir, "documents"), MIX_WEIGHTS
-    ).select("doc_id", "source").orderBy("doc_id")
-
-
-def q_sequence_pack(spark, sf_dir):
-    """Concat-and-chunk sequence packing into 2048-token context
-    windows: exclusive prefix sum of token counts, integer DIV for
-    the bin (float division mis-bins past 2^53 total tokens)."""
-    from rdf_converter_spark.operators.curation import sequence_pack
-
-    return sequence_pack(
-        _t(spark, sf_dir, "documents"), capacity=2048
-    ).orderBy("doc_id")
-
-
-def q_khop(spark, sf_dir):
-    """6-hop neighborhood from the hub pages over the document link
-    graph: frontier BFS (first visit = min hop), k bounds the shuffle
-    count; oracle = bounded recursive CTE with UNION-distinct."""
-    from rdf_converter_spark.operators.graph import khop_neighborhood
-
-    docs = _t(spark, sf_dir, "documents")
-    sources = docs.filter(F.col("doc_id") < 10).select(
-        F.col("doc_id").alias("node")
-    )
-    return khop_neighborhood(
-        _doc_link_edges(spark, sf_dir), sources, k=6
-    ).select("node", F.col("hops").cast("long").alias("hops")).orderBy(
-        "node"
-    )
-
-
 def q_snapshot_diff(spark, sf_dir):
     """CDC between two KG snapshots derived from orders: the new
     snapshot updates status for orderkey%10 and drops customer
@@ -2204,36 +1880,6 @@ def q_snapshot_diff(spark, sf_dir):
     return snapshot_diff(old, new).orderBy("subj", "pred", "obj", "change")
 
 
-def _messy_urls(docs):
-    """Deterministic messy URL variants over documents: 5 crawl-dup
-    shapes (case, fragment, default port + trailing slash, utm chain,
-    ref param) of one canonical page per doc_id % 41 group."""
-    g = (F.col("doc_id") % 41).cast("string")
-    v = F.col("doc_id") % 5
-    base = F.concat(F.lit("example"), g, F.lit(".com/page/"), g)
-    url = (
-        F.when(v == 0, F.concat(F.lit("https://"), base))
-        .when(v == 1, F.concat(
-            F.lit("HTTPS://EXAMPLE"), g, F.lit(".COM/page/"), g,
-            F.lit("#section")))
-        .when(v == 2, F.concat(
-            F.lit("https://example"), g, F.lit(".com:443/page/"), g,
-            F.lit("/")))
-        .when(v == 3, F.concat(
-            F.lit("https://"), base,
-            F.lit("?utm_source=feed&utm_campaign=x")))
-        .otherwise(F.concat(F.lit("https://"), base, F.lit("?ref=tw#top")))
-    )
-    return docs.select("doc_id", url.alias("url"))
-
-
-def q_url_dedup(spark, sf_dir):
-    from rdf_converter_spark.operators.urlkit import url_dedup
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return url_dedup(_messy_urls(docs)).orderBy("canonical_url")
-
-
 def kg_web_pipeline(spark, sf_dir):
     """Full web_pages KG pipeline on a deterministic generated corpus
     (rows-only check: correctness is pytest's golden-equality gate)."""
@@ -2257,120 +1903,6 @@ def kg_web_pipeline(spark, sf_dir):
         .agg(F.count("*").alias("n_triples"))
         .orderBy("graph")
     )
-
-
-def _crawl_urls(docs):
-    """Deterministic crawl URLs over a 7x13 subdomain.domain host
-    grid; the uppercase SUB label exercises host lowercasing. Both
-    engines synthesize the identical string."""
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("http://SUB"), (F.col("doc_id") % 7).cast("string"),
-            F.lit(".dom"), (F.col("doc_id") % 13).cast("string"),
-            F.lit(".example/p/"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-
-
-_CRAWL_URLS_SQL = (
-    "SELECT doc_id, 'http://SUB' || CAST(doc_id %% 7 AS VARCHAR)"
-    " || '.dom' || CAST(doc_id %% 13 AS VARCHAR)"
-    " || '.example/p/' || CAST(doc_id AS VARCHAR) AS url"
-    " FROM documents%s"
-)
-
-
-def _host_re_sql() -> str:
-    """The urlkit host pattern verbatim (RE2, no quotes to escape) —
-    one shared spec for both engines."""
-    from rdf_converter_spark.operators.urlkit import HOST_RE
-
-    return HOST_RE
-
-
-_HOST_RE_SQL = _host_re_sql()
-
-
-def q_domain_quota(spark, sf_dir):
-    """Per-host document cap (operators/curation.py:
-    domain_quota_sample) — crawl-side rebalancing twin of the
-    language quota: each of the 91 synthetic hosts keeps exactly 5
-    docs under the content-keyed md5 order."""
-    from rdf_converter_spark.operators.curation import domain_quota_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return domain_quota_sample(
-        _crawl_urls(docs), quota=5
-    ).orderBy("doc_id")
-
-
-def q_blocklist_filter(spark, sf_dir):
-    """Suffix-semantics domain blocklist (operators/curation.py:
-    blocklist_filter): a rule blocks its host and every subdomain;
-    the matched rule reported is the most specific one. Corpus side
-    is never shuffled — rule table broadcast both ways."""
-    from rdf_converter_spark.operators.curation import blocklist_filter
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    rules = spark.createDataFrame(
-        [("dom1.example",), ("dom4.example",), ("sub2.dom5.example",)],
-        "domain string",
-    )
-    return blocklist_filter(_crawl_urls(docs), rules).orderBy("doc_id")
-
-
-def q_doc_chunks(spark, sf_dir):
-    """Sliding-window chunker (operators/curation.py:doc_chunks):
-    16-word windows every 12 words, tail clamped — map-only array
-    expressions, no UDF/shuffle."""
-    from rdf_converter_spark.operators.curation import doc_chunks
-
-    docs = _t(spark, sf_dir, "documents")
-    return doc_chunks(docs, size=16, stride=12).orderBy(
-        "doc_id", "chunk_no")
-
-
-def q_label_prop(spark, sf_dir):
-    """Deterministic synchronous label propagation (operators/
-    graph.py:label_propagation) on the standard link graph; the
-    oracle unrolls the identical min-tie-break recurrence."""
-    from rdf_converter_spark.operators.graph import (
-        label_propagation, link_edges,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return label_propagation(link_edges(docs), iters=4).orderBy("node")
-
-
-def _label_prop_oracle(iters: int = 4) -> str:
-    """Unrolled LPA recurrence: per round, (node, label) neighbor
-    counts from the symmetrized edge list, argmax by (cnt desc,
-    label asc) — the same deterministic rule the Spark loop's
-    max_by((cnt, -label)) struct encodes."""
-    parts = [
-        "WITH " + _LINK_EDGES.strip() + ",",
-        """und AS (SELECT DISTINCT src, dst FROM (
-               SELECT src, dst FROM edges
-               UNION ALL SELECT dst, src FROM edges)),
-           l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),""",
-    ]
-    for k in range(1, iters + 1):
-        parts.append(
-            """c{k} AS (SELECT e.dst AS node, l.label, count(*) AS cnt
-                   FROM und e JOIN l{p} l ON l.node = e.src
-                   GROUP BY e.dst, l.label),
-               l{k} AS (SELECT node, label FROM (
-                   SELECT node, label, row_number() OVER (
-                     PARTITION BY node
-                     ORDER BY cnt DESC, label ASC) AS rn
-                   FROM c{k}) WHERE rn = 1){comma}""".format(
-                k=k, p=k - 1, comma="," if k < iters else ""
-            )
-        )
-    parts.append(
-        "SELECT node, label FROM l%d ORDER BY node" % iters)
-    return "\n".join(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -3468,7 +3000,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # correctness gate covers the first 50 entries, and the window
     # ROTATES each round so no query's driver evidence goes stale
     # (VERDICT r5 item 3). Each group header names the round that
-    # last verified its queries; with 81 queries and a 50-row window
+    # last verified its queries; with 62 queries and a 50-row window
     # the entries past the window lead the next rotation.
     return {
         # -- new in r6 (no driver row yet) ----------------------------
@@ -3488,7 +3020,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- last verified in CORRECTNESS_r03 --------------------------
         "entity_linking": q_entity_linking,
         "cc_components": q_cc_components,
-        "url_dedup": q_url_dedup,
         "kg_web_pipeline": kg_web_pipeline,
         # -- last verified in CORRECTNESS_r04 --------------------------
         "kg_tpch_triples": kg_tpch_triples,
@@ -3503,7 +3034,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "path_match": q_path_match,
         "path_star": q_path_star,
         "path_nps": q_path_nps,
-        "warc_roundtrip": q_warc_roundtrip,
         "sparql_bind": q_sparql_bind,
         "sparql_minus": q_sparql_minus,
         "sparql_exists": q_sparql_exists,
@@ -3516,7 +3046,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sparql_values_page": q_sparql_values_page,
         "sparql_describe": q_sparql_describe,
         "sparql_update": q_sparql_update,
-        # ---- window boundary (~50) — r04 basics, lead r07 -----------
+        # -- r04 basics, lead r07 ------------------------------------
         "scan_filter_project": scan_filter_project,
         "agg_partial": agg_partial,
         "broadcast_dim_join": broadcast_dim_join,
@@ -3530,22 +3060,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_rows": dedup_rows,
         "salted_dedup_rows": salted_dedup_rows,
         # -- verified green in CORRECTNESS_r05 -------------------------
-        "graph_degrees": q_graph_degrees,
-        "triangle_count": q_triangle_count,
-        "pagerank": q_pagerank,
-        "khop_neighborhood": q_khop,
-        "label_propagation": q_label_prop,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "event_deltas": q_event_deltas,
         "skew_salted_join": q_skew_salted_join,
         "star_join_revenue": q_star_join_revenue,
-        "boilerplate_strip": q_boilerplate_strip,
-        "mixture_sample": q_mixture_sample,
-        "sequence_pack": q_sequence_pack,
-        "domain_quota_sample": q_domain_quota,
-        "blocklist_filter": q_blocklist_filter,
-        "doc_chunks": q_doc_chunks,
         "triple_upsert": q_triple_upsert,
         "snapshot_diff": q_snapshot_diff,
         "sparql_text": q_sparql_text,
@@ -3554,65 +3070,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sparql_text_update": q_sparql_text_update,
         "sparql_text_subquery": q_sparql_text_subquery,
         "turtle_parse": q_turtle_parse,
-        "deterministic_split": q_split,
-        "lang_quota_sample": q_lang_quota,
-        "decontaminate": q_decontaminate,
     }
 
 
 _WORDS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
-
-# deterministic document link graph — MUST mirror operators.graph
-# .link_edges (two successors mod N + one of 10 hub pages per doc)
-_LINK_EDGES = """
-    nn AS (SELECT count(*) AS n FROM documents),
-    e0 AS (
-        SELECT doc_id AS src, (doc_id + 1) % nn.n AS dst
-        FROM documents, nn
-        UNION ALL
-        SELECT doc_id, (doc_id + 2) % nn.n FROM documents, nn
-        UNION ALL
-        SELECT doc_id, doc_id % 10 FROM documents
-    ),
-    edges AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst)
-"""
-
-
-def _pagerank_oracle(iters: int = 5) -> str:
-    """Unrolled power-method CTE chain — the same recurrence the
-    driver loop in operators.graph.pagerank runs, constant for
-    constant in IEEE doubles (1e0-style literals keep DuckDB out of
-    DECIMAL arithmetic)."""
-    parts = [
-        "WITH " + _LINK_EDGES.strip().rstrip() + ",",
-        """nodes AS (SELECT DISTINCT src AS node FROM edges
-                     UNION SELECT dst FROM edges),
-           nn2 AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-           outd AS (SELECT src, CAST(count(*) AS DOUBLE) AS d
-                    FROM edges GROUP BY src),
-           pr0 AS (SELECT node, 1e0 / nn2.n AS rank FROM nodes, nn2),""",
-    ]
-    for k in range(1, iters + 1):
-        parts.append(
-            """c{k} AS (SELECT e.dst, sum(p.rank / o.d) AS flow
-                   FROM edges e
-                   JOIN outd o ON o.src = e.src
-                   JOIN pr{p} p ON p.node = e.src
-                   GROUP BY e.dst),
-               pr{k} AS (SELECT n.node,
-                         (1e0 - 0.85e0) / nn2.n
-                         + 0.85e0 * coalesce(c.flow, 0e0) AS rank
-                   FROM nodes n CROSS JOIN nn2
-                   LEFT JOIN c{k} c ON c.dst = n.node){comma}""".format(
-                k=k, p=k - 1, comma="," if k < iters else ""
-            )
-        )
-    parts.append(
-        "SELECT node, round(rank, 6) AS rank FROM pr%d ORDER BY node"
-        % iters
-    )
-    return "\n".join(parts)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3648,7 +3109,6 @@ def oracle_sql() -> dict[str, str]:
         "path_match": _PATH_MATCH_ORACLE,
         "path_star": _PATH_STAR_ORACLE,
         "path_nps": _PATH_NPS_ORACLE,
-        "warc_roundtrip": _WARC_ROUNDTRIP_ORACLE,
         "sparql_bind": _SPARQL_BIND_ORACLE,
         "sparql_minus": _SPARQL_MINUS_ORACLE,
         "sparql_exists": _SPARQL_EXISTS_ORACLE,
@@ -3752,67 +3212,6 @@ def oracle_sql() -> dict[str, str]:
               FROM lineitem
             ) GROUP BY 1, 2 ORDER BY 1, 2
         """,
-        "asof_join": """
-            WITH l AS (
-              SELECT event_id, user_id, ts, value FROM events
-              WHERE event_type = 'click'
-            ), r AS (
-              SELECT user_id, ts, arg_max(value, event_id) AS value
-              FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-            )
-            SELECT l.event_id, l.user_id, l.ts, l.value,
-                   r.ts AS ts_asof, r.value AS value_asof
-            FROM l ASOF LEFT JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-            ORDER BY l.event_id
-        """,
-        "deterministic_split": """
-            SELECT doc_id,
-              CASE
-                WHEN CAST('0x' || substr(
-                       md5(CAST(doc_id AS VARCHAR) || '|v1'), 1, 8)
-                     AS BIGINT) % 10000 < 9000 THEN 'train'
-                WHEN CAST('0x' || substr(
-                       md5(CAST(doc_id AS VARCHAR) || '|v1'), 1, 8)
-                     AS BIGINT) % 10000 < 9500 THEN 'val'
-                ELSE 'test'
-              END AS split
-            FROM documents ORDER BY doc_id
-        """,
-        "lang_quota_sample": """
-            SELECT doc_id, lang FROM (
-              SELECT doc_id, lang, row_number() OVER (
-                PARTITION BY lang
-                ORDER BY md5(CAST(doc_id AS VARCHAR) || '|v1'), doc_id
-              ) AS rk FROM documents
-            ) WHERE rk <= 30 ORDER BY doc_id
-        """,
-        "decontaminate": """
-            WITH g AS (
-              -- docs with < 5 words emit NO grams (short/empty docs
-              -- must not cross-contaminate; mirrors _gram_hashes)
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(0, len({w}) - 4),
-                       i -> md5(array_to_string(({w})[i+1:i+5], ' '))
-                     )) AS grams
-              FROM documents
-              WHERE len({w}) >= 5
-            ), bench AS (
-              SELECT DISTINCT unnest(grams) AS gram
-              FROM g WHERE doc_id % 97 = 0
-            ), corpus AS (
-              SELECT doc_id, unnest(grams) AS gram FROM g
-            ), hits AS (
-              SELECT doc_id, count(*) AS n_hits
-              FROM corpus JOIN bench USING (gram) GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   coalesce(h.n_hits, 0) AS n_hits,
-                   coalesce(h.n_hits, 0) > 0 AS contaminated
-            FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-            ORDER BY d.doc_id
-        """.format(w=_WORDS),
         # same pair derivation, then transitive closure to the
         # component minimum = the cluster's canonical doc
         "cc_components": """
@@ -3870,54 +3269,6 @@ def oracle_sql() -> dict[str, str]:
               ) AS rank FROM scored
             ) WHERE rank <= 3 ORDER BY doc_id, rank
         """.format(w=_WORDS),
-        "url_dedup": r"""
-            WITH d AS (
-              SELECT doc_id,
-                CASE CAST(doc_id % 5 AS INT)
-                  WHEN 0 THEN 'https://example' || (doc_id % 41)
-                       || '.com/page/' || (doc_id % 41)
-                  WHEN 1 THEN 'HTTPS://EXAMPLE' || (doc_id % 41)
-                       || '.COM/page/' || (doc_id % 41) || '#section'
-                  WHEN 2 THEN 'https://example' || (doc_id % 41)
-                       || '.com:443/page/' || (doc_id % 41) || '/'
-                  WHEN 3 THEN 'https://example' || (doc_id % 41)
-                       || '.com/page/' || (doc_id % 41)
-                       || '?utm_source=feed&utm_campaign=x'
-                  ELSE 'https://example' || (doc_id % 41)
-                       || '.com/page/' || (doc_id % 41) || '?ref=tw#top'
-                END AS url
-              FROM documents WHERE doc_id < 200
-            ), c1 AS (
-              SELECT doc_id, regexp_replace(url, '#.*$', '', 'g') AS u
-              FROM d
-            ), c2 AS (
-              SELECT doc_id, CASE WHEN regexp_extract(u,
-                  '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1) <> ''
-                THEN lower(regexp_extract(u,
-                       '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1))
-                     || regexp_replace(u,
-                          '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '')
-                ELSE u END AS u
-              FROM c1
-            ), c3 AS (
-              SELECT doc_id, regexp_replace(regexp_replace(u,
-                  '^(http://[^/:?]+):80([/?]|$)', '\1\2'),
-                  '^(https://[^/:?]+):443([/?]|$)', '\1\2') AS u
-              FROM c2
-            ), c4 AS (
-              SELECT doc_id, regexp_replace(u,
-                '([?&])(?:(?:utm_[a-z]+|fbclid|gclid|mc_eid|ref)=[^&#]*(?:&|$))+',
-                '\1', 'g') AS u
-              FROM c3
-            ), c5 AS (
-              SELECT doc_id, regexp_replace(
-                regexp_replace(u, '[?&]$', ''), '(.)/+$', '\1') AS u
-              FROM c4
-            )
-            SELECT u AS canonical_url, min(doc_id) AS survivor_id,
-                   count(*) AS n_variants
-            FROM c5 GROUP BY 1 ORDER BY 1
-        """,
         "kg_web_pipeline": """
             -- pinned per-graph triple counts of the deterministic
             -- (seed-fixed) corpus run; the triple VALUES were produced
@@ -3935,28 +3286,6 @@ def oracle_sql() -> dict[str, str]:
             ) AS t(graph, n_triples)
             ORDER BY graph
         """,
-        "graph_degrees": """
-            WITH """ + _LINK_EDGES + """,
-            u AS (SELECT src AS node, 1 AS o, 0 AS i FROM edges
-                  UNION ALL
-                  SELECT dst, 0, 1 FROM edges)
-            SELECT node,
-                   CAST(sum(o) AS BIGINT) AS out_degree,
-                   CAST(sum(i) AS BIGINT) AS in_degree,
-                   CAST(sum(o) + sum(i) AS BIGINT) AS degree
-            FROM u GROUP BY node ORDER BY node
-        """,
-        "triangle_count": """
-            WITH """ + _LINK_EDGES + """,
-            und AS (SELECT DISTINCT least(src, dst) AS a,
-                           greatest(src, dst) AS b
-                    FROM edges WHERE src <> dst)
-            SELECT CAST(count(*) AS BIGINT) AS n_triangles
-            FROM und e1
-            JOIN und e2 ON e2.a = e1.a AND e1.b < e2.b
-            JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b
-        """,
-        "pagerank": _pagerank_oracle(5),
         "triple_upsert": """
             WITH base AS (
                 SELECT 'o:' || CAST(o_orderkey AS VARCHAR) AS subj,
@@ -3986,7 +3315,6 @@ def oracle_sql() -> dict[str, str]:
                 SELECT * FROM delta WHERE obj IS NOT NULL
             ) ORDER BY subj, pred, obj
         """,
-        "boilerplate_strip": _BOILERPLATE_ORACLE,
         "snapshot_diff": """
             WITH old AS (
                 SELECT 'o:' || CAST(o_orderkey AS VARCHAR) AS subj,
@@ -4021,55 +3349,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE o.subj IS NULL OR n.subj IS NULL
             ORDER BY subj, pred, obj, change
         """,
-        "khop_neighborhood": """
-            WITH RECURSIVE """ + _LINK_EDGES + """,
-            s AS (SELECT doc_id AS node FROM documents
-                  WHERE doc_id < 10),
-            d(node, hops) AS (
-                SELECT node, 0 FROM s
-                UNION
-                SELECT e.dst, d.hops + 1
-                FROM d JOIN edges e ON e.src = d.node
-                WHERE d.hops < 6
-            )
-            SELECT node, CAST(min(hops) AS BIGINT) AS hops
-            FROM d GROUP BY node ORDER BY node
-        """,
-        "mixture_sample": """
-            SELECT doc_id, source FROM documents
-            WHERE CAST('0x' || substr(
-                      md5(CAST(doc_id AS VARCHAR) || '|mix1'), 1, 8)
-                  AS BIGINT) % 10000
-                  < CASE source
-                      WHEN 'src0' THEN 10000
-                      WHEN 'src1' THEN 5000
-                      WHEN 'src2' THEN 2500
-                      WHEN 'src3' THEN 1000
-                      ELSE 0
-                    END
-            ORDER BY doc_id
-        """,
-        "sequence_pack": """
-            WITH t AS (
-                SELECT doc_id,
-                       CASE WHEN trim(text) = '' THEN 0
-                            ELSE CAST(len({w}) AS BIGINT)
-                       END AS n_tokens
-                FROM documents
-            ),
-            c AS (
-                SELECT doc_id, n_tokens,
-                       coalesce(sum(n_tokens) OVER (
-                           ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0) AS cum
-                FROM t
-            )
-            SELECT doc_id, n_tokens,
-                   CAST(cum // 2048 AS BIGINT) AS bin,
-                   CAST(cum % 2048 AS BIGINT) AS offset
-            FROM c ORDER BY doc_id
-        """.format(w=_WORDS),
         "star_join_revenue": """
             SELECT n_name,
                    round(sum(l_extendedprice * (1 - l_discount)), 2)
@@ -4085,17 +3364,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE r_name = 'ASIA'
             GROUP BY n_name
             ORDER BY revenue DESC, n_name
-        """,
-        "interval_join": _INTERVAL_JOIN_ORACLE,
-        "event_deltas": """
-            SELECT event_id, user_id,
-                   round(value - lag(value) OVER w, 6) AS value_delta,
-                   CAST(floor(epoch(ts)) AS BIGINT)
-                   - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT)
-                       AS gap_seconds
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ORDER BY event_id
         """,
         # the oracle is the UNSALTED join — proving the salt is pure
         # plumbing that never changes the match set
@@ -4113,72 +3381,4 @@ def oracle_sql() -> dict[str, str]:
             WHERE vm * n > 2 * s
             ORDER BY event_id
         """,
-        "domain_quota_sample": """
-            WITH d AS (%s),
-            h AS (
-              SELECT doc_id, url,
-                     lower(regexp_extract(url, '%s', 1)) AS host
-              FROM d
-            ),
-            r AS (
-              SELECT doc_id, url, host, row_number() OVER (
-                PARTITION BY host
-                ORDER BY md5(CAST(doc_id AS VARCHAR) || '|v1'), doc_id
-              ) AS rk FROM h
-            )
-            SELECT doc_id, url, host FROM r WHERE rk <= 5
-            ORDER BY doc_id
-        """ % (_CRAWL_URLS_SQL % "", _HOST_RE_SQL),
-        "blocklist_filter": """
-            WITH d AS (%s),
-            h AS (
-              SELECT doc_id, url,
-                     lower(regexp_extract(url, '%s', 1)) AS host
-              FROM d
-            ),
-            p AS (SELECT doc_id, string_split(host, '.') AS ps FROM h),
-            sfx AS (
-              SELECT doc_id,
-                     unnest(list_transform(
-                       range(1, len(ps) + 1),
-                       i -> array_to_string(ps[i:len(ps)], '.')
-                     )) AS rule
-              FROM p
-            ),
-            rules AS (SELECT * FROM (VALUES ('dom1.example'),
-                      ('dom4.example'), ('sub2.dom5.example')) t(rule)),
-            hits AS (
-              SELECT doc_id, arg_max(s.rule, length(s.rule)) AS rule
-              FROM sfx s JOIN rules r ON r.rule = s.rule
-              GROUP BY doc_id
-            )
-            SELECT h.doc_id, h.url, h.host,
-                   hits.rule IS NOT NULL AS blocked, hits.rule AS rule
-            FROM h LEFT JOIN hits USING (doc_id)
-            ORDER BY h.doc_id
-        """ % (_CRAWL_URLS_SQL % " WHERE doc_id < 400", _HOST_RE_SQL),
-        # same empty-token filter as the engine: split('') == ['']
-        # must chunk to nothing, and multi-space gaps to no tokens
-        "doc_chunks": r"""
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(
-                       regexp_split_to_array(trim(text), '\s+'),
-                       x -> x <> '') AS ws
-              FROM documents
-            ),
-            s AS (
-              SELECT doc_id, len(ws) AS n_words, ws,
-                     unnest(range(0, greatest(len(ws) - 16, 0) + 1, 12))
-                       AS st
-              FROM w WHERE len(ws) > 0
-            )
-            SELECT doc_id,
-                   CAST(n_words AS INT) AS n_words,
-                   CAST(st // 12 AS INT) AS chunk_no,
-                   array_to_string(ws[st+1:st+16], ' ') AS chunk,
-                   CAST(len(ws[st+1:st+16]) AS INT) AS chunk_words
-            FROM s ORDER BY doc_id, chunk_no
-        """,
-        "label_propagation": _label_prop_oracle(4),
     }

@@ -36,7 +36,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _POS = ("subj", "pred", "obj")
-_FILTER_VAR = re.compile(r"\?(\w+)")
+# a ?var reference, or a single-quoted SQL string literal (with
+# backslash escapes) whose text is matched only so it is skipped
+_EXPR_TOKEN = re.compile(r"'(?:[^'\\]|\\.)*'|\?(\w+)")
+
+
+def _expr_vars(expr: str) -> list:
+    """The ``?var`` names an expression reads, outside its string
+    literals (``'what?x'`` names no variable)."""
+    return [m.group(1) for m in _EXPR_TOKEN.finditer(expr) if m.group(1)]
+
+
+def _sql_expr(expr: str):
+    """``F.expr`` of an expression with each ``?var`` rewritten to a
+    column reference; string literals are left as written."""
+    return F.expr(_EXPR_TOKEN.sub(
+        lambda m: "`%s`" % m.group(1) if m.group(1) else m.group(0),
+        expr))
 
 
 class TaggedLiteral(str):
@@ -430,32 +446,26 @@ def bgp_match(
                 "BIND(... AS ?%s): variable already bound (SPARQL "
                 "forbids re-binding an in-scope variable)" % var
             )
-        missing = [
-            v for v in _FILTER_VAR.findall(expr) if v not in bound_vars
-        ]
+        missing = [v for v in _expr_vars(expr) if v not in bound_vars]
         if missing:
             raise ValueError(
                 "BIND %r references unbound variables %s (bound: %s)"
                 % (expr, missing, sorted(bound_vars))
             )
-        bound = bound.withColumn(
-            var, F.expr(_FILTER_VAR.sub(r"`\1`", expr))
-        )
+        bound = bound.withColumn(var, _sql_expr(expr))
         bound_vars.add(var)
     for expr in filters:
         # SPARQL-style ?var tokens are validated against the bound
         # set and rewritten to column references; plain identifiers
         # pass through to Spark's analyzer (which raises
         # UNRESOLVED_COLUMN on a typo anyway)
-        missing = [
-            v for v in _FILTER_VAR.findall(expr) if v not in bound_vars
-        ]
+        missing = [v for v in _expr_vars(expr) if v not in bound_vars]
         if missing:
             raise ValueError(
                 "FILTER %r references unbound variables %s (bound: %s)"
                 % (expr, missing, sorted(bound_vars))
             )
-        bound = bound.filter(F.expr(_FILTER_VAR.sub(r"`\1`", expr)))
+        bound = bound.filter(_sql_expr(expr))
     if meta:
         companions = ["%s__%s" % (v, s) for v in meta
                       for s in ("lang", "datatype", "is_uri")]
@@ -718,16 +728,15 @@ def bgp_aggregate(
                 % (k, sorted(sols.columns)))
     aggs = []
     for name, expr in aggregates.items():
-        missing = [v for v in _FILTER_VAR.findall(expr)
-                   if v not in sols.columns]
+        missing = [v for v in _expr_vars(expr) if v not in sols.columns]
         if missing:
             raise ValueError(
                 "aggregate %r references unbound variables %s"
                 % (expr, missing))
-        aggs.append(F.expr(_FILTER_VAR.sub(r"`\1`", expr)).alias(name))
+        aggs.append(_sql_expr(expr).alias(name))
     grouped = sols.groupBy(*keys).agg(*aggs) if keys else sols.agg(*aggs)
     if having:
-        grouped = grouped.filter(F.expr(_FILTER_VAR.sub(r"`\1`", having)))
+        grouped = grouped.filter(_sql_expr(having))
     return grouped
 
 

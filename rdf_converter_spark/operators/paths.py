@@ -13,7 +13,7 @@ variable. This module evaluates the path algebra relationally:
 - ``p+``   one-or-more-> iterative doubling; early-exits when
   converged (then the result is the exact unbounded ``+``), otherwise
   covers paths of length <= 2^max_rounds — the scale-honest bounded
-  form, same contract as ``graph.py:khop_neighborhood``. Dispatched by
+  form. Dispatched by
   size: a step relation of at most ``_DRIVER_ROWS`` rows is pulled in
   ONE bounded Arrow collect and closed on the driver with Arrow hash
   joins, then shipped back as one Arrow table — one Spark job instead

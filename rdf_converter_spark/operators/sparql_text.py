@@ -124,8 +124,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bgp import (
-    TaggedLiteral, ask_probe, bgp_aggregate, bgp_match, bgp_union,
-    construct, solution_modifiers,
+    TaggedLiteral, _sql_expr, ask_probe, bgp_aggregate, bgp_match,
+    bgp_union, construct, solution_modifiers,
 )
 # answers an ASK from the probe ``lower`` built for it
 from .bgp import probe_hit as ask
@@ -209,6 +209,12 @@ _FN_MAP = {
     "lang": lambda a: a[0],
     "datatype": lambda a: a[0],
     "langmatches": lambda a: a[0],
+    # Spark spells these the same way
+    "year": lambda a: "year(%s)" % a[0],
+    "month": lambda a: "month(%s)" % a[0],
+    "day": lambda a: "day(%s)" % a[0],
+    "md5": lambda a: "md5(%s)" % a[0],
+    "sha1": lambda a: "sha1(%s)" % a[0],
 }
 
 # Builtins the engine's lexical-string value model cannot express
@@ -231,14 +237,6 @@ _UNSUPPORTED_FNS = {
     "now": "not deterministic under distributed re-execution",
     "rand": "not deterministic under distributed re-execution",
 }
-# Spark SQL functions an expression would otherwise pass through to
-# Spark: the clock and random draws are not fixed by the text and the
-# graph, and ``SparkGraph`` re-runs a repeated text's plan
-_UNSUPPORTED_FNS.update(dict.fromkeys((
-    "random", "randn", "randstr", "uniform", "shuffle",
-    "monotonically_increasing_id", "spark_partition_id", "curdate",
-    "current_date", "current_time", "current_timestamp",
-    "localtimestamp"), "not deterministic under distributed re-execution"))
 
 # LANG() returns "" for untagged literals; DATATYPE() follows the
 # SPARQL 1.1 ladder: explicit datatype, else rdf:langString for
@@ -592,7 +590,7 @@ class _P:
             elif k == "var":
                 parts.append("?" + v[1:])
             elif k == "string":
-                parts.append("'%s'" % _unescape(v[1:-1]).replace("'", "''"))
+                parts.append(_sql_str(_unescape(v[1:-1])))
             elif k == "num":
                 parts.append(v)
             elif k == "kw" and v in ("true", "false"):
@@ -601,19 +599,28 @@ class _P:
                 parts.append(" %s " % v.upper())
             elif k == "word":
                 fn = v.lower()
-                if fn in _FN_MAP and self.peek() == ("punct", "("):
+                if self.peek() != ("punct", "("):
+                    # a bare word is Spark SQL too (current_user):
+                    # only CAST's target type passes
+                    if parts[-1:] != [" AS "]:
+                        raise SparqlSyntaxError(
+                            "unexpected %r in expression" % v)
+                    parts.append(v)
+                elif fn in _FN_MAP:
                     parts.append(self._builtin_call(fn))
-                elif (fn in _UNSUPPORTED_FNS
-                        and self.peek() == ("punct", "(")):
+                elif fn in _AGG_FNS or fn == "cast":
+                    parts.append(v)
+                else:
+                    # only the builtins above reach Spark: any other
+                    # call would run whatever Spark function it names
                     raise SparqlSyntaxError(
                         "%s() is not supported: %s" % (
-                            v.upper(), _UNSUPPORTED_FNS[fn]))
-                else:
-                    parts.append(v)
+                            v.upper(), _UNSUPPORTED_FNS.get(
+                                fn, "not a SPARQL builtin")))
             elif k == "iri":
-                parts.append("'%s'" % (self.base + v[1:-1]))
+                parts.append(_sql_str(self.base + v[1:-1]))
             elif k == "pname":
-                parts.append("'%s'" % self.expand_pname(v))
+                parts.append(_sql_str(self.expand_pname(v)))
             elif k == "kw":
                 # keywords inside nested calls (CAST(?x AS INT)) pass
                 # through; Spark's analyzer rejects genuine misuse
@@ -1005,6 +1012,12 @@ _UNESCAPE_RE = re.compile(
     r"\\u([0-9A-Fa-f]{4})|\\U([0-9A-Fa-f]{8})|\\(.)")
 
 
+def _sql_str(text: str) -> str:
+    """``text`` as a Spark SQL string literal. Spark's lexer reads a
+    backslash as an escape, so both it and the quote are escaped."""
+    return "'%s'" % text.replace("\\", "\\\\").replace("'", "\\'")
+
+
 def _unescape(s: str) -> str:
     # single left-to-right pass: sequential str.replace corrupted
     # escaped backslashes followed by n/t/r ("C:\\network" ->
@@ -1248,9 +1261,9 @@ def _proj_expr(p: _P) -> str:
             collect = ("collect_set" if "DISTINCT" in inner
                        else "collect_list")
             # deterministic form: sorted collect, engine-neutral
-            return ("array_join(sort_array(%s(%s)), '%s')"
-                    % (collect, arg, (sep if sep is not None else " ")
-                       .replace("'", "''")))
+            return ("array_join(sort_array(%s(%s)), %s)"
+                    % (collect, arg,
+                       _sql_str(sep if sep is not None else " ")))
         if fn == "sample":
             return "min(%s)" % inner[-1]  # deterministic SAMPLE
         return "%s(%s)" % (fn, " ".join(inner))
@@ -1741,13 +1754,8 @@ def _exec_select(triples: DataFrame, spec: dict,
         out = out.select(*cols) if cols else out
     else:
         out = _exec_group(triples, g, graph_col=graph_col)
-        if exprs:
-            from pyspark.sql import functions as F
-
-            from .bgp import _FILTER_VAR
-            for n, e in exprs:
-                out = out.withColumn(
-                    n, F.expr(_FILTER_VAR.sub(r"`\1`", e)))
+        for n, e in exprs:
+            out = out.withColumn(n, _sql_expr(e))
         if not spec["star"]:
             out = out.select(*[n for n, _ in spec["projection"]])
     return solution_modifiers(

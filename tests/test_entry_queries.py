@@ -5,6 +5,7 @@ via DuckDB on the same parquet — the same comparison the driver's
 correctness gate performs at sf=0.01.
 """
 
+import ast
 import math
 import os
 
@@ -44,14 +45,16 @@ def _rows(recs):
     )
 
 
+ENTRY_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py",
+)
+
+
 def _entry_module():
     import importlib.util
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "__spark_entry__.py",
-    )
-    spec = importlib.util.spec_from_file_location("spark_entry", path)
+    spec = importlib.util.spec_from_file_location("spark_entry", ENTRY_PATH)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -106,3 +109,36 @@ def test_all_queries_run_and_match_oracles(spark):
             )
     assert not failures, "\n".join(failures)
 
+
+def _defined_names(node):
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return {node.name}
+    if isinstance(node, ast.Assign):
+        return {t.id for t in node.targets if isinstance(t, ast.Name)}
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return {(a.asname or a.name).split(".")[0] for a in node.names
+                if a.name != "annotations"}
+    return set()
+
+
+def test_every_entry_helper_is_used():
+    """Every top-level name of the driver module (query, oracle text,
+    helper, import) is read somewhere outside its own definition; only
+    the three contract functions stand alone. A query dropped from
+    queries() must take its helpers and its oracle text with it."""
+    with open(ENTRY_PATH, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    loaded = {}
+    for node in tree.body:
+        own = _defined_names(node)
+        for n in ast.walk(node):
+            if (isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+                    and n.id not in own):
+                loaded[n.id] = True
+    unused = sorted(
+        name for node in tree.body for name in _defined_names(node)
+        if name not in loaded
+        and name not in ("entry", "queries", "oracle_sql")
+    )
+    assert not unused, (
+        "unused top-level names in __spark_entry__.py: %s" % unused)

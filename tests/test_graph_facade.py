@@ -207,7 +207,7 @@ def test_refused_text_raises_on_every_call_and_is_not_kept(g, lowerings):
     from rdf_converter_spark.operators.sparql_text import SparqlSyntaxError
 
     now = "SELECT ?s ?t WHERE { ?s ?p ?o BIND (NOW() AS ?t) }"
-    # a Spark function that would pass through the rewrite
+    # a Spark function that is no SPARQL builtin
     draw = "SELECT ?s WHERE { ?s ?p ?o FILTER (random() < 0.5) }"
     for _ in range(2):
         with pytest.raises(SparqlSyntaxError, match="NOW"):
@@ -222,6 +222,67 @@ def test_refused_text_raises_on_every_call_and_is_not_kept(g, lowerings):
     with pytest.raises(ValueError, match="Update"):
         g.update(NAMES)
     assert lowerings == ["select"]
+
+
+def _chars(text):
+    """``text`` spelled as a Spark SQL expression with no quote."""
+    return "concat(%s)" % ",".join("chr(%d)" % ord(c) for c in text)
+
+
+def test_text_cannot_reach_arbitrary_spark_sql(g, lowerings):
+    """A SPARQL text reaches Spark only through the builtins it
+    lowers: another function call or bare word is refused, and IRI or
+    string text stays data even when it holds quotes and
+    backslashes."""
+    from rdf_converter_spark.operators.sparql_text import SparqlSyntaxError
+
+    bind = "SELECT ?u WHERE { ?s ?p ?o BIND (%s AS ?u) }"
+    call = bind % ('reflect("java.lang.System","getProperty",'
+                   '"java.version")')
+    for _ in range(2):
+        with pytest.raises(SparqlSyntaxError, match="REFLECT"):
+            g.query(call)
+        with pytest.raises(SparqlSyntaxError, match="current_user"):
+            g.query(bind % "current_user")
+    assert g._prepared == {} and lowerings == []
+
+    iri = ("x'||reflect('java.lang.System','getProperty',"
+           "'java.version')||'")
+    sql = "java_method(%s,%s,%s)" % (
+        _chars("java.lang.System"), _chars("getProperty"),
+        _chars("java.version"))
+    for term, value in (
+            ("<%s>" % iri, iri),
+            ('"x\\\\\' || %s --"' % sql, "x\\' || %s --" % sql)):
+        got = g.query("SELECT DISTINCT ?u WHERE "
+                      "{ ?s ?p ?o BIND (%s AS ?u) }" % term)
+        assert [r.u for r in got.collect()] == [value]
+
+
+@pytest.fixture()
+def lit_g(spark):
+    rows = [(EX + "s%d" % i, EX + "name", o, False, None, None)
+            for i, o in enumerate(("O'Brien", "C:\\dir", "what?x",
+                                   "colour"))]
+    df = spark.createDataFrame(
+        rows,
+        "subj string, pred string, obj string, obj_is_uri boolean, "
+        "obj_lang string, obj_datatype string",
+    )
+    return SparkGraph(df)
+
+
+@pytest.mark.parametrize("cond, hit", [
+    ('?o = "O\'Brien"', "s0"),
+    ('?o = "C:\\\\dir"', "s1"),
+    ('?o = "what?x"', "s2"),
+    ('regex(?o, "^colou?r$")', "s3"),
+])
+def test_filter_literal_text_is_matched_as_written(lit_g, cond, hit):
+    # ?x is bound, so a '?x' read inside a literal would be rewritten
+    got = lit_g.query("PREFIX ex: <http://ex.org/> SELECT ?x WHERE "
+                      "{ ?x ex:name ?o FILTER (%s) }" % cond)
+    assert [r.x for r in got.collect()] == [EX + hit]
 
 
 def test_oldest_text_is_lowered_again_past_the_bound(g, lowerings):

@@ -3,10 +3,9 @@
 Walks `import` statements with `ast` (no module is executed, no Spark
 session is started) from the four roots the KG is built and served
 through, and asserts that each module under `rdf_converter_spark/` is
-reached from them or is one of the named exceptions (kept on purpose,
-or toolkit modules whose deletion is still queued). A module that
-nothing reaches is dead weight for the graph: delete it with its tests,
-or add it here with a reason.
+reached from them or is one of the named exceptions, each kept on
+purpose with its reason. A module that nothing reaches is dead weight
+for the graph: delete it with its tests, or add it here with a reason.
 """
 from __future__ import annotations
 
@@ -33,27 +32,6 @@ EXCEPTIONS = {
     "rdf_converter_spark.operators.r2rml":
         "R2RML mapping engine, the model for writing emission as data",
 }
-
-# Training-data toolkit modules still exercised by their own tests and,
-# all but multimodal, by driver queries; ROADMAP item 1 deletes them in
-# a later change.
-DEFERRED = {
-    "rdf_converter_spark.operators.multimodal":
-        "PPM header parse and nearest-neighbor resize",
-    "rdf_converter_spark.operators.curation":
-        "corpus splits, quotas, packing and decontamination",
-    "rdf_converter_spark.operators.urlkit":
-        "URL canonicalization, imported by curation",
-    "rdf_converter_spark.operators.asof":
-        "as-of join over event tables",
-    "rdf_converter_spark.operators.events":
-        "event deltas and point-in-interval joins",
-    "rdf_converter_spark.operators.graph":
-        "degrees, triangles, PageRank and label propagation over links",
-    "rdf_converter_spark.sources.warc":
-        "WARC record reader and writer",
-}
-
 
 def _module_files() -> dict:
     out = {}
@@ -115,10 +93,10 @@ def reached_modules() -> set:
 def test_every_package_module_is_reached_from_the_kg():
     modules = set(_module_files())
     reached = reached_modules()
-    unreached = sorted(modules - reached - set(EXCEPTIONS) - set(DEFERRED))
+    unreached = sorted(modules - reached - set(EXCEPTIONS))
     assert not unreached, (
         f"{len(unreached)} package modules are imported by none of "
         f"{[str(r.relative_to(REPO)) for r in ROOTS]}: {unreached}")
-    for name, reason in {**EXCEPTIONS, **DEFERRED}.items():
+    for name, reason in EXCEPTIONS.items():
         assert name in modules, f"{name} ({reason}) no longer exists"
         assert name not in reached, f"{name} is reached; drop its exception"

@@ -107,23 +107,6 @@ def test_dedup_is_partial_aggregate(spark, routed):
     assert n_aggs >= 2, plan
 
 
-def test_degree_stats_single_pass(spark):
-    """degree_stats must read its input ONCE (explode, not a union of
-    two selects that would duplicate the upstream subtree) and
-    partially aggregate before the exchange."""
-    from pyspark.sql import functions as F
-
-    from rdf_converter_spark.operators.graph import degree_stats
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3)], "src long, dst long"
-    )
-    plan = _plan(degree_stats(edges))
-    assert plan.count("Generate explode") == 1, plan
-    assert "Union" not in plan, plan
-    assert "partial_sum" in plan, plan
-
-
 def test_upsert_store_side_never_shuffles(spark):
     """merge.py contract: the anti-join broadcasts the bounded delta
     key set, so the 10^12-row store side has NO exchange; dedup is
