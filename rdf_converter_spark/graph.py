@@ -49,8 +49,8 @@ Deliberate divergences from rdflib, all scale-driven:
   and broadcast stages already materialized, and nothing is parsed,
   lowered or planned again. An answer is a snapshot of this graph,
   which is immutable, and a text fully determines it
-  (``sparql_text`` refuses NOW/RAND/UUID/STRUUID/BNODE and Spark's
-  clock and random functions); a text that raises is not kept. An
+  (``sparql_text`` refuses NOW/RAND/UUID/STRUUID/BNODE and lets no
+  other Spark function through); a text that raises is not kept. An
   entry keeps alive its plans, their shuffle files and broadcasts,
   and the ``localCheckpoint`` blocks of a distributed path closure,
   for the life of the graph. So at most ``_PREPARED_MAX`` texts are

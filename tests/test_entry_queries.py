@@ -128,13 +128,13 @@ def test_every_entry_helper_is_used():
     queries() must take its helpers and its oracle text with it."""
     with open(ENTRY_PATH, encoding="utf-8") as fh:
         tree = ast.parse(fh.read())
-    loaded = {}
+    loaded = set()
     for node in tree.body:
         own = _defined_names(node)
         for n in ast.walk(node):
             if (isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
                     and n.id not in own):
-                loaded[n.id] = True
+                loaded.add(n.id)
     unused = sorted(
         name for node in tree.body for name in _defined_names(node)
         if name not in loaded
