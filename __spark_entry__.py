@@ -1748,42 +1748,6 @@ def q_cc_components(spark, sf_dir):
     )
 
 
-def q_triple_upsert(spark, sf_dir):
-    """Incremental KG maintenance: a delta batch REPLACES all base
-    objects per (subj, pred) it mentions, NULL-obj rows are group
-    tombstones (operators/merge.py). Base = customer/status triples
-    of every order; delta = status updates for orderkey%10 plus
-    customer tombstones for orderkey%100."""
-    from rdf_converter_spark.operators.merge import upsert_triples
-
-    orders = _t(spark, sf_dir, "orders")
-    subj = F.concat(F.lit("o:"), F.col("o_orderkey").cast("string"))
-    base = orders.select(
-        subj.alias("subj"),
-        F.lit("customer").alias("pred"),
-        F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("obj"),
-    ).unionByName(
-        orders.select(
-            subj.alias("subj"),
-            F.lit("status").alias("pred"),
-            F.col("o_orderstatus").alias("obj"),
-        )
-    )
-    upd = orders.filter(F.col("o_orderkey") % 10 == 0).select(
-        subj.alias("subj"),
-        F.lit("status").alias("pred"),
-        F.lit("UPDATED").alias("obj"),
-    )
-    tomb = orders.filter(F.col("o_orderkey") % 100 == 0).select(
-        subj.alias("subj"),
-        F.lit("customer").alias("pred"),
-        F.lit(None).cast("string").alias("obj"),
-    )
-    return upsert_triples(base, upd.unionByName(tomb)).orderBy(
-        "subj", "pred", "obj"
-    )
-
-
 def q_skew_salted_join(spark, sf_dir):
     """Hub-key-safe fact⋈dim join: events (event_type is a classic
     power-law key — a handful of types carry most rows) joined to a
@@ -1844,40 +1808,6 @@ def q_star_join_revenue(spark, sf_dir):
         )
         .orderBy(F.col("revenue").desc(), "n_name")
     )
-
-
-def q_snapshot_diff(spark, sf_dir):
-    """CDC between two KG snapshots derived from orders: the new
-    snapshot updates status for orderkey%10 and drops customer
-    triples for orderkey%100 — the diff is exactly those rows,
-    labeled added/removed, via ONE full-outer join."""
-    from rdf_converter_spark.operators.merge import snapshot_diff
-
-    orders = _t(spark, sf_dir, "orders")
-    subj = F.concat(F.lit("o:"), F.col("o_orderkey").cast("string"))
-    old = orders.select(
-        subj.alias("subj"),
-        F.lit("customer").alias("pred"),
-        F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("obj"),
-    ).unionByName(
-        orders.select(
-            subj.alias("subj"),
-            F.lit("status").alias("pred"),
-            F.col("o_orderstatus").alias("obj"),
-        )
-    )
-    new = old.filter(
-        ~((F.col("pred") == "customer")
-          & (F.expr("CAST(substr(subj, 3) AS BIGINT) % 100 = 0")))
-    ).withColumn(
-        "obj",
-        F.when(
-            (F.col("pred") == "status")
-            & F.expr("CAST(substr(subj, 3) AS BIGINT) % 10 = 0"),
-            F.lit("UPDATED"),
-        ).otherwise(F.col("obj")),
-    )
-    return snapshot_diff(old, new).orderBy("subj", "pred", "obj", "change")
 
 
 def kg_web_pipeline(spark, sf_dir):
@@ -2832,163 +2762,6 @@ ORDER BY subj, pred, obj, obj_is_uri, dtype, graph_n
 """ % {"xsd": _XSD_NS}
 
 
-def q_rdfxml_parse(spark, sf_dir):
-    """RDF/XML reader round trip (sources/rdfxml.py — rdflib's
-    default serialization): per document the in-plan XML exercises a
-    typed node element (=> rdf:type), a property ATTRIBUTE, inherited
-    + overriding xml:lang, rdf:datatype, rdf:resource with xml:base
-    relative resolution, and XML entity escaping in literal content.
-    The oracle predicts the triple multiset arithmetically (the
-    parser unescapes, so the oracle sees the raw text)."""
-    from rdf_converter_spark.sources.rdfxml import parse_rdfxml_docs
-
-    base = "http://kg.test/"
-    onto = base + "ontology#"
-    docs = _t(spark, sf_dir, "documents")
-    # XML line-ending normalization folds \r; scrub it on BOTH sides
-    text20 = F.regexp_replace(
-        F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 20),
-        "\r", "")
-    esc = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(text20, "&", "&amp;"), "<", "&lt;"),
-        ">", "&gt;")
-    lang_nn = F.coalesce(F.col("lang"), F.lit("und"))
-    did = F.col("doc_id").cast("string")
-    xml = F.concat(
-        F.lit('<?xml version="1.0"?>\n<rdf:RDF xmlns:rdf='
-              '"http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-              'xmlns:o="' + onto + '" xml:base="' + base
-              + '" xml:lang="'),
-        lang_nn,
-        F.lit('">\n  <o:Doc rdf:about="doc/'), did,
-        F.lit('" o:short="s'), (F.col("doc_id") % 5).cast("string"),
-        F.lit('">\n    <o:text>'), esc,
-        F.lit('</o:text>\n    <o:rank rdf:datatype="'
-              'http://www.w3.org/2001/XMLSchema#integer">'),
-        (F.col("doc_id") % 3).cast("string"),
-        F.lit('</o:rank>\n    <o:source rdf:resource="source/'),
-        (F.col("doc_id") % 7).cast("string"),
-        F.lit('"/>\n    <o:label xml:lang="sv">L'),
-        (F.col("doc_id") % 2).cast("string"),
-        F.lit("</o:label>\n  </o:Doc>\n</rdf:RDF>\n"),
-    )
-    parsed = parse_rdfxml_docs(docs.select(xml.alias("value")))
-    return parsed.select(
-        "subj", "pred", "obj", "obj_is_uri",
-        F.coalesce("obj_lang", F.lit("")).alias("lang_tag"),
-        F.coalesce("obj_datatype", F.lit("")).alias("dtype"),
-    ).orderBy("subj", "pred", "obj", "obj_is_uri", "lang_tag",
-              "dtype")
-
-
-_RDFXML_PARSE_ORACLE = """
-WITH d AS (
-  SELECT 'http://kg.test/doc/' || doc_id AS doc,
-         coalesce(lang, 'und') AS lang,
-         replace(substr(coalesce(text, ''), 1, 20), chr(13), '')
-           AS payload,
-         's' || (doc_id %% 5) AS short,
-         CAST(doc_id %% 3 AS VARCHAR) AS d3,
-         'http://kg.test/source/' || (doc_id %% 7) AS src,
-         'L' || (doc_id %% 2) AS label
-  FROM documents
-)
-SELECT subj, pred, obj, obj_is_uri, lang_tag, dtype FROM (
-  SELECT doc AS subj, '%(rdf)stype' AS pred,
-         'http://kg.test/ontology#Doc' AS obj, TRUE AS obj_is_uri,
-         '' AS lang_tag, '' AS dtype FROM d
-  UNION ALL SELECT doc, 'http://kg.test/ontology#short', short,
-         FALSE, lang, '' FROM d
-  UNION ALL SELECT doc, 'http://kg.test/ontology#text', payload,
-         FALSE, lang, '' FROM d
-  UNION ALL SELECT doc, 'http://kg.test/ontology#rank', d3, FALSE,
-         '', '%(xsd)sinteger' FROM d
-  UNION ALL SELECT doc, 'http://kg.test/ontology#source', src, TRUE,
-         '', '' FROM d
-  UNION ALL SELECT doc, 'http://kg.test/ontology#label', label,
-         FALSE, 'sv', '' FROM d
-)
-ORDER BY subj, pred, obj, obj_is_uri, lang_tag, dtype
-""" % {"xsd": _XSD_NS, "rdf": _RDF_SYN}
-
-
-def q_jsonld_extract(spark, sf_dir):
-    """schema.org JSON-LD islands out of crawled HTML
-    (sources/jsonld.py jsonld_from_html): per document the in-plan
-    page embeds ONE valid ld+json island — built with ``to_json`` so
-    the JSON string escaping is the real thing — and one BROKEN
-    island that the crawl-default ``on_error='drop'`` must skip
-    without losing the page. Exercises @vocab+@language contexts,
-    @type expansion, integer/double/string scalars (double in the
-    JSON-LD canonical xsd:double lexical form). The oracle predicts
-    the triple multiset arithmetically."""
-    from rdf_converter_spark.sources.jsonld import jsonld_from_html
-
-    onto = "http://kg.test/ontology#"
-    docs = _t(spark, sf_dir, "documents")
-    text20 = F.regexp_replace(
-        F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 20),
-        "\r", "")
-    lang_nn = F.coalesce(F.col("lang"), F.lit("und"))
-    did = F.col("doc_id").cast("string")
-    island = F.to_json(F.struct(
-        F.struct(
-            F.lit(onto).alias("@vocab"),
-            lang_nn.alias("@language"),
-        ).alias("@context"),
-        F.concat(F.lit("http://kg.test/doc/"), did).alias("@id"),
-        F.lit("Doc").alias("@type"),
-        text20.alias("text"),
-        (F.col("doc_id") % 3).alias("rank"),
-        ((F.col("doc_id") % 4) + F.lit(0.5)).alias("score"),
-    ))
-    html = F.concat(
-        F.lit('<html><head><script type="application/ld+json">'),
-        island,
-        F.lit('</script><script type="application/ld+json">'
-              "{broken</script></head><body>x</body></html>"),
-    )
-    pages = docs.select(
-        F.concat(F.lit("http://kg.test/page/"), did).alias("url"),
-        html.alias("html"),
-    )
-    out = jsonld_from_html(pages)  # on_error='drop' is the default
-    return out.select(
-        "page_url", "subj", "pred", "obj", "obj_is_uri",
-        F.coalesce("obj_lang", F.lit("")).alias("lang_tag"),
-        F.coalesce("obj_datatype", F.lit("")).alias("dtype"),
-    ).orderBy("page_url", "subj", "pred", "obj", "obj_is_uri",
-              "lang_tag", "dtype")
-
-
-_JSONLD_EXTRACT_ORACLE = """
-WITH d AS (
-  SELECT 'http://kg.test/page/' || doc_id AS page,
-         'http://kg.test/doc/' || doc_id AS doc,
-         coalesce(lang, 'und') AS lang,
-         replace(substr(coalesce(text, ''), 1, 20), chr(13), '')
-           AS payload,
-         CAST(doc_id %% 3 AS VARCHAR) AS d3,
-         CASE doc_id %% 4 WHEN 0 THEN '5.0E-1' WHEN 1 THEN '1.5E0'
-              WHEN 2 THEN '2.5E0' ELSE '3.5E0' END AS score
-  FROM documents
-)
-SELECT page_url, subj, pred, obj, obj_is_uri, lang_tag, dtype FROM (
-  SELECT page AS page_url, doc AS subj, '%(rdf)stype' AS pred,
-         'http://kg.test/ontology#Doc' AS obj, TRUE AS obj_is_uri,
-         '' AS lang_tag, '' AS dtype FROM d
-  UNION ALL SELECT page, doc, 'http://kg.test/ontology#text',
-         payload, FALSE, lang, '' FROM d
-  UNION ALL SELECT page, doc, 'http://kg.test/ontology#rank', d3,
-         FALSE, '', '%(xsd)sinteger' FROM d
-  UNION ALL SELECT page, doc, 'http://kg.test/ontology#score',
-         score, FALSE, '', '%(xsd)sdouble' FROM d
-)
-ORDER BY page_url, subj, pred, obj, obj_is_uri, lang_tag, dtype
-""" % {"xsd": _XSD_NS, "rdf": _RDF_SYN}
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: KG triple construction
     over the star schema via the engine's emission operators."""
@@ -3013,8 +2786,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sparql_text_termfns": q_sparql_text_termfns,
         "turtle_rich": q_turtle_rich,
         "trig_parse": q_trig_parse,
-        "rdfxml_parse": q_rdfxml_parse,
-        "jsonld_extract": q_jsonld_extract,
         "sparql_text_from": q_sparql_text_from,
         "graph_isomorphism": q_graph_isomorphism,
         # -- last verified in CORRECTNESS_r03 --------------------------
@@ -3062,8 +2833,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- verified green in CORRECTNESS_r05 -------------------------
         "skew_salted_join": q_skew_salted_join,
         "star_join_revenue": q_star_join_revenue,
-        "triple_upsert": q_triple_upsert,
-        "snapshot_diff": q_snapshot_diff,
         "sparql_text": q_sparql_text,
         "sparql_text_path": q_sparql_text_path,
         "sparql_text_quads": q_sparql_text_quads,
@@ -3096,8 +2865,6 @@ def oracle_sql() -> dict[str, str]:
         "turtle_parse": _TURTLE_PARSE_ORACLE,
         "turtle_rich": _TURTLE_RICH_ORACLE,
         "trig_parse": _TRIG_PARSE_ORACLE,
-        "rdfxml_parse": _RDFXML_PARSE_ORACLE,
-        "jsonld_extract": _JSONLD_EXTRACT_ORACLE,
         "bgp_match": _BGP_ORACLE,
         "bgp_optional": _BGP_OPTIONAL_ORACLE,
         "property_table": _PROPERTY_TABLE_ORACLE,
@@ -3285,69 +3052,6 @@ def oracle_sql() -> dict[str, str]:
               ('yle_flow', 8)
             ) AS t(graph, n_triples)
             ORDER BY graph
-        """,
-        "triple_upsert": """
-            WITH base AS (
-                SELECT 'o:' || CAST(o_orderkey AS VARCHAR) AS subj,
-                       'customer' AS pred,
-                       'c:' || CAST(o_custkey AS VARCHAR) AS obj
-                FROM orders
-                UNION ALL
-                SELECT 'o:' || CAST(o_orderkey AS VARCHAR), 'status',
-                       o_orderstatus
-                FROM orders
-            ),
-            delta AS (
-                SELECT 'o:' || CAST(o_orderkey AS VARCHAR) AS subj,
-                       'status' AS pred, 'UPDATED' AS obj
-                FROM orders WHERE o_orderkey % 10 = 0
-                UNION ALL
-                SELECT 'o:' || CAST(o_orderkey AS VARCHAR), 'customer',
-                       NULL
-                FROM orders WHERE o_orderkey % 100 = 0
-            ),
-            keys AS (SELECT DISTINCT subj, pred FROM delta),
-            kept AS (SELECT b.* FROM base b
-                     ANTI JOIN keys k USING (subj, pred))
-            SELECT DISTINCT subj, pred, obj FROM (
-                SELECT * FROM kept
-                UNION ALL
-                SELECT * FROM delta WHERE obj IS NOT NULL
-            ) ORDER BY subj, pred, obj
-        """,
-        "snapshot_diff": """
-            WITH old AS (
-                SELECT 'o:' || CAST(o_orderkey AS VARCHAR) AS subj,
-                       'customer' AS pred,
-                       'c:' || CAST(o_custkey AS VARCHAR) AS obj
-                FROM orders
-                UNION ALL
-                SELECT 'o:' || CAST(o_orderkey AS VARCHAR), 'status',
-                       o_orderstatus
-                FROM orders
-            ),
-            new AS (
-                SELECT subj, pred,
-                       CASE WHEN pred = 'status'
-                                 AND CAST(substr(subj, 3) AS BIGINT)
-                                     % 10 = 0
-                            THEN 'UPDATED' ELSE obj END AS obj
-                FROM old
-                WHERE NOT (pred = 'customer'
-                           AND CAST(substr(subj, 3) AS BIGINT)
-                               % 100 = 0)
-            ),
-            o AS (SELECT DISTINCT subj, pred, obj FROM old),
-            n AS (SELECT DISTINCT subj, pred, obj FROM new)
-            SELECT coalesce(o.subj, n.subj) AS subj,
-                   coalesce(o.pred, n.pred) AS pred,
-                   coalesce(o.obj, n.obj) AS obj,
-                   CASE WHEN o.subj IS NULL THEN 'added'
-                        ELSE 'removed' END AS change
-            FROM o FULL JOIN n
-              ON o.subj = n.subj AND o.pred = n.pred AND o.obj = n.obj
-            WHERE o.subj IS NULL OR n.subj IS NULL
-            ORDER BY subj, pred, obj, change
         """,
         "star_join_revenue": """
             SELECT n_name,

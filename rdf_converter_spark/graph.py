@@ -131,17 +131,9 @@ class SparkGraph:
             return cls(read_turtle(spark, path))
         if format == "trig":
             return cls(read_trig(spark, path).drop("graph"))
-        if format in ("xml", "rdfxml", "pretty-xml", "application/rdf+xml"):
-            from .sources.rdfxml import read_rdfxml
-
-            return cls(read_rdfxml(spark, path))
-        if format in ("json-ld", "jsonld", "application/ld+json"):
-            from .sources.jsonld import read_jsonld
-
-            return cls(read_jsonld(spark, path))
         raise ValueError(
             "unsupported parse format %r (nt / nquads / turtle / "
-            "trig / xml / json-ld)" % format)
+            "trig)" % format)
 
     # -- rdflib-style read surface --------------------------------------
     def __len__(self) -> int:
@@ -286,13 +278,5 @@ class SparkGraph:
             if distributed:
                 return export.to_turtle_distributed(self.df, path)
             return export.to_turtle(self.df, path)
-        if format in ("xml", "rdfxml", "pretty-xml"):
-            if distributed:
-                raise ValueError(
-                    "distributed RDF/XML output is not supported "
-                    "(document-scoped syntax) — serialize "
-                    "format='nt' with distributed=True instead")
-            return export.to_rdfxml(self.df, path)
         raise ValueError(
-            "unsupported serialize format %r (turtle / nt / xml)"
-            % format)
+            "unsupported serialize format %r (turtle / nt)" % format)

@@ -833,10 +833,9 @@ def update_where(
     pure function: evaluate the WHERE pattern once, instantiate both
     templates from the solution bindings, and return the NEW triple
     table — input minus the instantiated deletes, plus the
-    instantiated inserts. The caller persists it (snapshot write, or
-    :func:`operators.merge.upsert_triples` for the incremental
-    store); keeping the operator functional is what makes it safe to
-    re-run from a checkpoint.
+    instantiated inserts. The caller persists it; keeping the
+    operator functional is what makes it safe to re-run from a
+    checkpoint.
 
     ``delete`` templates are ``(s, p, o)`` with ``?var`` references —
     instantiations are removed by an anti-join on the triple key.

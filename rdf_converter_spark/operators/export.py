@@ -308,100 +308,3 @@ def to_nquads_distributed(quads: DataFrame, path: str) -> None:
     both write and re-read line-parallel (see ``sources/rdf.py``)."""
     lines = quads.select(nq_line().alias("value"))
     lines.sortWithinPartitions("value").write.mode("overwrite").text(path)
-
-
-_NCNAME_TAIL = re.compile(r"[A-Za-z_][A-Za-z0-9_.\-]*$")
-
-
-def _xml_split(uri: str):
-    """(namespace, local) where local is the longest NCName-shaped
-    suffix — the split every RDF/XML serializer needs because
-    predicates must be QNames. Raises when no valid local part
-    exists (e.g. the IRI ends in '/' or a digit-leading segment)."""
-    m = _NCNAME_TAIL.search(uri)
-    if not m or m.start() == 0:
-        raise ValueError(
-            "cannot serialize %r as an RDF/XML property element "
-            "(no NCName suffix to split on)" % uri)
-    # '.' and '-' may not START an NCName but the regex anchors on a
-    # letter/underscore already; also keep at least one char of ns
-    return uri[:m.start()], uri[m.start():]
-
-
-def _xml_escape(s: str, attr: bool = False) -> str:
-    s = (s.replace("&", "&amp;").replace("<", "&lt;")
-         .replace(">", "&gt;"))
-    if attr:
-        s = s.replace('"', "&quot;").replace("\n", "&#10;").replace(
-            "\t", "&#9;").replace("\r", "&#13;")
-    else:
-        s = s.replace("\r", "&#13;")
-    return s
-
-
-def to_rdfxml(triples: DataFrame, path: str) -> int:
-    """Driver-sized deterministic RDF/XML writer in the flat
-    ``rdf:Description`` form rdflib emits by default: one element
-    per subject (sorted), property elements with ``rdf:resource`` /
-    ``rdf:nodeID`` / ``rdf:datatype`` / ``xml:lang``, blank subjects
-    as ``rdf:nodeID``. Round-trips through
-    ``sources/rdfxml.py:read_rdfxml``. No distributed variant — at
-    scale serialize N-Triples (line-parallel both ways)."""
-    rows = _collect_capped(triples)
-    ns_ids: dict = {}
-
-    def qn(uri: str):
-        ns, local = _xml_split(uri)
-        if ns not in ns_ids:
-            ns_ids[ns] = "n%d" % len(ns_ids)
-        return "%s:%s" % (ns_ids[ns], local), ns
-
-    by_subj: dict = {}
-    for r in rows:
-        by_subj.setdefault(r["subj"], []).append(r)
-    body = []
-    for subj in sorted(by_subj):
-        if subj.startswith("_:"):
-            open_tag = '  <rdf:Description rdf:nodeID="%s">' % (
-                _xml_escape(subj[2:], attr=True))
-        else:
-            open_tag = '  <rdf:Description rdf:about="%s">' % (
-                _xml_escape(subj, attr=True))
-        body.append(open_tag)
-        items = sorted(
-            ((r["pred"], r["obj"], bool(r["obj_is_uri"]),
-              r["obj_lang"], r["obj_datatype"])
-             for r in by_subj[subj]),
-            key=lambda t: (t[0], t[1], t[3] or "", t[4] or ""))
-        for pred, obj, is_uri, lang, dt in items:
-            tag, _ = qn(pred)
-            if is_uri:
-                if obj.startswith("_:"):
-                    body.append('    <%s rdf:nodeID="%s"/>' % (
-                        tag, _xml_escape(obj[2:], attr=True)))
-                else:
-                    body.append('    <%s rdf:resource="%s"/>' % (
-                        tag, _xml_escape(obj, attr=True)))
-            elif dt:
-                body.append('    <%s rdf:datatype="%s">%s</%s>' % (
-                    tag, _xml_escape(dt, attr=True),
-                    _xml_escape(obj), tag))
-            elif lang:
-                body.append('    <%s xml:lang="%s">%s</%s>' % (
-                    tag, _xml_escape(lang, attr=True),
-                    _xml_escape(obj), tag))
-            else:
-                body.append('    <%s>%s</%s>' % (
-                    tag, _xml_escape(obj), tag))
-        body.append("  </rdf:Description>")
-    decls = "".join(
-        '\n    xmlns:%s="%s"' % (ns_ids[ns], _xml_escape(ns, attr=True))
-        for ns in sorted(ns_ids, key=ns_ids.get))
-    out = (
-        '<?xml version="1.0" encoding="utf-8"?>\n'
-        '<rdf:RDF\n    xmlns:rdf='
-        '"http://www.w3.org/1999/02/22-rdf-syntax-ns#"%s>\n%s\n'
-        "</rdf:RDF>\n" % (decls, "\n".join(body)))
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write(out)
-    return len(rows)

@@ -236,8 +236,8 @@ def rdfs_entail_incremental(
     join against the store — ``closed`` never exchanges; the result
     is ``(closed \\ new) ∪ new``, i.e. exactly
     ``rdfs_entail(source(closed) ∪ delta)`` as a set, at delta cost.
-    Mirrors the bounded-delta merge contract of
-    ``operators/merge.py:upsert_triples``.
+    Mirrors the broadcast of batch-sized key sets in
+    ``streaming/incremental.py:merge_batch``.
 
     ``closed`` must be a previously materialized closure over the
     SAME schema (``schema_triples``: the subClassOf / subPropertyOf /

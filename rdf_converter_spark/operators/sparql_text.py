@@ -282,6 +282,9 @@ class _P:
         # companion columns (bgp_match's term_meta hook)
         self.meta_stack: list = []
         self.in_projection = False
+        # set when a projection expression calls an aggregate; read
+        # from the function token, so a literal "count(" is no call
+        self.aggregated = False
 
     # -- token plumbing -------------------------------------------------
     def peek(self, k: int = 0) -> Tuple[str, str]:
@@ -609,6 +612,18 @@ class _P:
                 elif fn in _FN_MAP:
                     parts.append(self._builtin_call(fn))
                 elif fn in _AGG_FNS or fn == "cast":
+                    if self.in_projection and fn in _AGG_FNS:
+                        # COUNT/SUM/MIN/MAX/AVG nest fine inside a
+                        # larger Spark aggregate expression;
+                        # GROUP_CONCAT/SAMPLE are rewritten only when
+                        # they ARE the projection (_proj_expr)
+                        if fn in ("group_concat", "sample"):
+                            raise SparqlSyntaxError(
+                                "GROUP_CONCAT/SAMPLE nested inside a "
+                                "larger expression is not supported — "
+                                "project the bare aggregate "
+                                "(... AS ?var) and post-process it")
+                        self.aggregated = True
                     parts.append(v)
                 else:
                     # only the builtins above reach Spark: any other
@@ -1053,6 +1068,7 @@ def _select_spec(p: "_P") -> dict:
         p.next()  # REDUCED may drop dups; treating as plain is legal
     proj: List[Tuple[str, Optional[str]]] = []
     star = False
+    p.aggregated = False
     while True:
         tk, tv = p.peek()
         if tk == "var":
@@ -1080,6 +1096,7 @@ def _select_spec(p: "_P") -> dict:
         raise SparqlSyntaxError("SELECT needs a projection")
     spec["star"] = star
     spec["projection"] = proj
+    spec["aggregated"] = p.aggregated
     _dataset_clause(p, spec)
     if p.at_kw("where"):
         p.next()
@@ -1233,6 +1250,7 @@ def _proj_expr(p: _P) -> str:
     SPARQL-ish text for bgp_aggregate) or a scalar expression."""
     k, v = p.peek()
     if k == "word" and v.lower() in _AGG_FNS:
+        p.aggregated = True
         fn = p.next()[1].lower()
         p.eat_punct("(")
         inner = []
@@ -1706,24 +1724,10 @@ def _exec_select(triples: DataFrame, spec: dict,
             "move the dataset clause to the outer query")
     g = spec["group"]
     exprs = [(n, e) for n, e in spec["projection"] if e is not None]
-    # detect aggregate calls ANYWHERE in the expression (ADVICE r5:
-    # a match() anchored at the start missed `(1 + COUNT(?x) AS ?n)`
-    # and surfaced an opaque AnalysisException from the scalar
-    # withColumn path). COUNT/SUM/MIN/MAX/AVG nest fine inside a
-    # larger Spark aggregate expression; GROUP_CONCAT/SAMPLE are
-    # rewritten only when they ARE the projection, so nested uses
-    # raise a clear error instead of reaching Spark unrewritten.
-    has_agg = bool(spec["group_by"]) or any(
-        re.search(r"\b(count|sum|min|max|avg|array_join)\s*\(", e,
-                  re.IGNORECASE)
-        for _, e in exprs)
-    for n, e in exprs:
-        if re.search(r"\b(group_concat|sample)\s*\(", e, re.IGNORECASE):
-            raise SparqlSyntaxError(
-                "GROUP_CONCAT/SAMPLE nested inside a larger "
-                "expression is not supported — project the bare "
-                "aggregate (... AS ?%s) and post-process it" % n)
-    if has_agg:
+    # an aggregate call ANYWHERE in a projection expression routes to
+    # the aggregate path, e.g. `(1 + COUNT(?x) AS ?n)` (the parser
+    # records it)
+    if spec["group_by"] or spec["aggregated"]:
         if spec["star"]:
             raise SparqlSyntaxError("SELECT * with aggregates")
         aggregates = {n: e for n, e in exprs}

@@ -8,9 +8,9 @@ tool, e.g. the reference's rdflib ``serialize(format='nt')`` — can be
 re-ingested as a 6-column triple table. N-Triples is the one RDF
 syntax that is line-oriented, which makes it the natural Spark input
 format: ``spark.read.text`` splits on newlines, so a 100 TB dump
-parallelizes like any text corpus (Turtle/JSON-LD are document-scoped
-and would need whole-file reads; convert those with a streaming tool
-first).
+parallelizes like any text corpus (Turtle and TriG are
+document-scoped and are read whole-file: :func:`read_turtle`,
+:func:`read_trig`).
 
 Parsing strategy (same split as the CSV/XML kernels in
 ``sources/units.py``: structure JVM-side, irreducible per-value work

@@ -3,12 +3,12 @@
 
 The reference is strictly batch (full rematerialization per run); the
 web-scale generalization processes newly crawled pages as they land.
-``readStream`` over the web_pages location + ``foreachBatch`` reusing
-the exact batch volume-path (route -> parse -> emit -> dedup within
-batch) keeps one code path for both modes; the output table is
-append-only and the global set semantics are restored by the periodic
-batch dedup/canonicalization (or an Iceberg MERGE in a catalog
-deployment). Checkpointing makes the stream exactly-once at the sink.
+``stream_triples_upsert`` reads the web_pages location with
+``readStream`` and, per micro-batch, runs the batch volume path
+(route -> parse -> emit) and merges the batch's triples into a
+bucketed triple store (``merge_batch``). The stream's checkpoint makes
+each input file count once: a restarted stream reads only the files it
+has not committed.
 
 The volume path is narrower than a ``job.py`` build: it emits the
 program, PA and Yle triples, but no segment-time, flow-link or
@@ -24,41 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.emit import dedup_triples
-from ..operators.merge import KEY
 from ..pipelines.runner import build_triples_extraction
 from ..sources.route import route
 from ..sources.web_pages import WEB_PAGES_SCHEMA
 
-
-def stream_triples(
-    spark: SparkSession,
-    web_pages_path: str,
-    out_dir: str,
-    trigger_once: bool = True,
-    max_files_per_trigger: int = 64,
-):
-    """Start the incremental extraction stream; returns the query."""
-    reader = (
-        spark.readStream.schema(WEB_PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(web_pages_path)
-    )
-    sink_path = os.path.join(out_dir, "triples_stream")
-    ckpt_path = os.path.join(out_dir, "_stream_checkpoint")
-
-    def process_batch(batch_df, batch_id: int):
-        triples = build_triples_extraction(batch_df.sparkSession,
-                                           route(batch_df))
-        (
-            triples.write.mode("append").parquet(sink_path)
-        )
-
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", ckpt_path
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+KEY = ["subj", "pred"]
 
 
 def merge_batch(base: DataFrame, delta: DataFrame,
@@ -87,7 +57,8 @@ def merge_batch(base: DataFrame, delta: DataFrame,
         restated.join(F.broadcast(pages), "src_url", "left_anti")
         .select(*KEY).distinct()
     )
-    replaced = keys.join(shared, KEY, "left_anti")
+    # shared is a subset of keys: batch-sized like them
+    replaced = keys.join(F.broadcast(shared), KEY, "left_anti")
     kept = base.join(F.broadcast(replaced), KEY, "left_anti")
     return dedup_triples(kept.unionByName(delta))
 
@@ -102,8 +73,8 @@ def stream_triples_upsert(
     """Incremental extraction that MAINTAINS a triple store instead of
     appending: each micro-batch's triples merge into the store
     (``merge_batch``) — re-crawled pages update their entity's triples
-    in place, new pages add theirs, and nothing accumulates duplicates
-    awaiting a periodic dedup.
+    in place, new pages add theirs, and the store holds no duplicate
+    rows.
 
     Scale shape: the store is hash-bucketed on ``subj`` and written
     with DYNAMIC partition overwrite, so a micro-batch rewrites only
@@ -116,8 +87,9 @@ def stream_triples_upsert(
 
     Caveat: a batch whose merge leaves a touched bucket EMPTY writes
     no partition for it and dynamic overwrite leaves the stale bucket
-    in place — impossible here (extraction emits no tombstones), but
-    a deployment adding deletes needs the Iceberg MERGE path.
+    in place — impossible here (every touched bucket holds rows of the
+    batch itself), but a deployment adding deletes needs the Iceberg
+    MERGE path.
     """
     reader = (
         spark.readStream.schema(WEB_PAGES_SCHEMA)

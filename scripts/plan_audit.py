@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DEFAULT = [
     "kg_tpch_triples", "bgp_match", "sparql_text", "sparql_text_path",
     "sparql_text_quads", "sparql_text_subquery", "rdfs_entail",
-    "skew_salted_join", "triple_upsert", "star_join_revenue",
+    "skew_salted_join", "star_join_revenue",
     "sparql_text_multiunion", "sparql_text_graph_path",
 ]
 

@@ -81,36 +81,6 @@ def test_spark_submit_py_files(spark, corpus, tmp_path):
     assert rep.filter(rep.shape == "NoChannelIdShape").count() == n_viol
 
 
-def test_streaming_incremental(spark, corpus, tmp_path):
-    """Two micro-batches of newly-arrived pages -> appended triples,
-    exactly-once per input file via the stream checkpoint."""
-    from rdf_converter_spark.streaming.incremental import stream_triples
-
-    src = str(tmp_path / "incoming")
-    os.makedirs(src)
-    parts = sorted(glob.glob(os.path.join(corpus, "web_pages", "*.parquet")))
-    assert parts
-    shutil.copy(parts[0], src)
-
-    out = str(tmp_path / "stream_out")
-    q = stream_triples(spark, src, out, trigger_once=True)
-    q.awaitTermination(300)
-    sink = os.path.join(out, "triples_stream")
-    n1 = spark.read.parquet(sink).count()
-    assert n1 > 1000
-
-    # batch 2: the same file again must NOT reprocess (checkpoint);
-    # a genuinely new file must
-    shutil.copy(parts[0], os.path.join(src, "again.parquet"))
-    q = stream_triples(spark, src, out, trigger_once=True)
-    q.awaitTermination(300)
-    n2 = spark.read.parquet(sink).count()
-    assert n2 > n1  # new file processed
-    # same content twice -> extraction emits the same distinct set per
-    # batch, so batch2 appended at most n1 rows
-    assert n2 <= 2 * n1
-
-
 def test_salted_repartition_balances_hub_key(spark):
     """Skew guard (SURVEY §5.6): one key holding 50% of rows must not
     land in one partition after salting."""
@@ -134,8 +104,8 @@ def test_streaming_upsert_store(spark, corpus, tmp_path):
     """Maintained-store streaming: a re-delivered (re-crawled,
     unchanged) page batch must leave the bucketed triple store
     IDENTICAL (upsert replaces each (subj, pred) group with the same
-    content) — not grow it like the append sink; and the final store
-    must equal the batch extraction's distinct triple set."""
+    content); and the final store must equal the batch extraction's
+    distinct triple set."""
     from pyspark.sql import functions as F
 
     from rdf_converter_spark.pipelines.runner import build_triples_extraction
@@ -171,6 +141,18 @@ def test_streaming_upsert_store(spark, corpus, tmp_path):
     shutil.copy(parts[0], os.path.join(src, "recrawl.parquet"))
     q = stream_triples_upsert(spark, src, out)
     q.awaitTermination(300)
+    # exactly-once per input file: the restarted stream runs one batch,
+    # and the stream's log of the files that batch read holds only the
+    # new file, not the one its checkpoint committed. (numInputRows
+    # counts the batch's rows once per read of it, and the merge path
+    # reads the batch more than once.)
+    assert [p["batchId"] for p in q.recentProgress
+            if p["numInputRows"]] == [1]
+    log = os.path.join(out, "_upsert_checkpoint", "sources", "0", "1")
+    with open(log) as fh:
+        read = [json.loads(line)["path"]
+                for line in fh.read().splitlines()[1:]]
+    assert [os.path.basename(p) for p in read] == ["recrawl.parquet"]
     rows2 = sorted(
         map(tuple, spark.read.parquet(store).select(cols).collect())
     )

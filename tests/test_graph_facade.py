@@ -285,6 +285,17 @@ def test_filter_literal_text_is_matched_as_written(lit_g, cond, hit):
     assert [r.x for r in got.collect()] == [EX + hit]
 
 
+@pytest.mark.parametrize("text", ["count(", "sample(", "group_concat("])
+def test_projection_literal_text_is_no_call(lit_g, text):
+    # a call's name inside a literal neither makes the projection an
+    # aggregate nor a nested GROUP_CONCAT/SAMPLE
+    got = lit_g.query(
+        'PREFIX ex: <http://ex.org/> SELECT ?x (CONCAT(?o, "%s") AS ?u) '
+        'WHERE { ?x ex:name ?o FILTER (?o = "colour") }' % text)
+    assert [(r.x, r.u) for r in got.collect()] == [
+        (EX + "s3", "colour" + text)]
+
+
 def test_oldest_text_is_lowered_again_past_the_bound(g, lowerings):
     from rdf_converter_spark.graph import _PREPARED_MAX
 

@@ -107,28 +107,63 @@ def test_dedup_is_partial_aggregate(spark, routed):
     assert n_aggs >= 2, plan
 
 
-def test_upsert_store_side_never_shuffles(spark):
-    """merge.py contract: the anti-join broadcasts the bounded delta
-    key set, so the 10^12-row store side has NO exchange; dedup is
-    scoped to the delta (a global distinct would reshuffle the whole
-    store)."""
+def test_merge_batch_broadcasts_batch_sides(spark):
+    """streaming.incremental.merge_batch contract: every join that
+    reads the store rows ``base`` is a broadcast hash join whose
+    broadcast side is batch-sized (the batch's keys, its pages, the
+    re-stated keys), so no join shuffles the store. Size-based
+    broadcasting is off: only merge_batch's own hints broadcast."""
     from pyspark.sql import functions as F
 
-    from rdf_converter_spark.operators.merge import upsert_triples
+    from rdf_converter_spark.streaming.incremental import merge_batch
 
-    base = spark.range(5000).select(
-        F.concat(F.lit("s"), F.col("id")).alias("subj"),
-        F.lit("p").alias("pred"),
-        F.concat(F.lit("o"), F.col("id")).alias("obj"),
-    )
-    delta = base.limit(10).withColumn("obj", F.lit("NEW"))
-    plan = _plan(upsert_triples(base, delta))
-    anti = plan[plan.index("LeftAnti"):]
-    assert "BroadcastHashJoin" in plan[:plan.index("LeftAnti") + 30], plan
-    # the only hashpartitioning exchange allowed is the delta-side
-    # distinct; the base branch (below the anti join) must have none
-    assert "Exchange hashpartitioning" not in anti.split("Scan")[0], plan
-    assert "SortMergeJoin" not in plan, plan
+    def triples(n, obj, src_url):
+        return spark.range(n).select(
+            F.concat(F.lit("s"), F.col("id")).alias("subj"),
+            F.concat(F.lit("p"), F.col("id") % 3).alias("pred"),
+            obj.alias("obj"),
+            F.lit(False).alias("obj_is_uri"),
+            F.lit(None).cast("string").alias("obj_lang"),
+            F.lit(None).cast("string").alias("obj_datatype"),
+            src_url.alias("src_url"),
+        )
+
+    base = triples(5000, F.concat(F.lit("o"), F.col("id")),
+                   F.concat(F.lit("u"), F.col("id") % 50))
+    delta = triples(10, F.lit("NEW"), F.lit("u0"))
+    pages = spark.createDataFrame([("u0",)], "src_url string")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        lines = _plan(merge_batch(base, delta, pages)).splitlines()
+    finally:
+        spark.conf.set(key, saved)
+
+    def depth(i):
+        return len(lines[i]) - len(lines[i].lstrip(" :+-"))
+
+    def subtree(i):
+        end = i + 1
+        while end < len(lines) and depth(end) > depth(i):
+            end += 1
+        return range(i, end)
+
+    def reads(i, scan):
+        return any(scan in lines[j] for j in subtree(i))
+
+    base_scan, batch_scans = "Range (0, 5000,", ("Range (0, 10,", "Scan")
+    joins = [i for i in range(len(lines))
+             if "Join" in lines[i] and reads(i, base_scan)]
+    assert len(joins) == 4, "\n".join(lines)
+    for i in joins:
+        assert "BroadcastHashJoin" in lines[i], "\n".join(lines)
+        child = depth(i + 1)
+        built = [j for j in subtree(i)
+                 if depth(j) == child and "BroadcastExchange" in lines[j]]
+        assert len(built) == 1, "\n".join(lines)
+        assert any(reads(built[0], s) for s in batch_scans), \
+            "\n".join(lines)
 
 
 def test_bucketed_tables_join_shuffle_free(spark, tmp_path):
