@@ -70,11 +70,10 @@ def stream_triples_upsert(
     n_buckets: int = 16,
     max_files_per_trigger: int = 64,
 ):
-    """Incremental extraction that MAINTAINS a triple store instead of
-    appending: each micro-batch's triples merge into the store
-    (``merge_batch``) — re-crawled pages update their entity's triples
-    in place, new pages add theirs, and the store holds no duplicate
-    rows.
+    """Incremental extraction that MAINTAINS a triple store: each
+    micro-batch's triples merge into the store (``merge_batch``) —
+    re-crawled pages update their entity's triples in place, new pages
+    add theirs, and the store holds no duplicate rows.
 
     Scale shape: the store is hash-bucketed on ``subj`` and written
     with DYNAMIC partition overwrite, so a micro-batch rewrites only
