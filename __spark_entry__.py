@@ -71,7 +71,7 @@ def _kg_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_tpch_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_converter_spark.operators.emit import (
-        dedup_triples, explode_triples, triple, uref,
+        bundle, dedup_triples, explode_triples, lit, triple, uref,
     )
 
     base = "http://kg.test/"
@@ -95,14 +95,13 @@ def _kg_tpch_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust_triples = explode_triples(
         cust,
-        F.array(
-            uref("cust_uri", base + "ontology#type", base + "Customer"),
-            triple("cust_uri", base + "ontology#name", F.col("c_name")),
-            uref("cust_uri", base + "ontology#nation", F.col("nation_uri")),
-            triple("cust_uri", base + "ontology#segment",
-                   F.col("c_mktsegment")),
-            triple("nation_uri", base + "ontology#label", F.col("n_name")),
-            triple("nation_uri", base + "ontology#region", F.col("r_name")),
+        bundle(
+            uref("cust_uri", base + "ontology#type", lit(base + "Customer")),
+            triple("cust_uri", base + "ontology#name", "c_name"),
+            uref("cust_uri", base + "ontology#nation", "nation_uri"),
+            triple("cust_uri", base + "ontology#segment", "c_mktsegment"),
+            triple("nation_uri", base + "ontology#label", "n_name"),
+            triple("nation_uri", base + "ontology#region", "r_name"),
         ),
         graph="tpch", src_url=None,
     )
@@ -119,13 +118,12 @@ def _kg_tpch_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     order_triples = explode_triples(
         ords,
-        F.array(
-            uref("order_uri", base + "ontology#type", base + "Order"),
-            uref("order_uri", base + "ontology#by", F.col("cust_uri")),
-            triple("order_uri", base + "ontology#date", F.col("odate"),
+        bundle(
+            uref("order_uri", base + "ontology#type", lit(base + "Order")),
+            uref("order_uri", base + "ontology#by", "cust_uri"),
+            triple("order_uri", base + "ontology#date", "odate",
                    dt="http://www.w3.org/2001/XMLSchema#date"),
-            triple("order_uri", base + "ontology#status",
-                   F.col("o_orderstatus")),
+            triple("order_uri", base + "ontology#status", "o_orderstatus"),
         ),
         graph="tpch", src_url=None,
     )

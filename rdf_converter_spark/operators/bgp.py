@@ -494,7 +494,14 @@ def bgp_union(
     fls = list(filters) if filters else [()] * len(groups)
     if len(fls) != len(groups):
         raise ValueError("filters must align 1:1 with UNION groups")
-    sols = [bgp_match(triples, g, filters=f) for g, f in zip(groups, fls)]
+    return bag_union([bgp_match(triples, g, filters=f)
+                      for g, f in zip(groups, fls)])
+
+
+def bag_union(sols: Sequence[DataFrame]) -> DataFrame:
+    """Bag union of solution relations over the sorted union of their
+    variables; a variable a relation lacks is null (unbound) in its
+    rows."""
     all_vars = sorted(set().union(*[set(s.columns) for s in sols]))
     out = None
     for s in sols:

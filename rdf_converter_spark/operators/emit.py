@@ -1,127 +1,105 @@
 # -*- coding: utf-8 -*-
 """Triple emission: per-row triple bundles -> flat triple DataFrame.
 
-Design for scale: each doc-kind pipeline builds ONE array column of
-triple structs per source row (static triples via ``F.array``,
-multi-valued fields via ``F.transform`` over array columns), then a
-single ``explode`` flattens it — one scan of the parsed table per kind,
-no re-scan per predicate, everything whole-stage-codegen'd JVM-side.
+Design for scale: each doc-kind pipeline writes its triples as SQL
+text — one array of triple structs per source row (static triples in
+``bundle(...)``, multi-valued fields as ``transform`` lambdas over
+array columns via ``each``) — and ``explode_triples`` applies the whole
+bundle with one ``selectExpr``: a single ``inline`` flattens it — one
+scan of the parsed table per kind, no re-scan per predicate,
+everything evaluated JVM-side. Because a bundle is text, building a
+kind's plan costs a handful of Python-to-JVM calls, not one per
+expression node.
 
 The empty-object gate reproduces add_to_graph (ld_converter.py:106-111):
 drop when the object is NULL, '' or the string 'None' (the reference's
 ``str(Literal(None))`` artifact). Null *subjects* encode the
-reference's ``if timeslot_uri:`` guards and are dropped too.
+reference's ``if timeslot_uri:`` guards (``guard``) and are dropped
+too.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence, Union
+import re
+from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..terms import TRIPLE_KEY
+from .sparql_text import _sql_str as lit
 
-ColOrStr = Union[Column, str, None]
+_NAME = re.compile(r"[A-Za-z_]\w*")
 
-_EXPR_CACHE: dict = {}
-
-
-def cached_exprs(
-    key: str, builder: Callable[[], Sequence[Column]]
-) -> Sequence[Column]:
-    """Build a df-independent Column-expression bundle once per
-    SparkContext and reuse it.
-
-    Every emission bundle is an unresolved Catalyst tree over
-    ``F.col(name)`` references — bound to no DataFrame, so one built
-    instance serves every query that applies it. Building it is NOT
-    free: the three kind bundles cost ~33k py4j round trips
-    (measured 5–12 s of driver-serial wall on this host), which a
-    10^12-doc batch pays once in hours of runtime but a streaming
-    microbatch or repeated incremental batch would pay PER BATCH —
-    plan-construction time is pure serial fraction under Amdahl and
-    directly caps N→4N scaling efficiency. Keyed by the live
-    SparkContext's identity so a stopped/restarted context (tests)
-    never sees stale JVM handles.
-    """
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    sc_key = id(sc) if sc is not None else None
-    got = _EXPR_CACHE.get(key)
-    if got is None or got[0] != sc_key:
-        _EXPR_CACHE[key] = got = (sc_key, tuple(builder()))
-    return got[1]
+_GATE = ("`subj` IS NOT NULL AND `obj` IS NOT NULL AND length(`obj`) > 0 "
+         "AND `obj` != 'None'")
 
 
-def _col(v: ColOrStr) -> Column:
-    if isinstance(v, Column):
-        return v
-    return F.lit(v).cast("string")
+def col(name: str) -> str:
+    """A column reference, backquoted."""
+    return "`%s`" % name.replace("`", "``")
 
 
-def triple(
-    subj: ColOrStr,
-    pred: ColOrStr,
-    obj: ColOrStr,
-    uri: Union[Column, bool] = False,
-    lang: ColOrStr = None,
-    dt: ColOrStr = None,
-) -> Column:
-    """One triple as a struct column (schema = TRIPLE_SCHEMA order).
+def _term(expr: str) -> str:
+    return col(expr) if _NAME.fullmatch(expr) else expr
 
-    Convention: a *str* subject is a column NAME (subjects are always
-    row-derived URIs); str predicate/object/lang/dt are constants —
-    pass ``F.col(...)`` explicitly for column-valued objects.
-    """
-    subj_col = subj if isinstance(subj, Column) else F.col(subj)
-    uri_col = uri if isinstance(uri, Column) else F.lit(bool(uri))
-    return F.struct(
-        subj_col.cast("string").alias("subj"),
-        _col(pred).alias("pred"),
-        _col(obj).alias("obj"),
-        uri_col.cast("boolean").alias("obj_is_uri"),
-        _col(lang).alias("obj_lang"),
-        _col(dt).alias("obj_datatype"),
+
+def _const(value: Optional[str]) -> str:
+    return "CAST(NULL AS STRING)" if value is None else lit(value)
+
+
+def triple(subj: str, pred: str, obj: str, uri: bool = False,
+           lang: Optional[str] = None, dt: Optional[str] = None) -> str:
+    """One triple as a ``named_struct`` (TRIPLE_SCHEMA order).
+
+    ``subj`` and ``obj`` are SQL expressions in which a bare name is a
+    column (backquoted here, so ``"end"`` is the column); constants go
+    through ``lit``. ``pred``, ``lang`` and ``dt`` are constants."""
+    return (
+        "named_struct('subj', %s, 'pred', %s, 'obj', %s, 'obj_is_uri', %s, "
+        "'obj_lang', %s, 'obj_datatype', %s)"
+        % (_term(subj), lit(pred), _term(obj), "true" if uri else "false",
+           _const(lang), _const(dt))
     )
 
 
-def uref(subj: ColOrStr, pred: ColOrStr, obj: ColOrStr) -> Column:
+def uref(subj: str, pred: str, obj: str) -> str:
     """Triple whose object is a URI reference."""
     return triple(subj, pred, obj, uri=True)
 
 
+def guard(cond: str, expr: str) -> str:
+    """``expr`` where ``cond`` holds, else NULL: a guarded subject
+    drops its triple at the gate."""
+    return "IF(%s, %s, NULL)" % (_term(cond), _term(expr))
+
+
+def bundle(*triples: str) -> str:
+    """Static triples of a row, as one array."""
+    return "array(%s)" % ", ".join(triples)
+
+
+def each(array: str, var: str, *triples: str) -> str:
+    """``triples`` for every element of the array column ``array``,
+    bound to the lambda variable ``var``."""
+    if len(triples) == 1:
+        return "transform(%s, %s -> %s)" % (_term(array), var, triples[0])
+    return "flatten(transform(%s, %s -> %s))" % (
+        _term(array), var, bundle(*triples))
+
+
 def explode_triples(
-    df: DataFrame, *bundle_cols: Column, graph: Optional[str] = None,
+    df: DataFrame, *bundles: str, graph: Optional[str] = None,
     src_url: Optional[str] = "url",
 ) -> DataFrame:
-    """Concat triple-array columns, explode once, apply the gate.
-
-    ``bundle_cols`` are array<triple-struct> columns (use
-    ``F.array(...)`` for static bundles, ``F.transform`` for
-    multi-valued ones).
-    """
-    arr = F.concat(*bundle_cols) if len(bundle_cols) > 1 else bundle_cols[0]
-    keep_src = src_url is not None and src_url in df.columns
-    carried = [F.col(src_url).alias("src_url")] if keep_src else []
-    out = df.select(F.explode(arr).alias("t"), *carried)
-    flat = [F.col("t." + f).alias(f) for f in TRIPLE_KEY]
+    """Concat the array<triple-struct> SQL ``bundles``, flatten them
+    with one ``inline``, apply the gate."""
+    arr = bundles[0] if len(bundles) == 1 else "concat(%s)" % ", ".join(bundles)
+    exprs = ["inline(%s)" % arr]
     if graph is not None:
-        flat.append(F.lit(graph).alias("graph"))
-    if keep_src:
-        flat.append(F.col("src_url"))
-    return gate(out.select(flat))
-
-
-def gate(df: DataFrame) -> DataFrame:
-    """Empty-object gate + null-subject guard (P3)."""
-    return df.filter(
-        F.col("subj").isNotNull()
-        & F.col("obj").isNotNull()
-        & (F.length("obj") > 0)
-        & (F.col("obj") != "None")
-    )
+        exprs.append("%s AS graph" % lit(graph))
+    if src_url is not None and src_url in df.columns:
+        exprs.append("%s AS src_url" % col(src_url))
+    return df.selectExpr(*exprs).filter(_GATE)
 
 
 def dedup_triples(df: DataFrame, within: Sequence[str] = ("graph",)) -> DataFrame:

@@ -1,18 +1,20 @@
 # -*- coding: utf-8 -*-
-"""R2RML-lite: declarative table-to-triples mapping, compiled to one
-emission plan.
+"""R2RML-lite: declarative table-to-triples mapping, compiled to the
+emission builder's SQL fragments.
 
 The reference hard-codes its field mappings in per-dataset converter
 code (``ld_converter.py`` / ``pa_converter.py`` / ``yle_converter.py``
 each walk their rows emitting ``graph.add(...)`` per field); the
-engine's pipelines re-express those as per-kind expression bundles.
-This module generalizes that pattern into the W3C R2RML vocabulary's
-core (simplified, dict-shaped): a *triples map* declares a subject
-template and predicate-object maps, and ``r2rml_triples`` compiles the
-whole thing into ONE array-of-structs + explode plan over the input
-DataFrame — the same single-scan shape as ``operators/emit.py`` (no
-re-scan per predicate, all whole-stage-codegen JVM expressions, no
-Python in the row path).
+engine's pipelines re-express those as per-kind SQL triple bundles
+(``operators/emit.py``). This module generalizes that pattern into the
+W3C R2RML vocabulary's core (simplified, dict-shaped): a *triples map*
+declares a subject template and predicate-object maps, and
+``r2rml_triples`` compiles them with the same builder (``triple``,
+``each``, ``explode_triples``) into ONE array-of-structs + inline plan
+over the input DataFrame — no re-scan per predicate, all JVM
+expressions, no Python in the row path. Column names are backquoted
+and constant text goes through the one SQL string quoter, so an IRI or
+template text holding a quote or a backslash is emitted verbatim.
 
 Mapping shape::
 
@@ -61,36 +63,46 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .emit import dedup_triples, explode_triples, triple
+from .emit import (bundle, col, dedup_triples, each, explode_triples, lit,
+                   triple, uref)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _PLACEHOLDER = re.compile(r"\{([^{}]+)\}")
 
 
-def compile_template(template: str, encode: bool = False) -> Column:
-    """``"...{col}..."`` -> one ``concat`` expression. NULL in any
-    referenced column nulls the whole term (R2RML NULL semantics —
-    the caller's gate then drops the triple)."""
+def _template(template: str, encode: bool) -> str:
     parts = []
     pos = 0
     for m in _PLACEHOLDER.finditer(template):
         if m.start() > pos:
-            parts.append(F.lit(template[pos:m.start()]))
-        ref = F.col(m.group(1)).cast("string")
+            parts.append(lit(template[pos:m.start()]))
+        ref = "CAST(%s AS STRING)" % col(m.group(1))
         if encode:
             # URLEncoder is form-encoding; R2RML wants percent-encoding
-            ref = F.regexp_replace(F.url_encode(ref), r"\+", "%20")
+            ref = "regexp_replace(url_encode(%s), %s, '%%20')" % (
+                ref, lit(r"\+"))
         parts.append(ref)
         pos = m.end()
     if pos < len(template):
-        parts.append(F.lit(template[pos:]))
+        parts.append(lit(template[pos:]))
     if not parts:
         raise ValueError("empty template")
-    return parts[0] if len(parts) == 1 else F.concat(*parts)
+    return parts[0] if len(parts) == 1 else "concat(%s)" % ", ".join(parts)
 
 
-def _term(po: dict, encode_default: bool) -> Column:
+def compile_template(template: str, encode: bool = False) -> Column:
+    """``"...{col}..."`` -> one ``concat`` expression. NULL in any
+    referenced column nulls the whole term (R2RML NULL semantics —
+    the caller's gate then drops the triple)."""
+    return F.expr(_template(template, encode))
+
+
+def _column(name: str) -> str:
+    return "CAST(%s AS STRING)" % col(name)
+
+
+def _term(po: dict, encode_default: bool) -> str:
     has_tpl, has_col = "template" in po, "column" in po
     if has_tpl == has_col:
         raise ValueError(
@@ -100,9 +112,8 @@ def _term(po: dict, encode_default: bool) -> Column:
         if po.get("datatype") or po.get("lang"):
             raise ValueError(
                 "IRI term map cannot carry datatype/lang: %r" % (po,))
-        return compile_template(
-            po["template"], po.get("encode", encode_default))
-    return F.col(po["column"]).cast("string")
+        return _template(po["template"], po.get("encode", encode_default))
+    return _column(po["column"])
 
 
 def r2rml_triples(
@@ -118,17 +129,16 @@ def r2rml_triples(
         raise ValueError("subject map needs 'template' or 'column'")
     encode_default = bool(mapping.get("encode", False))
     if "template" in sub:
-        subj = compile_template(
-            sub["template"], sub.get("encode", encode_default))
+        subj = _template(sub["template"], sub.get("encode", encode_default))
     else:
-        subj = F.col(sub["column"]).cast("string")
+        subj = _column(sub["column"])
 
     static = []
     classes = sub.get("class") or []
     if isinstance(classes, str):
         classes = [classes]
     for cls in classes:
-        static.append(triple(subj, RDF_TYPE, cls, uri=True))
+        static.append(uref(subj, RDF_TYPE, lit(cls)))
 
     arrays = []
     for po in mapping.get("predicate_objects", ()):
@@ -141,18 +151,18 @@ def r2rml_triples(
             if "column" not in po:
                 raise ValueError(
                     "'split' needs a 'column' term map: %r" % (po,))
-            vals = F.split(F.col(po["column"]).cast("string"),
-                           re.escape(split))
-            arrays.append(F.transform(vals, lambda v: triple(
-                subj, pred, v, uri=False,
-                lang=po.get("lang"), dt=po.get("datatype"))))
+            vals = "split(%s, %s)" % (_column(po["column"]),
+                                      lit(re.escape(split)))
+            arrays.append(each(vals, "__v", triple(
+                subj, pred, "__v", lang=po.get("lang"),
+                dt=po.get("datatype"))))
         else:
-            obj = _term(po, encode_default)
             static.append(triple(
-                subj, pred, obj, uri="template" in po,
-                lang=po.get("lang"), dt=po.get("datatype")))
+                subj, pred, _term(po, encode_default),
+                uri="template" in po, lang=po.get("lang"),
+                dt=po.get("datatype")))
     if not static and not arrays:
         raise ValueError("mapping emits no triples")
-    bundles = ([F.array(*static)] if static else []) + arrays
+    bundles = ([bundle(*static)] if static else []) + arrays
     out = explode_triples(df, *bundles, graph=graph, src_url=None)
     return dedup_triples(out)

@@ -124,8 +124,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bgp import (
-    TaggedLiteral, _sql_expr, ask_probe, bgp_aggregate, bgp_match,
-    bgp_union, construct, solution_modifiers,
+    TaggedLiteral, _sql_expr, ask_probe, bag_union, bgp_aggregate,
+    bgp_match, construct, solution_modifiers,
 )
 # answers an ASK from the probe ``lower`` built for it
 from .bgp import probe_hit as ask
@@ -1396,7 +1396,7 @@ def _lower_groups(triples: DataFrame, g: dict,
 
 def _is_plain_branch(b: dict) -> bool:
     """True when a UNION branch carries only triple patterns and
-    FILTERs — the shape ``bgp_union`` lowers directly."""
+    FILTERs — the shape the ASK union probe lowers directly."""
     return not any(b[x] for x in (
         "optional", "minus", "values", "binds", "exists",
         "not_exists", "paths", "subqueries", "unions", "graphs",
@@ -1435,20 +1435,10 @@ def _union_relation(triples: DataFrame, branches: Sequence[dict],
     nested UNIONs all compose via the ``_exec_group`` recursion) and
     take the bag union of the solution mappings. Variables bound in
     only some branches are null elsewhere (SPARQL leaves them
-    unbound). Plan shape matches :func:`operators.bgp.bgp_union`:
-    independent join trees under one zero-shuffle ``Union`` node."""
-    sols = [_exec_group(triples, b, graph_col=graph_col)
-            for b in branches]
-    all_vars = sorted(set().union(*[set(s.columns) for s in sols]))
-    out = None
-    for s in sols:
-        padded = s.select(*[
-            (F.col(v) if v in s.columns
-             else F.lit(None).cast("string")).alias(v)
-            for v in all_vars
-        ])
-        out = padded if out is None else out.unionByName(padded)
-    return out
+    unbound). Plan shape: independent join trees under one
+    zero-shuffle ``Union`` node."""
+    return bag_union([_exec_group(triples, b, graph_col=graph_col)
+                      for b in branches])
 
 
 def _group_union_relations(triples: DataFrame, g: dict,
@@ -1552,20 +1542,9 @@ def _exec_group(triples: DataFrame, g: dict,
         plain_only = not any(g[x] for x in (
             "patterns", "optional", "filters", "minus", "values",
             "exists", "not_exists", "binds", "paths", "subqueries"))
-        one_block = len(g["unions"]) == 1
-        if (plain_only and one_block
-                and all(_is_plain_branch(b) for b in g["unions"][0])):
-            # pure plain-pattern single UNION: keep the original
-            # bgp_union lowering so existing queries keep
-            # byte-identical plans
-            return bgp_union(
-                triples,
-                [b["patterns"] for b in g["unions"][0]],
-                filters=[b["filters"] for b in g["unions"][0]],
-            )
         union_rels = [_union_relation(triples, blk, graph_col)
                       for blk in g["unions"]]
-        if plain_only and one_block:
+        if plain_only and len(g["unions"]) == 1:
             return union_rels[0]
     return bgp_match(
         triples, g["patterns"], optional=g["optional"],

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
-from ..operators.emit import gate, triple, uref
+from ..operators.emit import bundle, explode_triples, lit, triple, uref
 from ..terms import EB
 
 BASE = config.BASE
@@ -65,43 +65,29 @@ def _fallback_join(flow: DataFrame, lineage_first: DataFrame) -> DataFrame:
     return out.filter(F.col("uri").isNotNull())
 
 
+_MEDIA = "concat(%s, element_at(split(`uri`, '/'), -1))" % lit(BASE + "media/")
+
+
 def _media_triples(matched: DataFrame, graph: str) -> DataFrame:
-    media = F.concat(
-        F.lit(BASE + "media/"), F.element_at(F.split(F.col("uri"), "/"), -1)
+    return explode_triples(
+        matched,
+        bundle(uref(_MEDIA, EB("locator"), "flow_href"),
+               triple(_MEDIA, EB("filename"), "name")),
+        graph=graph,
     )
-    bundle = F.array(
-        uref(media, EB("locator"), F.col("flow_href")),
-        triple(media, EB("filename"), F.col("name")),
-    )
-    out = matched.select(F.explode(bundle).alias("t"), F.col("url"))
-    flat = out.select(
-        "t.subj", "t.pred", "t.obj", "t.obj_is_uri", "t.obj_lang",
-        "t.obj_datatype", F.lit(graph).alias("graph"),
-        F.col("url").alias("src_url"),
-    )
-    return gate(flat)
 
 
-def ld_flow_triples(flow: DataFrame, ld_lineage: DataFrame) -> DataFrame:
-    stem = F.split(F.col("name"), "\\.").getItem(0)
-    f = flow.withColumn(
-        "identifier",
-        F.when(F.col("name").startswith("R"), F.expr("substring(split(name, '\\\\.')[0], 2)"))
-        .otherwise(stem),
-    )
-    first = _first_by_key(ld_lineage, ["dataset", "file", "row"])
-    return _media_triples(_fallback_join(f, first), "ld_flow")
-
-
-def pa_flow_triples(flow: DataFrame, pa_lineage: DataFrame) -> DataFrame:
-    stem = F.split(F.col("name"), "\\.").getItem(0)
-    f = flow.withColumn(
-        "identifier",
-        F.when(stem.startswith("R"), F.expr("substring(split(name, '\\\\.')[0], 2)"))
-        .otherwise(stem),
-    )
-    first = _first_by_key(pa_lineage, ["dataset", "file", "row"])
-    return _media_triples(_fallback_join(f, first), "pa_flow")
+def flow_triples(flow: DataFrame, lineage: DataFrame,
+                 graph: str) -> DataFrame:
+    """LD and PA flow links (``graph`` "ld_flow" or "pa_flow"): the
+    identifier is the name's stem minus a leading 'R' (the LD pass
+    tests the name, the PA pass the stem; a name starts with 'R'
+    exactly when its stem does)."""
+    stem = r"split(`name`, '\\.')[0]"
+    f = flow.withColumn("identifier", F.expr(
+        "IF(startswith(%s, 'R'), substring(%s, 2), %s)" % (stem, stem, stem)))
+    first = _first_by_key(lineage, ["dataset", "file", "row"])
+    return _media_triples(_fallback_join(f, first), graph)
 
 
 def yle_flow_triples(flow: DataFrame, yle_lineage: DataFrame) -> DataFrame:

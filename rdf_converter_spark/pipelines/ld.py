@@ -7,9 +7,9 @@ Stage layout:
                   (pipelines.fused); all byte-exact scalar work (slugs,
                   sha1 URIs, datetime/duration quirks) happens there via
                   the textkit kernels.
-  emit          — pure Spark: one array-of-triple-structs per row
-                  (static bundle + F.transform over multi-valued
-                  arrays), one explode, empty-object gate.
+  emit          — pure Spark: one SQL array of triple structs per row
+                  (static bundle + transform over multi-valued
+                  arrays), one inline, empty-object gate.
   segments join — J2: segment.parent_id == program.id equi-join with
                   first-match semantics (row_number over source order,
                   ld_converter.py:551-557), then the relative
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config, mappings
-from ..operators.emit import cached_exprs, explode_triples, triple, uref
+from ..operators.emit import bundle, each, explode_triples, lit, triple, uref
 from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, RDFS_LABEL, XSD
 from ..textkit import (
     RADIO_CHANNELS,
@@ -289,109 +289,83 @@ def parse_ld_segments(routed: DataFrame) -> DataFrame:
 # Emission
 # --------------------------------------------------------------------------
 
-def _channel_bundle():
-    return F.array(
-        uref("channel_uri", RDF_TYPE, EB("PublicationChannel")),
-        triple("channel_uri", EB("publicationChannelId"),
-               F.upper(F.col("channel_code"))),
-        triple("channel_uri", EB("publicationChannelName"),
-               F.col("channel_name")),
-        triple("channel_uri", EB("serviceDescription"), F.col("service_desc")),
+# The channel, timeslot/collection, keyword, credit, genre, theme and
+# producer triples are the same in the LD and PA passes (Yle's
+# contributors have the credit shape); pa.py and yle.py import them.
+CHANNEL = bundle(
+    uref("channel_uri", RDF_TYPE, lit(EB("PublicationChannel"))),
+    triple("channel_uri", EB("publicationChannelId"), "upper(`channel_code`)"),
+    triple("channel_uri", EB("publicationChannelName"), "channel_name"),
+    triple("channel_uri", EB("serviceDescription"), "service_desc"),
+)
+
+PARENTS = bundle(
+    uref("timeslot_uri", RDF_TYPE, lit(MEMAD("Timeslot"))),
+    triple("timeslot_uri", EB("title"), "timeslot_name"),
+    uref("collection_uri", RDF_TYPE, lit(EB("Collection"))),
+    triple("collection_uri", EB("title"), "collection_name"),
+)
+
+GENRES = each("genre_uris", "g", uref("program_uri", EB("hasGenre"), "g"))
+THEMES = each("theme_uris", "t", uref("program_uri", EB("hasTheme"), "t"))
+PRODUCERS = each("producers", "p",
+                 triple("program_uri", EB("hasProducer"), "p"))
+
+
+def keywords(subject: str) -> str:
+    return each(
+        "keywords", "k",
+        uref("k.uri", RDF_TYPE, lit(EB("Keyword"))),
+        triple("k.uri", RDFS_LABEL, "k.label", lang="fr"),
+        uref(subject, EB("hasKeyword"), "k.uri"),
     )
 
 
-def _parent_bundle():
-    return F.array(
-        uref("timeslot_uri", RDF_TYPE, MEMAD("Timeslot")),
-        triple("timeslot_uri", EB("title"), F.col("timeslot_name")),
-        uref("collection_uri", RDF_TYPE, EB("Collection")),
-        triple("collection_uri", EB("title"), F.col("collection_name")),
+def credits(subject: str, array: str = "credits") -> str:
+    return each(
+        array, "c",
+        uref("c.agent_uri", RDF_TYPE, lit(EB("Agent"))),
+        uref(subject, EB("hasContributor"), "c.agent_uri"),
+        triple("c.agent_uri", EB("agentName"), "c.name"),
+        uref("c.agent_uri", EB("hasRole"), "c.role_uri"),
     )
 
 
-def _kw_bundle(subject_col: str):
-    return F.flatten(
-        F.transform(
-            "keywords",
-            lambda k: F.array(
-                uref(k["uri"], RDF_TYPE, EB("Keyword")),
-                triple(k["uri"], RDFS_LABEL, k["label"], lang="fr"),
-                uref(subject_col, EB("hasKeyword"), k["uri"]),
-            ),
-        )
-    )
-
-
-def _credit_bundle(subject_col: str, agent_name_first: bool):
-    """agent_name_first toggles nothing semantically (set graph) but is
-    kept for symmetry with the two reference passes."""
-    return F.flatten(
-        F.transform(
-            "credits",
-            lambda c: F.array(
-                uref(c["agent_uri"], RDF_TYPE, EB("Agent")),
-                uref(subject_col, EB("hasContributor"), c["agent_uri"]),
-                triple(c["agent_uri"], EB("agentName"), c["name"]),
-                uref(c["agent_uri"], EB("hasRole"), c["role_uri"]),
-            ),
-        )
-    )
-
-
-def _ld_program_bundle():
-    static = F.array(
-        uref("collection_uri", EB("isParentOf"), F.col("program_uri")),
-        uref("timeslot_uri", EB("isParentOf"), F.col("program_uri")),
-        triple("program_uri", DCT_PUBLISHER, "INA-LD"),
-        uref("program_uri", RDF_TYPE, F.col("program_type_uri")),
-        triple("program_uri", EB("hasIdentifier"), F.col("hashed_id")),
-        triple("program_uri", EB("title"), F.col("title"), lang="fr"),
-        triple("program_uri", EB("summary"), F.col("summary"), lang="fr"),
-        triple("program_uri", MEMAD("producerSummary"),
-               F.col("producer_summary"), lang="fr"),
-        triple("program_uri", MEMAD("lead"), F.col("lead"), lang="fr"),
-        triple("program_uri", EB("duration"), F.col("duration_lex"),
-               dt=XSD("duration")),
-        uref("program_uri", EB("hasLanguage"), BASE + "language/french"),
-        uref("media_uri", RDF_TYPE, EB("MediaResource")),
-        uref("program_uri", EB("isInstantiatedBy"), F.col("media_uri")),
-        uref("history_uri", RDF_TYPE, EB("PublicationHistory")),
-        uref("program_uri", EB("hasPublicationHistory"), F.col("history_uri")),
-        uref("history_uri", EB("hasPublicationEvent"), F.col("pubevent_uri")),
-        uref("pubevent_uri", RDF_TYPE, EB("PublicationEvent")),
-        uref("pubevent_uri", RDF_TYPE, MEMAD("FirstRun")),
-        uref("pubevent_uri", EB("publishes"), F.col("program_uri")),
-        uref("pubevent_uri", EB("isReleasedBy"), F.col("channel_uri")),
-        triple("pubevent_uri", EB("publicationStartDateTime"),
-               F.col("start_lex"), dt=XSD("dateTime")),
-        triple("pubevent_uri", EB("publicationEndDateTime"),
-               F.col("end_lex"), dt=XSD("dateTime")),
-        triple("pubevent_uri", EB("firstShowing"), "1", dt=XSD("boolean")),
-    )
-    genres = F.transform("genre_uris",
-                         lambda g: uref("program_uri", EB("hasGenre"), g))
-    themes = F.transform("theme_uris",
-                         lambda t_: uref("program_uri", EB("hasTheme"), t_))
-    producers = F.transform(
-        "producers", lambda p: triple("program_uri", EB("hasProducer"), p)
-    )
-    return (
-        _channel_bundle(),
-        _parent_bundle(),
-        static,
-        genres,
-        themes,
-        _kw_bundle("program_uri"),
-        producers,
-        _credit_bundle("program_uri", True),
-    )
+_LD_PROGRAM = bundle(
+    uref("collection_uri", EB("isParentOf"), "program_uri"),
+    uref("timeslot_uri", EB("isParentOf"), "program_uri"),
+    triple("program_uri", DCT_PUBLISHER, lit("INA-LD")),
+    uref("program_uri", RDF_TYPE, "program_type_uri"),
+    triple("program_uri", EB("hasIdentifier"), "hashed_id"),
+    triple("program_uri", EB("title"), "title", lang="fr"),
+    triple("program_uri", EB("summary"), "summary", lang="fr"),
+    triple("program_uri", MEMAD("producerSummary"), "producer_summary",
+           lang="fr"),
+    triple("program_uri", MEMAD("lead"), "lead", lang="fr"),
+    triple("program_uri", EB("duration"), "duration_lex", dt=XSD("duration")),
+    uref("program_uri", EB("hasLanguage"), lit(BASE + "language/french")),
+    uref("media_uri", RDF_TYPE, lit(EB("MediaResource"))),
+    uref("program_uri", EB("isInstantiatedBy"), "media_uri"),
+    uref("history_uri", RDF_TYPE, lit(EB("PublicationHistory"))),
+    uref("program_uri", EB("hasPublicationHistory"), "history_uri"),
+    uref("history_uri", EB("hasPublicationEvent"), "pubevent_uri"),
+    uref("pubevent_uri", RDF_TYPE, lit(EB("PublicationEvent"))),
+    uref("pubevent_uri", RDF_TYPE, lit(MEMAD("FirstRun"))),
+    uref("pubevent_uri", EB("publishes"), "program_uri"),
+    uref("pubevent_uri", EB("isReleasedBy"), "channel_uri"),
+    triple("pubevent_uri", EB("publicationStartDateTime"), "start_lex",
+           dt=XSD("dateTime")),
+    triple("pubevent_uri", EB("publicationEndDateTime"), "end_lex",
+           dt=XSD("dateTime")),
+    triple("pubevent_uri", EB("firstShowing"), lit("1"), dt=XSD("boolean")),
+)
 
 
 def ld_program_triples(programs: DataFrame) -> DataFrame:
     """Triples of the LD program pass (ld_converter.py:278-431)."""
     return explode_triples(
-        programs,
-        *cached_exprs("ld_program_triples", _ld_program_bundle),
+        programs, CHANNEL, PARENTS, _LD_PROGRAM, GENRES, THEMES,
+        keywords("program_uri"), PRODUCERS, credits("program_uri"),
         graph="ld",
     )
 
@@ -457,34 +431,24 @@ def ld_segments_with_times(
     )
 
 
-def _ld_segment_bundle():
-    static = F.array(
-        uref("segment_uri", RDF_TYPE, EB("Part")),
-        triple("segment_uri", EB("hasIdentifier"), F.col("hashed_id")),
-        uref("program_uri", EB("hasPart"), F.col("segment_uri")),
-        triple("segment_uri", EB("title"), F.col("title"), lang="fr"),
-        triple("segment_uri", MEMAD("lead"), F.col("lead"), lang="fr"),
-        triple("segment_uri", EB("duration"), F.col("duration_lex"),
-               dt=XSD("duration")),
-        triple("segment_uri", EB("start"), F.col("t_start"), dt=XSD("time")),
-        triple("segment_uri", EB("end"), F.col("t_end"), dt=XSD("time")),
-    )
-    return (
-        _channel_bundle(),
-        _parent_bundle(),
-        static,
-        _kw_bundle("segment_uri"),
-        _credit_bundle("segment_uri", False),
-    )
+_LD_SEGMENT = bundle(
+    uref("segment_uri", RDF_TYPE, lit(EB("Part"))),
+    triple("segment_uri", EB("hasIdentifier"), "hashed_id"),
+    uref("program_uri", EB("hasPart"), "segment_uri"),
+    triple("segment_uri", EB("title"), "title", lang="fr"),
+    triple("segment_uri", MEMAD("lead"), "lead", lang="fr"),
+    triple("segment_uri", EB("duration"), "duration_lex", dt=XSD("duration")),
+    triple("segment_uri", EB("start"), "t_start", dt=XSD("time")),
+    triple("segment_uri", EB("end"), "t_end", dt=XSD("time")),
+)
 
 
 def ld_segment_triples(segments_with_times: DataFrame) -> DataFrame:
     """Triples of the LD segment pass (ld_converter.py:443-560); NO
     vocabulary and no isParentOf in this graph."""
     return explode_triples(
-        segments_with_times,
-        *cached_exprs("ld_segment_triples", _ld_segment_bundle),
-        graph="ld_sujets",
+        segments_with_times, CHANNEL, PARENTS, _LD_SEGMENT,
+        keywords("segment_uri"), credits("segment_uri"), graph="ld_sujets",
     )
 
 

@@ -26,8 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config, mappings
-from ..operators.emit import cached_exprs, explode_triples, triple, uref
-from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, RDFS_LABEL, SKOS_NOTE, XSD
+from ..operators.emit import (bundle, col, explode_triples, guard, lit,
+                              triple, uref)
+from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, SKOS_NOTE, XSD
 from ..textkit import (
     clean_string_pa,
     pa_format_date,
@@ -38,6 +39,7 @@ from ..textkit import (
     parse_pa_credit,
     sha1_hex,
 )
+from .ld import CHANNEL, GENRES, PARENTS, PRODUCERS, THEMES, credits, keywords
 
 BASE = config.BASE
 
@@ -408,144 +410,82 @@ def pa_with_segment_times(pa2: DataFrame) -> DataFrame:
     )
 
 
-def _pa_bundle():
-    seg = F.col("is_segment")
-    static = F.array(
-        # channel (4)
-        uref("channel_uri", RDF_TYPE, EB("PublicationChannel")),
-        triple("channel_uri", EB("publicationChannelId"),
-               F.upper(F.col("channel_code"))),
-        triple("channel_uri", EB("publicationChannelName"),
-               F.col("channel_name")),
-        triple("channel_uri", EB("serviceDescription"), F.col("service_desc")),
-        # timeslot / collection
-        uref("timeslot_uri", RDF_TYPE, MEMAD("Timeslot")),
-        triple("timeslot_uri", EB("title"), F.col("timeslot_name")),
-        uref("collection_uri", RDF_TYPE, EB("Collection")),
-        triple("collection_uri", EB("title"), F.col("collection_name")),
-        # segment vs program typing (pa_converter.py:348-357)
-        uref("program_uri", RDF_TYPE,
-             F.when(seg, EB("Part")).otherwise(F.col("program_type_uri"))),
-        uref(
-            F.when(seg, F.col("source_program_uri")),
-            EB("hasPart"), F.col("program_uri"),
-        ),
-        uref(
-            F.when(~seg, F.col("collection_uri")),
-            EB("isParentOf"), F.col("program_uri"),
-        ),
-        uref(
-            F.when(~seg, F.col("timeslot_uri")),
-            EB("isParentOf"), F.col("program_uri"),
-        ),
-        # common metadata (pa_converter.py:373-385)
-        triple("program_uri", DCT_PUBLISHER, "INA-PA"),
-        triple("program_uri", EB("hasIdentifier"), F.col("hashed_id")),
-        triple("program_uri", EB("title"), F.col("title"), lang="fr"),
-        triple("program_uri", EB("summary"), F.col("summary"), lang="fr"),
-        triple("program_uri", EB("duration"), F.col("duration_lex"),
-               dt=XSD("duration")),
-        triple("program_uri", MEMAD("titleNotes"), F.col("title_notes"),
-               lang="fr"),
-        triple("program_uri", MEMAD("corpus"), F.col("corpus")),
-        triple("program_uri", SKOS_NOTE, F.col("notes")),
-        triple("program_uri", SKOS_NOTE, F.col("legal_notes")),
-        triple("program_uri", MEMAD("log"), F.col("sequences"), lang="fr"),
-        triple("program_uri", MEMAD("broadcasting"), F.col("broadcasting")),
-        # radio/TV extras (pa_converter.py:389-399)
-        triple("program_uri", MEMAD("lead"), F.col("lead"), lang="fr"),
-        triple("program_uri", EB("dateCreated"), F.col("recording_date_lex"),
-               dt=XSD("date")),
-        triple("program_uri", MEMAD("producerSummary"),
-               F.col("producer_summary"), lang="fr"),
-        triple("program_uri", MEMAD("hasISANIdentifier"), F.col("isan")),
-        # record entity (pa_converter.py:402-423)
-        uref("record_uri", RDF_TYPE, MEMAD("Record")),
-        uref("program_uri", MEMAD("hasRecord"), F.col("record_uri")),
-        triple("record_uri", EB("hasIdentifier"), F.col("hashed_id")),
-        triple("record_uri", EB("dateCreated"), F.col("creation_date_lex"),
-               dt=XSD("date")),
-        triple("record_uri", EB("dateModified"), F.col("update_date_lex"),
-               dt=XSD("date")),
-        uref("record_uri", EB("hasLanguage"), BASE + "language/french"),
-        uref("program_uri", EB("hasLanguage"), BASE + "language/french"),
-        triple("record_uri", EB("hasType"), F.col("record_type")),
-        # media (programs with one '_' only, pa_converter.py:426-436)
-        uref(F.when(F.col("has_media"), F.col("media_uri")),
-             RDF_TYPE, EB("MediaResource")),
-        uref(
-            F.when(F.col("has_media"), F.col("program_uri")),
-            EB("isInstantiatedBy"), F.col("media_uri"),
-        ),
-        triple(F.when(F.col("has_media"), F.col("media_uri")),
-               SKOS_NOTE, F.col("media_note_id")),
-        triple(F.when(F.col("has_media"), F.col("media_uri")),
-               SKOS_NOTE, F.col("media_note_detail")),
-        # segment relative times (within the J2 try/except)
-        triple(F.when(seg, F.col("program_uri")), EB("start"),
-               F.col("t_start"), dt=XSD("time")),
-        triple(F.when(seg, F.col("program_uri")), EB("end"),
-               F.col("t_end"), dt=XSD("time")),
-        # publication events (programs only, pa_converter.py:525-541)
-        uref(F.when(~seg, F.col("history_uri")), RDF_TYPE,
-             EB("PublicationHistory")),
-        uref(F.when(~seg, F.col("program_uri")),
-             EB("hasPublicationHistory"), F.col("history_uri")),
-        uref(F.when(~seg, F.col("history_uri")),
-             EB("hasPublicationEvent"), F.col("pubevent_uri")),
-        uref(F.when(~seg, F.col("pubevent_uri")), RDF_TYPE,
-             EB("PublicationEvent")),
-        uref(F.when(~seg, F.col("pubevent_uri")), RDF_TYPE,
-             MEMAD("FirstRun")),
-        triple(F.when(~seg, F.col("pubevent_uri")),
-               EB("publicationStartDateTime"), F.col("pubevent_start_lex"),
-               dt=XSD("dateTime")),
-        uref(F.when(~seg, F.col("pubevent_uri")), EB("publishes"),
-             F.col("program_uri")),
-        uref(F.when(~seg, F.col("pubevent_uri")), EB("isReleasedBy"),
-             F.col("channel_uri")),
-        triple(F.when(~seg, F.col("pubevent_uri")), EB("duration"),
-               F.col("duration_lex"), dt=XSD("duration")),
-        triple(F.when(~seg, F.col("pubevent_uri")),
-               EB("hasPublicationRegion"), F.col("geo_scope")),
-        triple(F.when(~seg, F.col("pubevent_uri")), EB("firstShowing"),
-               "1", dt=XSD("boolean")),
-    )
-    producers = F.transform(
-        "producers", lambda p: triple("program_uri", EB("hasProducer"), p)
-    )
-    credits = F.flatten(
-        F.transform(
-            "credits",
-            lambda c: F.array(
-                uref("program_uri", EB("hasContributor"), c["agent_uri"]),
-                uref(c["agent_uri"], RDF_TYPE, EB("Agent")),
-                triple(c["agent_uri"], EB("agentName"), c["name"]),
-                uref(c["agent_uri"], EB("hasRole"), c["role_uri"]),
-            ),
-        )
-    )
-    keywords = F.flatten(
-        F.transform(
-            "keywords",
-            lambda k: F.array(
-                uref(k["uri"], RDF_TYPE, EB("Keyword")),
-                triple(k["uri"], RDFS_LABEL, k["label"], lang="fr"),
-                uref("program_uri", EB("hasKeyword"), k["uri"]),
-            ),
-        )
-    )
-    genres = F.transform("genre_uris",
-                         lambda g: uref("program_uri", EB("hasGenre"), g))
-    themes = F.transform("theme_uris",
-                         lambda t_: uref("program_uri", EB("hasTheme"), t_))
-    return (static, producers, credits, keywords, genres, themes)
+_SEG = col("is_segment")
+_PROG = "NOT " + _SEG
+_MEDIA = col("has_media")
+
+_PA = bundle(
+    # segment vs program typing (pa_converter.py:348-357)
+    uref("program_uri", RDF_TYPE,
+         "IF(%s, %s, `program_type_uri`)" % (_SEG, lit(EB("Part")))),
+    uref(guard(_SEG, "source_program_uri"), EB("hasPart"), "program_uri"),
+    uref(guard(_PROG, "collection_uri"), EB("isParentOf"), "program_uri"),
+    uref(guard(_PROG, "timeslot_uri"), EB("isParentOf"), "program_uri"),
+    # common metadata (pa_converter.py:373-385)
+    triple("program_uri", DCT_PUBLISHER, lit("INA-PA")),
+    triple("program_uri", EB("hasIdentifier"), "hashed_id"),
+    triple("program_uri", EB("title"), "title", lang="fr"),
+    triple("program_uri", EB("summary"), "summary", lang="fr"),
+    triple("program_uri", EB("duration"), "duration_lex", dt=XSD("duration")),
+    triple("program_uri", MEMAD("titleNotes"), "title_notes", lang="fr"),
+    triple("program_uri", MEMAD("corpus"), "corpus"),
+    triple("program_uri", SKOS_NOTE, "notes"),
+    triple("program_uri", SKOS_NOTE, "legal_notes"),
+    triple("program_uri", MEMAD("log"), "sequences", lang="fr"),
+    triple("program_uri", MEMAD("broadcasting"), "broadcasting"),
+    # radio/TV extras (pa_converter.py:389-399)
+    triple("program_uri", MEMAD("lead"), "lead", lang="fr"),
+    triple("program_uri", EB("dateCreated"), "recording_date_lex",
+           dt=XSD("date")),
+    triple("program_uri", MEMAD("producerSummary"), "producer_summary",
+           lang="fr"),
+    triple("program_uri", MEMAD("hasISANIdentifier"), "isan"),
+    # record entity (pa_converter.py:402-423)
+    uref("record_uri", RDF_TYPE, lit(MEMAD("Record"))),
+    uref("program_uri", MEMAD("hasRecord"), "record_uri"),
+    triple("record_uri", EB("hasIdentifier"), "hashed_id"),
+    triple("record_uri", EB("dateCreated"), "creation_date_lex",
+           dt=XSD("date")),
+    triple("record_uri", EB("dateModified"), "update_date_lex",
+           dt=XSD("date")),
+    uref("record_uri", EB("hasLanguage"), lit(BASE + "language/french")),
+    uref("program_uri", EB("hasLanguage"), lit(BASE + "language/french")),
+    triple("record_uri", EB("hasType"), "record_type"),
+    # media (programs with one '_' only, pa_converter.py:426-436)
+    uref(guard(_MEDIA, "media_uri"), RDF_TYPE, lit(EB("MediaResource"))),
+    uref(guard(_MEDIA, "program_uri"), EB("isInstantiatedBy"), "media_uri"),
+    triple(guard(_MEDIA, "media_uri"), SKOS_NOTE, "media_note_id"),
+    triple(guard(_MEDIA, "media_uri"), SKOS_NOTE, "media_note_detail"),
+    # segment relative times (within the J2 try/except)
+    triple(guard(_SEG, "program_uri"), EB("start"), "t_start",
+           dt=XSD("time")),
+    triple(guard(_SEG, "program_uri"), EB("end"), "t_end", dt=XSD("time")),
+    # publication events (programs only, pa_converter.py:525-541)
+    uref(guard(_PROG, "history_uri"), RDF_TYPE, lit(EB("PublicationHistory"))),
+    uref(guard(_PROG, "program_uri"), EB("hasPublicationHistory"),
+         "history_uri"),
+    uref(guard(_PROG, "history_uri"), EB("hasPublicationEvent"),
+         "pubevent_uri"),
+    uref(guard(_PROG, "pubevent_uri"), RDF_TYPE, lit(EB("PublicationEvent"))),
+    uref(guard(_PROG, "pubevent_uri"), RDF_TYPE, lit(MEMAD("FirstRun"))),
+    triple(guard(_PROG, "pubevent_uri"), EB("publicationStartDateTime"),
+           "pubevent_start_lex", dt=XSD("dateTime")),
+    uref(guard(_PROG, "pubevent_uri"), EB("publishes"), "program_uri"),
+    uref(guard(_PROG, "pubevent_uri"), EB("isReleasedBy"), "channel_uri"),
+    triple(guard(_PROG, "pubevent_uri"), EB("duration"), "duration_lex",
+           dt=XSD("duration")),
+    triple(guard(_PROG, "pubevent_uri"), EB("hasPublicationRegion"),
+           "geo_scope"),
+    triple(guard(_PROG, "pubevent_uri"), EB("firstShowing"), lit("1"),
+           dt=XSD("boolean")),
+)
 
 
 def pa_triples(pa_full: DataFrame) -> DataFrame:
     """All triples of the PA pass (pa_converter.py:303-541)."""
     return explode_triples(
-        pa_full, *cached_exprs("pa_triples", _pa_bundle), graph="pa"
+        pa_full, CHANNEL, PARENTS, _PA, PRODUCERS, credits("program_uri"),
+        keywords("program_uri"), GENRES, THEMES, graph="pa",
     )
 
 

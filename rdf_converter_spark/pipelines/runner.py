@@ -75,8 +75,8 @@ def assemble_triples(
         ina_vocab(spark, "pa"),
         ylep.yle_triples(yle),
         yle_vocab(spark, "yle"),
-        flp.ld_flow_triples(flow, ld_lin),
-        flp.pa_flow_triples(flow, pa_lin),
+        flp.flow_triples(flow, ld_lin, "ld_flow"),
+        flp.flow_triples(flow, pa_lin, "pa_flow"),
         flp.yle_flow_triples(flow, yle_lin),
         subp.subtitle_triples(asr, ld_lin),
     ]

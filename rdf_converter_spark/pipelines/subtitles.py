@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config
-from ..operators.emit import explode_triples, triple, uref
+from ..operators.emit import bundle, explode_triples, lit, triple, uref
 from ..terms import EB, RDF_TYPE, XSD
+from .flow import _first_by_key
 
 BASE = config.BASE
 
@@ -46,6 +47,21 @@ def parse_asr(routed: DataFrame) -> DataFrame:
     return fused.of_kind(fused.parse_all(routed, kinds=("asr",)), "asr")
 
 
+_TEXTLINE = bundle(
+    uref("textline_uri", RDF_TYPE, lit(EB("TextLine"))),
+    triple("textline_uri", EB("textLineContent"), "content", lang="fr"),
+    uref("textline_uri", EB("textLineLanguage"),
+         lit(BASE + "language/french")),
+    triple("textline_uri", EB("textLineSource"),
+           lit("ASR (Vocapia Research 5.1)")),
+    triple("textline_uri", EB("textLineStartTime"), "start", dt=XSD("time")),
+    triple("textline_uri", EB("textLineEndTime"), "end", dt=XSD("time")),
+    triple("textline_uri", EB("hasTextLineRelatedPerson"),
+           "concat(`speaker`, `gender`)"),
+    uref("uri", EB("hasRelatedTextLine"), "textline_uri"),
+)
+
+
 def subtitle_triples(asr: DataFrame, ld_lineage: DataFrame) -> DataFrame:
     # the {iden -> URI} map: R-prefix stripped, extension stripped,
     # restricted to identifiers present in the LD lineage
@@ -62,12 +78,9 @@ def subtitle_triples(asr: DataFrame, ld_lineage: DataFrame) -> DataFrame:
             ).getItem(0),
         )
     )
-    w = Window.partitionBy("identifier").orderBy("dataset", "file", "row")
-    lineage_first = (
-        ld_lineage.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("identifier").alias("lkey"), "uri")
-    )
+    lineage_first = _first_by_key(
+        ld_lineage, ["dataset", "file", "row"]
+    ).withColumnRenamed("identifier", "lkey")
     mapping = keys.join(
         lineage_first, keys.iden == lineage_first.lkey, "inner"
     ).select(F.col("iden"), F.col("uri"))
@@ -85,20 +98,4 @@ def subtitle_triples(asr: DataFrame, ld_lineage: DataFrame) -> DataFrame:
         F.concat(F.col("uri"), F.lit("/subtitles/asr_"), F.col("n")),
     )
 
-    bundle = F.array(
-        uref("textline_uri", RDF_TYPE, EB("TextLine")),
-        triple("textline_uri", EB("textLineContent"), F.col("content"),
-               lang="fr"),
-        uref("textline_uri", EB("textLineLanguage"),
-             BASE + "language/french"),
-        triple("textline_uri", EB("textLineSource"),
-               "ASR (Vocapia Research 5.1)"),
-        triple("textline_uri", EB("textLineStartTime"), F.col("start"),
-               dt=XSD("time")),
-        triple("textline_uri", EB("textLineEndTime"), F.col("end"),
-               dt=XSD("time")),
-        triple("textline_uri", EB("hasTextLineRelatedPerson"),
-               F.concat(F.col("speaker"), F.col("gender"))),
-        uref("uri", EB("hasRelatedTextLine"), F.col("textline_uri")),
-    )
-    return explode_triples(numbered, bundle, graph="pa_subtitles")
+    return explode_triples(numbered, _TEXTLINE, graph="pa_subtitles")

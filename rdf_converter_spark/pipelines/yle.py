@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config, mappings
-from ..operators.emit import cached_exprs, explode_triples, triple, uref
+from ..operators.emit import bundle, each, explode_triples, guard, lit, triple, uref
 from ..sources.units import parse_yle_unit
 from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, SKOS_NOTE, XSD
 from ..textkit import (
@@ -30,6 +30,7 @@ from ..textkit import (
     yle_format_datetime,
     yle_ms_time,
 )
+from .ld import credits
 
 BASE = config.BASE
 
@@ -333,159 +334,115 @@ def parse_yle(routed: DataFrame) -> DataFrame:
     return fused.of_kind(fused.parse_all(routed, kinds=("yle",)), "yle")
 
 
-def _yle_bundle():
-    has_fr = F.col("firstrun_uri").isNotNull()
-    static = F.array(
-        # series (yle_converter.py:291-297)
-        uref("series_uri", RDF_TYPE, EB("Series")),
-        uref("series_uri", RDF_TYPE, EB("Collection")),
-        triple("series_uri", EB("title"), F.col("series_name")),
-        uref("series_uri", EB("isParentOf"), F.col("program_uri")),
-        uref(F.when(F.col("series_uri").isNotNull(), F.col("program_uri")),
-             RDF_TYPE, EB("Episode")),
-        # program metadata (:340-362)
-        uref("program_uri", RDF_TYPE, EB("TVProgramme")),
-        triple("program_uri", DCT_PUBLISHER, "Yle"),
-        triple("program_uri", EB("hasIdentifier"), F.col("hashed_id")),
-        triple("program_uri", EB("hasSubject"), F.col("subject")),
-        triple("program_uri", EB("episodeNumber"), F.col("number")),
-        triple("program_uri", EB("description"), F.col("description"),
-               lang="fi"),
-        triple("program_uri", EB("title"), F.col("fi_title"), lang="fi"),
-        triple("program_uri", EB("title"), F.col("se_title"), lang="se"),
-        triple("program_uri", EB("mainTitle"), F.col("main_title")),
-        triple("program_uri", EB("hasLanguage"), F.col("languages_label"),
-               lang="fi"),
-        triple("program_uri", EB("duration"), F.col("duration_lex"),
-               dt=XSD("duration")),
-        triple("program_uri", EB("version"), F.col("version")),
-        triple("program_uri", EB("workingTitle"), F.col("working_title")),
-        triple("program_uri", EB("dateArchived"), F.col("archive_date_lex"),
-               dt=XSD("date")),
-        triple("program_uri", EB("description"), F.col("web_desc"), lang="fi"),
-        triple("program_uri", EB("description"), F.col("web_desc_sw"),
-               lang="se"),
-        # media (:376-387)
-        uref("media_uri", RDF_TYPE, EB("MediaResource")),
-        uref("program_uri", EB("isInstantiatedBy"), F.col("media_uri")),
-        triple("media_uri", MEMAD("hasMetroIdentifier"), F.col("metro_id")),
-        triple("media_uri", EB("aspectRatio"), F.col("aspect_ratio")),
-        uref("media_uri", EB("hasVideoEncodingFormat"),
-             F.col("video_format_uri")),
-        triple("media_uri", EB("frameRate"), F.col("framerate"),
-               dt=XSD("float")),
-        # publication history + firstrun (:435-449)
-        uref("history_uri", RDF_TYPE, EB("PublicationHistory")),
-        uref("program_uri", EB("hasPublicationHistory"), F.col("history_uri")),
-        uref("history_uri", EB("hasPublicationEvent"), F.col("firstrun_uri")),
-        uref("firstrun_uri", RDF_TYPE, MEMAD("FirstRun")),
-        triple("firstrun_uri", EB("publicationStartDateTime"),
-               F.col("firstrun_lex"), dt=XSD("dateTime")),
-        uref("firstrun_uri", EB("publishes"), F.col("program_uri")),
-    )
-    langs = F.transform(
-        "language_uris",
-        lambda u: uref("program_uri", EB("hasLanguage"), u),
-    )
-    genres = F.transform(
-        "genres",
-        lambda g: triple("program_uri", EB("hasGenre"), g["val"],
-                         uri=g["is_uri"],
-                         lang=F.when(~g["is_uri"], F.lit("fi"))),
-    )
-    subtitles = F.flatten(
-        F.transform(
-            "subtitles",
-            lambda s: F.array(
-                uref(s["uri"], RDF_TYPE, EB("Subtitling")),
-                uref("program_uri", EB("hasSubtitling"), s["uri"]),
-                uref(s["uri"], EB("hasLanguage"), s["lang_uri"]),
-                triple(s["uri"], EB("filename"), s["filename"]),
-                triple(s["uri"], EB("dateIngested"), s["ingested_lex"],
-                       dt=XSD("date")),
-                triple(s["uri"], EB("datePublished"), s["published_lex"],
-                       dt=XSD("date")),
-            ),
-        )
-    )
-    audios = F.flatten(
-        F.transform(
-            "audios",
-            lambda a: F.array(
-                uref(a["uri"], RDF_TYPE, EB("AudioTrack")),
-                uref("program_uri", EB("hasAudioTrack"), a["uri"]),
-                uref(a["uri"], EB("hasLanguage"), a["lang_uri"]),
-                triple(a["uri"], SKOS_NOTE, a["note"]),
-                triple(a["uri"], EB("sampleRate"), a["sample_rate"],
-                       dt=XSD("nonNegativeInteger")),
-            ),
-        )
-    )
-    pubs = F.flatten(
-        F.transform(
-            "pubevents",
-            lambda p: F.array(
-                uref(p["channel_uri"], RDF_TYPE, EB("PublicationChannel")),
-                triple(p["channel_uri"], EB("publicationChannelName"),
-                       p["channel_name"]),
-                triple(p["channel_uri"], EB("publicationChannelId"),
-                       p["channel_code"]),
-                triple(p["channel_uri"], EB("serviceDescription"),
-                       "TV channel"),
-                uref(p["uri"], RDF_TYPE, EB("PublicationEvent")),
-                uref("history_uri", EB("hasPublicationEvent"), p["uri"]),
-                uref(p["uri"], EB("publishes"), F.col("program_uri")),
-                uref(p["uri"], EB("isReleasedBy"), p["channel_uri"]),
-                triple(p["uri"], EB("publicationStartDateTime"),
-                       p["start_lex"], dt=XSD("dateTime")),
-                triple(p["uri"], EB("publicationEndDateTime"),
-                       p["end_lex"], dt=XSD("dateTime")),
-                # i==0 and no explicit firstrun -> FirstRun (A5) [Q]
-                uref(
-                    F.when(p["is_first"] & ~has_fr, p["uri"]),
-                    RDF_TYPE, MEMAD("FirstRun"),
-                ),
-                triple(
-                    F.when(p["is_first"], p["uri"]),
-                    EB("firstShowing"), "1", dt=XSD("boolean"),
-                ),
-            ),
-        )
-    )
-    segments = F.flatten(
-        F.transform(
-            "segments",
-            lambda s: F.array(
-                uref(s["uri"], RDF_TYPE, EB("Part")),
-                triple(s["uri"], EB("hasIdentifier"), s["hashed"]),
-                uref("program_uri", EB("hasPart"), s["uri"]),
-                triple(s["uri"], EB("start"), s["start_lex"], dt=XSD("time")),
-                triple(s["uri"], EB("end"), s["end_lex"], dt=XSD("time")),
-                triple(s["uri"], EB("duration"), s["dur_lex"], dt=XSD("time")),
-                triple(s["uri"], EB("description"), s["description"],
-                       lang="fi"),
-            ),
-        )
-    )
-    contributors = F.flatten(
-        F.transform(
-            "contributors",
-            lambda c: F.array(
-                uref(c["agent_uri"], RDF_TYPE, EB("Agent")),
-                uref("program_uri", EB("hasContributor"), c["agent_uri"]),
-                triple(c["agent_uri"], EB("agentName"), c["name"]),
-                uref(c["agent_uri"], EB("hasRole"), c["role_uri"]),
-            ),
-        )
-    )
-    return (static, langs, genres, subtitles, audios, pubs, segments,
-            contributors)
+_YLE = bundle(
+    # series (yle_converter.py:291-297)
+    uref("series_uri", RDF_TYPE, lit(EB("Series"))),
+    uref("series_uri", RDF_TYPE, lit(EB("Collection"))),
+    triple("series_uri", EB("title"), "series_name"),
+    uref("series_uri", EB("isParentOf"), "program_uri"),
+    uref(guard("`series_uri` IS NOT NULL", "program_uri"), RDF_TYPE,
+         lit(EB("Episode"))),
+    # program metadata (:340-362)
+    uref("program_uri", RDF_TYPE, lit(EB("TVProgramme"))),
+    triple("program_uri", DCT_PUBLISHER, lit("Yle")),
+    triple("program_uri", EB("hasIdentifier"), "hashed_id"),
+    triple("program_uri", EB("hasSubject"), "subject"),
+    triple("program_uri", EB("episodeNumber"), "number"),
+    triple("program_uri", EB("description"), "description", lang="fi"),
+    triple("program_uri", EB("title"), "fi_title", lang="fi"),
+    triple("program_uri", EB("title"), "se_title", lang="se"),
+    triple("program_uri", EB("mainTitle"), "main_title"),
+    triple("program_uri", EB("hasLanguage"), "languages_label", lang="fi"),
+    triple("program_uri", EB("duration"), "duration_lex", dt=XSD("duration")),
+    triple("program_uri", EB("version"), "version"),
+    triple("program_uri", EB("workingTitle"), "working_title"),
+    triple("program_uri", EB("dateArchived"), "archive_date_lex",
+           dt=XSD("date")),
+    triple("program_uri", EB("description"), "web_desc", lang="fi"),
+    triple("program_uri", EB("description"), "web_desc_sw", lang="se"),
+    # media (:376-387)
+    uref("media_uri", RDF_TYPE, lit(EB("MediaResource"))),
+    uref("program_uri", EB("isInstantiatedBy"), "media_uri"),
+    triple("media_uri", MEMAD("hasMetroIdentifier"), "metro_id"),
+    triple("media_uri", EB("aspectRatio"), "aspect_ratio"),
+    uref("media_uri", EB("hasVideoEncodingFormat"), "video_format_uri"),
+    triple("media_uri", EB("frameRate"), "framerate", dt=XSD("float")),
+    # publication history + firstrun (:435-449)
+    uref("history_uri", RDF_TYPE, lit(EB("PublicationHistory"))),
+    uref("program_uri", EB("hasPublicationHistory"), "history_uri"),
+    uref("history_uri", EB("hasPublicationEvent"), "firstrun_uri"),
+    uref("firstrun_uri", RDF_TYPE, lit(MEMAD("FirstRun"))),
+    triple("firstrun_uri", EB("publicationStartDateTime"), "firstrun_lex",
+           dt=XSD("dateTime")),
+    uref("firstrun_uri", EB("publishes"), "program_uri"),
+)
+
+_LANGUAGES = each("language_uris", "u",
+                  uref("program_uri", EB("hasLanguage"), "u"))
+
+# a known class is a URI, any other value a fi-tagged literal
+_GENRES = each("genres", "g", "IF(g.is_uri, %s, %s)" % (
+    uref("program_uri", EB("hasGenre"), "g.val"),
+    triple("program_uri", EB("hasGenre"), "g.val", lang="fi")))
+
+_SUBTITLES = each(
+    "subtitles", "s",
+    uref("s.uri", RDF_TYPE, lit(EB("Subtitling"))),
+    uref("program_uri", EB("hasSubtitling"), "s.uri"),
+    uref("s.uri", EB("hasLanguage"), "s.lang_uri"),
+    triple("s.uri", EB("filename"), "s.filename"),
+    triple("s.uri", EB("dateIngested"), "s.ingested_lex", dt=XSD("date")),
+    triple("s.uri", EB("datePublished"), "s.published_lex", dt=XSD("date")),
+)
+
+_AUDIOS = each(
+    "audios", "a",
+    uref("a.uri", RDF_TYPE, lit(EB("AudioTrack"))),
+    uref("program_uri", EB("hasAudioTrack"), "a.uri"),
+    uref("a.uri", EB("hasLanguage"), "a.lang_uri"),
+    triple("a.uri", SKOS_NOTE, "a.note"),
+    triple("a.uri", EB("sampleRate"), "a.sample_rate",
+           dt=XSD("nonNegativeInteger")),
+)
+
+_PUBEVENTS = each(
+    "pubevents", "p",
+    uref("p.channel_uri", RDF_TYPE, lit(EB("PublicationChannel"))),
+    triple("p.channel_uri", EB("publicationChannelName"), "p.channel_name"),
+    triple("p.channel_uri", EB("publicationChannelId"), "p.channel_code"),
+    triple("p.channel_uri", EB("serviceDescription"), lit("TV channel")),
+    uref("p.uri", RDF_TYPE, lit(EB("PublicationEvent"))),
+    uref("history_uri", EB("hasPublicationEvent"), "p.uri"),
+    uref("p.uri", EB("publishes"), "program_uri"),
+    uref("p.uri", EB("isReleasedBy"), "p.channel_uri"),
+    triple("p.uri", EB("publicationStartDateTime"), "p.start_lex",
+           dt=XSD("dateTime")),
+    triple("p.uri", EB("publicationEndDateTime"), "p.end_lex",
+           dt=XSD("dateTime")),
+    # i==0 and no explicit firstrun -> FirstRun (A5) [Q]
+    uref(guard("p.is_first AND `firstrun_uri` IS NULL", "p.uri"), RDF_TYPE,
+         lit(MEMAD("FirstRun"))),
+    triple(guard("p.is_first", "p.uri"), EB("firstShowing"), lit("1"),
+           dt=XSD("boolean")),
+)
+
+_SEGMENTS = each(
+    "segments", "s",
+    uref("s.uri", RDF_TYPE, lit(EB("Part"))),
+    triple("s.uri", EB("hasIdentifier"), "s.hashed"),
+    uref("program_uri", EB("hasPart"), "s.uri"),
+    triple("s.uri", EB("start"), "s.start_lex", dt=XSD("time")),
+    triple("s.uri", EB("end"), "s.end_lex", dt=XSD("time")),
+    triple("s.uri", EB("duration"), "s.dur_lex", dt=XSD("time")),
+    triple("s.uri", EB("description"), "s.description", lang="fi"),
+)
 
 
 def yle_triples(docs: DataFrame) -> DataFrame:
     """All triples of one dataset pass (yle_converter.py:277-543)."""
     return explode_triples(
-        docs, *cached_exprs("yle_triples", _yle_bundle), graph="yle"
+        docs, _YLE, _LANGUAGES, _GENRES, _SUBTITLES, _AUDIOS, _PUBEVENTS,
+        _SEGMENTS, credits("program_uri", "contributors"), graph="yle",
     )
 
 

@@ -38,12 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# (subject-term) <p> (object-part) .  — subject is an IRI or a blank
-# node label; object classified separately. Blank nodes ride the
+# The object term's classes: an IRI, a blank node label or a literal
+# (with its language tag or datatype). Blank nodes ride the
 # 6-column schema as '_:'-prefixed strings with obj_is_uri=True (a
 # blank node is a RESOURCE term; the boolean distinguishes resource
 # vs literal) — the Turtle section below documents the convention.
-_LINE = r'^\s*(<[^>]*>|_:[^\s<>"]+)\s*<([^>]*)>\s*(.*?)\s*\.\s*$'
 _URI_OBJ = r'^<([^>]*)>$'
 _BNODE_OBJ = r'^_:[^\s<>"]+$'
 _LIT_OBJ = r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z][A-Za-z0-9-]*)|\^\^<([^>]*)>)?$'
@@ -79,63 +78,13 @@ def parse_ntriples(
     lines: DataFrame, column: str = "value", on_error: str = "raise"
 ) -> DataFrame:
     """Parse a DataFrame of N-Triples lines into the engine's
-    6-column triple table. Blank lines and ``#`` comments are
-    skipped. ``on_error='raise'`` fails the job on the first
-    malformed statement (with the offending line in the message);
-    ``'drop'`` discards malformed lines — crawl-grade leniency.
+    6-column triple table: :func:`parse_nquads` with a graph term
+    refused. Blank lines and ``#`` comments are skipped.
+    ``on_error='raise'`` fails the job on the first malformed
+    statement (with the offending line in the message); ``'drop'``
+    discards malformed lines — crawl-grade leniency.
     """
-    if on_error not in ("raise", "drop"):
-        raise ValueError("on_error must be 'raise' or 'drop'")
-    src = F.col(column)
-    content = lines.filter(
-        (F.trim(src) != "") & ~F.trim(src).startswith("#"))
-    raw_subj = F.regexp_extract(src, _LINE, 1)
-    parts = content.select(
-        src.alias("_line"),
-        # '<iri>' strips its angles; a '_:label' passes through
-        F.when(raw_subj.startswith("<"),
-               F.regexp_extract(raw_subj, _URI_OBJ, 1))
-        .otherwise(raw_subj).alias("subj"),
-        F.regexp_extract(src, _LINE, 2).alias("pred"),
-        F.regexp_extract(src, _LINE, 3).alias("_obj"),
-    )
-    # regexp_extract returns '' on no-match; a matched line always
-    # has non-empty subj/pred (<> IRIs are non-empty in practice but
-    # '' subjects would also fail _LINE's obj anchor round-trip, so
-    # the malformed gate keys on the OBJECT classification below)
-    is_uri = F.col("_obj").rlike(_URI_OBJ)
-    is_bnode = F.col("_obj").rlike(_BNODE_OBJ)
-    is_lit = F.col("_obj").rlike(_LIT_OBJ)
-    raw_lit = F.regexp_extract(F.col("_obj"), _LIT_OBJ, 1)
-    lit = F.when(
-        raw_lit.contains("\\"), _unescape_udf(raw_lit)
-    ).otherwise(raw_lit)
-    parsed = parts.select(
-        "_line",
-        (F.col("_line").rlike(_LINE)
-         & (is_uri | is_bnode | is_lit)).alias("_ok"),
-        F.col("subj"),
-        F.col("pred"),
-        F.when(is_uri, F.regexp_extract(F.col("_obj"), _URI_OBJ, 1))
-        .when(is_bnode, F.col("_obj"))
-        .otherwise(lit).alias("obj"),
-        (is_uri | is_bnode).alias("obj_is_uri"),
-        F.nullif(F.regexp_extract(F.col("_obj"), _LIT_OBJ, 2), F.lit(""))
-        .alias("obj_lang"),
-        F.nullif(F.regexp_extract(F.col("_obj"), _LIT_OBJ, 3), F.lit(""))
-        .alias("obj_datatype"),
-    )
-    if on_error == "raise":
-        # assert_true returns NULL on success and raises otherwise;
-        # putting it in the FILTER condition makes it unprunable (a
-        # dropped check column would be optimized away unevaluated)
-        guarded = parsed.filter(F.assert_true(
-            F.col("_ok"),
-            F.concat(F.lit("malformed N-Triples line: "), F.col("_line")),
-        ).isNull())
-    else:
-        guarded = parsed.filter(F.col("_ok"))
-    return guarded.drop("_line", "_ok")
+    return _parse_lines(lines, column, on_error, quads=False).drop("graph")
 
 
 def read_ntriples(
@@ -172,18 +121,26 @@ def parse_nquads(
     """Parse N-Quads lines into the 6-column triple table plus a
     ``graph`` column (NULL = default graph, i.e. a plain N-Triples
     line — N-Quads is a strict superset, so this reader subsumes
-    ``parse_ntriples`` for mixed dumps). Same split as the NT reader:
-    structure and clean literals stay JVM-side; only literals that
-    actually contain an escape cross into the Arrow unescape kernel.
+    ``parse_ntriples`` for mixed dumps). Structure and clean literals
+    stay JVM-side; only literals that actually contain an escape
+    cross into the Arrow unescape kernel.
     """
+    return _parse_lines(lines, column, on_error, quads=True)
+
+
+def _parse_lines(lines: DataFrame, column: str, on_error: str,
+                 quads: bool) -> DataFrame:
     if on_error not in ("raise", "drop"):
         raise ValueError("on_error must be 'raise' or 'drop'")
     src = F.col(column)
     content = lines.filter(
         (F.trim(src) != "") & ~F.trim(src).startswith("#"))
+    ok = src.rlike(_NQ_LINE)
+    if not quads:
+        ok = ok & (F.regexp_extract(src, _NQ_LINE, 4) == "")
     parts = content.select(
         src.alias("_line"),
-        src.rlike(_NQ_LINE).alias("_ok"),
+        ok.alias("_ok"),
         _unangle(F.regexp_extract(src, _NQ_LINE, 1)).alias("subj"),
         F.regexp_extract(src, _NQ_LINE, 2).alias("pred"),
         F.regexp_extract(src, _NQ_LINE, 3).alias("_obj"),
@@ -213,9 +170,14 @@ def parse_nquads(
         "graph",
     )
     if on_error == "raise":
+        # assert_true returns NULL on success and raises otherwise;
+        # putting it in the FILTER condition makes it unprunable (a
+        # dropped check column would be optimized away unevaluated)
         guarded = parsed.filter(F.assert_true(
             F.col("_ok"),
-            F.concat(F.lit("malformed N-Quads line: "), F.col("_line")),
+            F.concat(F.lit("malformed %s line: "
+                           % ("N-Quads" if quads else "N-Triples")),
+                     F.col("_line")),
         ).isNull())
     else:
         guarded = parsed.filter(F.col("_ok"))
@@ -840,22 +802,7 @@ def parse_turtle_docs(docs: DataFrame, column: str = "value",
     blank node scope IS the document (RDF 1.1 Concepts §3.4), and at
     crawl scale every file reuses ``_:b0``. Pass ``False`` only for
     single-document parses that need bare deterministic labels."""
-
-    def gen(batches):
-        cols = ["subj", "pred", "obj", "obj_is_uri", "obj_lang",
-                "obj_datatype"]
-        for pdf in batches:
-            rows = []
-            for text in pdf[column]:
-                pfx = ""
-                if skolemize:
-                    pfx = hashlib.sha1(
-                        text.encode("utf-8", "surrogatepass")
-                    ).hexdigest()[:10] + "_"
-                rows.extend(parse_turtle_text(text, bnode_prefix=pfx))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(gen, schema=_TTL_SCHEMA)
+    return _parse_docs(docs, column, skolemize, trig=False)
 
 
 def read_turtle(spark: SparkSession, path: str) -> DataFrame:
@@ -878,10 +825,15 @@ def parse_trig_docs(docs: DataFrame, column: str = "value",
     the 7-column QUAD table (``graph`` NULL = default graph — same
     shape as :func:`parse_nquads`). Same single-Arrow-pass /
     per-document-skolemization design as :func:`parse_turtle_docs`."""
+    return _parse_docs(docs, column, skolemize, trig=True)
+
+
+def _parse_docs(docs: DataFrame, column: str, skolemize: bool,
+                trig: bool) -> DataFrame:
+    schema = _TRIG_SCHEMA if trig else _TTL_SCHEMA
+    cols = [f.split()[0] for f in schema.split(", ")]
 
     def gen(batches):
-        cols = ["subj", "pred", "obj", "obj_is_uri", "obj_lang",
-                "obj_datatype", "graph"]
         for pdf in batches:
             rows = []
             for text in pdf[column]:
@@ -891,10 +843,10 @@ def parse_trig_docs(docs: DataFrame, column: str = "value",
                         text.encode("utf-8", "surrogatepass")
                     ).hexdigest()[:10] + "_"
                 rows.extend(parse_turtle_text(
-                    text, bnode_prefix=pfx, trig=True))
+                    text, bnode_prefix=pfx, trig=trig))
             yield pd.DataFrame(rows, columns=cols)
 
-    return docs.mapInPandas(gen, schema=_TRIG_SCHEMA)
+    return docs.mapInPandas(gen, schema=schema)
 
 
 def read_trig(spark: SparkSession, path: str) -> DataFrame:

@@ -116,28 +116,36 @@ def stream_triples_upsert(
 
     def process_batch(batch_df, batch_id: int):
         s = batch_df.sparkSession
-        delta = build_triples_extraction(s, route(batch_df)).withColumn(
+        # the batch is read once (the parse and the page set share the
+        # persisted copy) and the delta is computed once (for the
+        # touched buckets and for the merge)
+        batch = batch_df.persist()
+        delta = build_triples_extraction(s, route(batch)).withColumn(
             "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets))
-        )
-        if _store_exists(s):
-            touched = [
-                r["bucket"]
-                for r in delta.select("bucket").distinct().collect()
-            ]
-            base = s.read.parquet(store).filter(
-                F.col("bucket").isin(touched)
+        ).persist()
+        try:
+            if _store_exists(s):
+                touched = [
+                    r["bucket"]
+                    for r in delta.select("bucket").distinct().collect()
+                ]
+                base = s.read.parquet(store).filter(
+                    F.col("bucket").isin(touched)
+                )
+                pages = batch.select(F.col("url").alias("src_url")).distinct()
+                merged = merge_batch(base, delta, pages)
+            else:
+                merged = delta.dropDuplicates()
+            (
+                merged.localCheckpoint(eager=True)
+                .write.partitionBy("bucket")
+                .option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
+                .parquet(store)
             )
-            pages = batch_df.select(F.col("url").alias("src_url")).distinct()
-            merged = merge_batch(base, delta, pages)
-        else:
-            merged = delta.dropDuplicates()
-        (
-            merged.localCheckpoint(eager=True)
-            .write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(store)
-        )
+        finally:
+            delta.unpersist()
+            batch.unpersist()
 
     return (
         reader.writeStream.foreachBatch(process_batch)

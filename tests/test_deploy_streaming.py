@@ -142,12 +142,13 @@ def test_streaming_upsert_store(spark, corpus, tmp_path):
     q = stream_triples_upsert(spark, src, out)
     q.awaitTermination(300)
     # exactly-once per input file: the restarted stream runs one batch,
-    # and the stream's log of the files that batch read holds only the
-    # new file, not the one its checkpoint committed. (numInputRows
-    # counts the batch's rows once per read of it, and the merge path
-    # reads the batch more than once.)
-    assert [p["batchId"] for p in q.recentProgress
-            if p["numInputRows"]] == [1]
+    # which reads the new file's rows once (numInputRows counts every
+    # read of the batch), and the stream's log of the files that batch
+    # read holds only the new file, not the one its checkpoint committed.
+    n_recrawl = spark.read.parquet(
+        os.path.join(src, "recrawl.parquet")).count()
+    assert [(p["batchId"], p["numInputRows"]) for p in q.recentProgress
+            if p["numInputRows"]] == [(1, n_recrawl)]
     log = os.path.join(out, "_upsert_checkpoint", "sources", "0", "1")
     with open(log) as fh:
         read = [json.loads(line)["path"]

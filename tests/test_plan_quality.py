@@ -49,6 +49,61 @@ def test_emission_is_whole_stage_codegen(spark, routed):
     assert "*(" in plan, plan
 
 
+def test_emission_plans_cost_few_py4j_calls(spark, monkeypatch):
+    """Building (not running) every kind's emission plan costs a few
+    Python-to-JVM round trips: the bundles are SQL text applied with
+    one ``selectExpr``, not Column trees of one call per node (which
+    cost thousands of calls per kind)."""
+    import py4j.java_gateway as jg
+    from pyspark.sql import types as T
+
+    from rdf_converter_spark.pipelines import ld as ldp
+    from rdf_converter_spark.pipelines import pa as pap
+    from rdf_converter_spark.pipelines import subtitles as subp
+    from rdf_converter_spark.pipelines import yle as ylep
+
+    def empty(schema, *extra):
+        fields = schema.fields + [T.StructField(c, T.StringType())
+                                  for c in extra]
+        df = spark.createDataFrame([], T.StructType(fields))
+        df.columns  # the schema fetch is not part of the build
+        return df
+
+    programs = empty(ldp.LD_PROGRAM_SCHEMA)
+    segments = empty(ldp.LD_SEGMENT_SCHEMA, "parent_start_raw", "t_start",
+                     "t_end")
+    pa_full = empty(pap.PA_SCHEMA, "heure2", "parent_heure2", "t_start",
+                    "t_end", "pubevent_start_lex")
+    yle = empty(ylep.YLE_SCHEMA)
+    asr = empty(subp.ASR_SCHEMA)
+    lineage = ldp.ld_lineage(programs)
+    lineage.columns
+
+    calls = {"n": 0}
+    send = jg.GatewayClient.send_command
+
+    def counting(self, *a, **kw):
+        calls["n"] += 1
+        return send(self, *a, **kw)
+
+    monkeypatch.setattr(jg.GatewayClient, "send_command", counting)
+    counts = {}
+    for kind, build in [
+        ("ld_program", lambda: ldp.ld_program_triples(programs)),
+        ("ld_segment", lambda: ldp.ld_segment_triples(segments)),
+        ("pa", lambda: pap.pa_triples(pa_full)),
+        ("yle", lambda: ylep.yle_triples(yle)),
+        ("subtitles", lambda: subp.subtitle_triples(asr, lineage)),
+    ]:
+        calls["n"] = 0
+        build()
+        counts[kind] = calls["n"]
+    monkeypatch.undo()
+    # measured ~490 in all (9-120 per kind, 336 for the subtitles'
+    # joins); one Column bundle alone costs thousands
+    assert sum(counts.values()) < 1000, counts
+
+
 def test_aqe_splits_skewed_join(spark):
     """AQE skew-join (north_star: 'skewed predicates and hub entities
     ... AQE skew-join hints') must actually fire: a join whose probe

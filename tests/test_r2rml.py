@@ -147,3 +147,21 @@ def test_compile_template_literal_only(spark):
     df = spark.createDataFrame([(1,)], "id long")
     col = compile_template("no-placeholders")
     assert df.select(col.alias("v")).collect()[0].v == "no-placeholders"
+
+
+def test_quotes_and_backslashes_emitted_verbatim(spark):
+    df = spark.createDataFrame([(1, "it's")], "id long, name string")
+    pred = P + "o'k\\x"
+    cls = "http://x/C'l\\ass"
+    out = r2rml_triples(df, {
+        "subject": {"template": "http://x/it's\\{id}", "class": cls},
+        "predicate_objects": [
+            {"pred": pred, "column": "name"},
+            {"pred": pred, "template": "http://x/a'b\\c/{name}"},
+        ],
+    })
+    assert _set(out.select("subj", "pred", "obj", "obj_is_uri")) == {
+        ("http://x/it's\\1", RDF_TYPE, cls, True),
+        ("http://x/it's\\1", pred, "it's", False),
+        ("http://x/it's\\1", pred, "http://x/a'b\\c/it's", True),
+    }

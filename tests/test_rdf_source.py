@@ -66,9 +66,15 @@ def test_malformed_raise_vs_drop(spark):
         "<http://x/s> <http://x/p> <http://x/o> .",
         "this is not a triple",
         '<http://x/s> <http://x/p> "unterminated .',
+        "<http://x/s> <http://x/p> <http://x/o> <http://x/g> .",
     ])
     with pytest.raises(Exception, match="malformed N-Triples"):
         parse_ntriples(bad).collect()
+    quad = _lines(spark, [
+        "<http://x/s> <http://x/p> <http://x/o> <http://x/g> .",
+    ])
+    with pytest.raises(Exception, match="malformed N-Triples"):
+        parse_ntriples(quad).collect()
     ok = parse_ntriples(bad, on_error="drop")
     assert ok.count() == 1
     with pytest.raises(ValueError, match="on_error"):
