@@ -22,7 +22,9 @@ def test_ld_flow(spark, routed, golden_outputs):
 
     flow = flp.parse_flow(routed)
     lineage = ldp.ld_lineage(ldp.parse_ld_programs(routed))
-    mine = collect_triples(dedup_triples(flp.ld_flow_triples(flow, lineage)))
+    mine = collect_triples(
+        dedup_triples(flp.flow_triples(flow, lineage, "ld_flow"))
+    )
     _check(mine, golden_outputs, {"ld_flow_filenames.ttl"})
 
 
@@ -33,7 +35,9 @@ def test_pa_flow(spark, routed, golden_outputs):
 
     flow = flp.parse_flow(routed)
     lineage = pap.pa_lineage(pap.parse_pa(routed))
-    mine = collect_triples(dedup_triples(flp.pa_flow_triples(flow, lineage)))
+    mine = collect_triples(
+        dedup_triples(flp.flow_triples(flow, lineage, "pa_flow"))
+    )
     _check(mine, golden_outputs, {"pa_flow_filenames.ttl"})
 
 
