@@ -1329,26 +1329,24 @@ def q_rdfs_incremental(spark, sf_dir):
 
 
 def q_bgp_filter_union(spark, sf_dir):
-    """SPARQL UNION + FILTER (operators/bgp.py:bgp_union): customers
-    in two mkt segments UNION orders with status F linked to their
-    customer — branch-only variables null-padded (coalesced to '' for
-    the engine-neutral hash), per-branch FILTERs in SPARQL ?var
-    syntax. Each branch is its own join tree; the union is a
-    zero-shuffle Union node."""
-    from rdf_converter_spark.operators.bgp import bgp_union
+    """SPARQL UNION + FILTER (operators/bgp.py:bag_union over
+    bgp_match): customers in two mkt segments UNION orders with status
+    F linked to their customer — branch-only variables null-padded
+    (coalesced to '' for the engine-neutral hash), per-branch FILTERs
+    in SPARQL ?var syntax. Each branch is its own join tree; the union
+    is a zero-shuffle Union node."""
+    from rdf_converter_spark.operators.bgp import bag_union, bgp_match
 
     base = "http://kg.test/"
     kg = _kg_store(spark, sf_dir)
-    out = bgp_union(
-        kg,
-        [
-            [("?c", base + "ontology#type", base + "Customer"),
-             ("?c", base + "ontology#segment", "?v")],
-            [("?o", base + "ontology#by", "?c"),
-             ("?o", base + "ontology#status", "?v")],
-        ],
-        filters=[["?v IN ('AUTOMOBILE', 'BUILDING')"], ["?v = 'F'"]],
-    )
+    out = bag_union([
+        bgp_match(kg, [("?c", base + "ontology#type", base + "Customer"),
+                       ("?c", base + "ontology#segment", "?v")],
+                  filters=["?v IN ('AUTOMOBILE', 'BUILDING')"]),
+        bgp_match(kg, [("?o", base + "ontology#by", "?c"),
+                       ("?o", base + "ontology#status", "?v")],
+                  filters=["?v = 'F'"]),
+    ])
     return out.select(
         F.col("c").alias("cust"),
         F.coalesce(F.col("o"), F.lit("")).alias("order_uri"),

@@ -41,6 +41,13 @@ _KIND_GRAPHS = {
     "yle": ["yle", "yle_flow"],
 }
 
+# converter -> (lineage table, reference mapping CSV), written with -k
+_MAPPING_CSVS = {
+    "ld": ("lineage_ld", "ina_ld_mapping.csv"),
+    "pa": ("lineage_pa", "ina_pa_mapping.csv"),
+    "yle": ("lineage_yle", "yle_mapping.csv"),
+}
+
 
 def main(argv=None):
     ap = argparse.ArgumentParser(description="MeMAD Converter (Spark)")
@@ -70,10 +77,9 @@ def main(argv=None):
         .getOrCreate()
     )
     try:
-        from rdf_converter_spark.pipelines import ld as ldp
-        from rdf_converter_spark.pipelines import pa as pap
-        from rdf_converter_spark.pipelines import yle as ylep
-        from rdf_converter_spark.pipelines.runner import build_triples_inmem
+        from rdf_converter_spark.pipelines.fused import parse_all
+        from rdf_converter_spark.pipelines.runner import (assemble_triples,
+                                                          lineage_tables)
         from rdf_converter_spark.operators.export import to_turtle_pretty
         from rdf_converter_spark.sources.ingest import ingest_reference_layout
         from rdf_converter_spark.sources.route import route
@@ -103,7 +109,9 @@ def main(argv=None):
         from rdf_converter_spark.operators.emit import dedup_triples
         from rdf_converter_spark.terms import TRIPLE_KEY
 
-        routed = route(web)
+        # one parse feeds the triples and the mapping CSVs
+        parsed = parse_all(route(web)).localCheckpoint(eager=True)
+        lineage = lineage_tables(parsed)
         # dedup within (graph, yle dataset): the engine's global
         # (graph, triple) dedup keeps ONE survivor with an arbitrary
         # src_url, so a triple emitted by pages in two yle datasets
@@ -111,7 +119,7 @@ def main(argv=None):
         # the reference re-emits it in every dataset's graph
         # (yle_converter.py:545-546; ADVICE r2). _ds is null outside
         # the yle graph, so ld/pa dedup keys are unchanged.
-        raw = build_triples_inmem(spark, routed, dedup=False)
+        raw = assemble_triples(spark, parsed, lineage, dedup=False)
         ds_of = F.when(
             F.col("graph") == "yle", F.split("src_url", "/").getItem(4)
         )
@@ -162,25 +170,11 @@ def main(argv=None):
             print("saved %s (%d triples)" % (path, n))
 
         if args.keep_mappings:
-            pairs = []
-            if args.converter in ("ld", "all"):
-                progs = ldp.parse_ld_programs(routed)
-                pairs.append(("ina_ld_mapping.csv", ldp.ld_lineage(progs)))
-            if args.converter in ("pa", "all"):
-                pairs.append(
-                    ("ina_pa_mapping.csv",
-                     pap.pa_lineage(pap.parse_pa(routed)))
-                )
-            if args.converter in ("yle", "all"):
-                pairs.append(
-                    ("yle_mapping.csv",
-                     ylep.yle_lineage(ylep.parse_yle(routed)))
-                )
-            for name, df in pairs:
-                df.toPandas().to_csv(
-                    os.path.join(args.output, name), index=False
-                )
-                print("saved %s" % os.path.join(args.output, name))
+            for kind, (table, name) in _MAPPING_CSVS.items():
+                if args.converter in (kind, "all"):
+                    path = os.path.join(args.output, name)
+                    lineage[table].toPandas().to_csv(path, index=False)
+                    print("saved %s" % path)
         return 0
     finally:
         if existing is None:

@@ -473,35 +473,15 @@ def bgp_match(
     return bound
 
 
-def bgp_union(
-    triples: DataFrame,
-    groups: Sequence[Sequence[Tuple[str, str, str]]],
-    filters: Sequence[Sequence[str]] = (),
-) -> DataFrame:
-    """SPARQL ``UNION``: evaluate each alternative group as its own
-    BGP and take the bag union of the solution mappings. Variables
-    appearing in only some branches are null in the others' rows
-    (SPARQL leaves them unbound), so the result schema is the sorted
-    union of all branch variables.
-
-    Plan shape: each branch is an independent join tree; the union
-    itself is a zero-shuffle ``Union`` node — no dedup is applied
-    (SPARQL UNION is a bag operator; wrap in ``.distinct()`` for the
-    set view)."""
-    groups = [list(g) for g in groups]
-    if not groups:
-        raise ValueError("empty UNION")
-    fls = list(filters) if filters else [()] * len(groups)
-    if len(fls) != len(groups):
-        raise ValueError("filters must align 1:1 with UNION groups")
-    return bag_union([bgp_match(triples, g, filters=f)
-                      for g, f in zip(groups, fls)])
-
-
 def bag_union(sols: Sequence[DataFrame]) -> DataFrame:
-    """Bag union of solution relations over the sorted union of their
-    variables; a variable a relation lacks is null (unbound) in its
-    rows."""
+    """SPARQL ``UNION``: the bag union of solution relations (one per
+    alternative group) over the sorted union of their variables; a
+    variable a relation lacks is null (unbound) in its rows. Each
+    relation keeps its own join tree; the union is a zero-shuffle
+    ``Union`` node with no dedup (wrap in ``.distinct()`` for the set
+    view)."""
+    if not sols:
+        raise ValueError("empty UNION")
     all_vars = sorted(set().union(*[set(s.columns) for s in sols]))
     out = None
     for s in sols:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import config
 from ..operators.emit import bundle, explode_triples, lit, triple, uref
@@ -28,10 +29,19 @@ from ..terms import EB
 BASE = config.BASE
 
 
-def parse_flow(routed: DataFrame) -> DataFrame:
-    """flow payload rows -> (name, flow_href)."""
-    src = routed.filter(F.col("doc_type") == "flow")
-    payload = F.col("payload").cast("string")
+# the fused parse passes each flow payload through unparsed
+FLOW_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("row", T.IntegerType()),
+    T.StructField("flow_payload", T.BinaryType()),
+])
+
+
+def parse_flow(parsed: DataFrame) -> DataFrame:
+    """The fused parse's flow rows -> (name, flow_href), the JSON read
+    by the JVM's ``get_json_object``."""
+    src = parsed.filter(F.col("doc_type") == "flow")
+    payload = F.col("flow_payload").cast("string")
     return src.select(
         "url", "row",
         F.get_json_object(payload, "$.name").alias("name"),

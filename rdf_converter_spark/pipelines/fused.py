@@ -2,14 +2,15 @@
 """Fused single-pass parse: every document kind in ONE mapInPandas
 crossing — the package's only parse path.
 
-A parse per kind would scan the routed table once per kind and pay one
+A parse per kind would scan the routed rows once per kind and pay one
 Python/Arrow round trip per partition each time; with K kinds the
 corpus would cross the JVM<->Python boundary K times. At 10^12
 documents the parse is the pipeline's dominant cost, so every build
 (the staged ``parsed_docs`` stage, the single-plan builds) parses each
 partition EXACTLY ONCE: one Arrow batch in, rows grouped by
-``doc_type`` and dispatched to the per-kind derive kernels, one
-union-schema batch out. Downstream
+``doc_type`` and dispatched to the per-kind derive kernels (flow
+payloads pass through as bytes for the JVM's JSON read,
+``flow.parse_flow``), one union-schema batch out. Downstream
 consumers filter the fused frame by kind — pure JVM scans of the
 (checkpointed) parsed columns, which are far narrower than the raw
 payloads. The per-kind helpers (``ld.parse_ld_programs``,
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.units import parse_asr_unit, parse_csv_units_batched
+from . import flow as flp
 from . import ld as ldp
 from . import pa as pap
 from . import subtitles as subp
@@ -40,6 +42,7 @@ _SCHEMAS = {
     "pa": pap.PA_SCHEMA,
     "yle": ylep.YLE_SCHEMA,
     "asr": subp.ASR_SCHEMA,
+    "flow": flp.FLOW_SCHEMA,
 }
 
 
@@ -103,12 +106,15 @@ _KERNELS = {
     "pa": lambda pdf: _csv_recs(pap._derive_pa, pdf),
     "yle": _yle_recs,
     "asr": _asr_recs,
+    # the JSON is read JVM-side (flow.parse_flow): passed through as is
+    "flow": lambda pdf: pdf[["url", "row", "payload"]].rename(
+        columns={"payload": "flow_payload"}),
 }
 
 
 def parse_all(
     routed: DataFrame,
-    kinds: Sequence[str] = ("ld_program", "ld_segment", "pa", "yle", "asr"),
+    kinds: Sequence[str] = tuple(_SCHEMAS),
 ) -> DataFrame:
     """routed rows of the given kinds -> one fused parsed frame."""
     kinds = tuple(kinds)

@@ -18,8 +18,6 @@ Stage layout:
 
 from __future__ import annotations
 
-from typing import Optional
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,7 +29,6 @@ from ..terms import DCT_PUBLISHER, EB, MEMAD, RDF_TYPE, RDFS_LABEL, XSD
 from ..textkit import (
     RADIO_CHANNELS,
     clean_string_ld,
-    ld_end_datetime,
     ld_format_datetime,
     ld_format_duration,
     ld_scrub,

@@ -289,11 +289,6 @@ def with_heure2(pa: DataFrame) -> DataFrame:
     needs = pa.filter(F.col("heure_raw") == "").select(
         "dataset", "file", "row", "heure_marker"
     )
-    # three consumers below (within-file carry, per-file last marker,
-    # file list) — materialize the tiny heure-empty subset ONCE so its
-    # lineage (the python PA parse when the input is not yet a
-    # materialized stage) is never re-executed per consumer
-    needs = needs.localCheckpoint(eager=True)
     wf = (
         Window.partitionBy("dataset", "file")
         .orderBy("row")

@@ -1,28 +1,28 @@
 # -*- coding: utf-8 -*-
-"""Full KG-construction run: web_pages -> routed -> parsed -> triples
--> deduplicated triple table, with staged checkpoint/resume, lineage
+"""Full KG-construction run: web_pages -> parsed -> triples ->
+deduplicated triple table, with staged checkpoint/resume, lineage
 and metrics (plans.checkpoint).
 
-Stage graph of ``run_pipeline`` (8 stages; shuffle budget at 10^12
-docs):
-  routed        1 full corpus scan, no shuffle, written partitioned by
-                doc_type (the parse scans are partition-pruned)
+Stage graph of ``run_pipeline`` (5 stages):
   parsed_docs   ONE fused Arrow parse of every document kind
-                (pipelines.fused), written partitioned by doc_type;
-                each kind is read back with ``fused.of_kind`` — a
-                partition-pruned JVM scan; no shuffle
-  parsed_flow   flow-mapping rows, pure JVM
+                (pipelines.fused) over the routed web_pages scan
+                (sources.route, a JVM projection), written partitioned
+                by doc_type; each kind is read back with
+                ``fused.of_kind`` — a partition-pruned JVM scan; no
+                shuffle
   lineage_ld / lineage_pa / lineage_yle
-                identifier -> URI tables the link joins run against
-  pa_derived    global-order window (quirk F14) — single sort of the
-                PA slice only — plus the J2 segment-time join
-  triples       ``assemble_triples``: per-kind explode emission, J2/J3/J4
-                joins (AQE broadcasts the lineage side), union + dedup
-                — THE pipeline shuffle; map-side partial dedup
-                collapses hub triples before exchange
+                ``lineage_tables``: the identifier -> URI tables the
+                link joins run against (``job.py --canonicalize``
+                reads them too)
+  triples       ``assemble_triples``: per-kind explode emission, the PA
+                heure carry (quirk F14) and J2 segment times, the flow
+                JSON read, J3/J4 link joins (AQE broadcasts the lineage
+                side), union + dedup — THE pipeline shuffle; map-side
+                partial dedup collapses hub triples before exchange
 
 ``build_triples_inmem`` runs the same parse and the same
-``assemble_triples`` as one plan, without stage tables.
+``lineage_tables``/``assemble_triples`` wiring as one plan, over a
+``localCheckpoint``ed parse instead of stage tables.
 """
 
 from __future__ import annotations
@@ -46,39 +46,50 @@ from . import yle as ylep
 from .vocab import ina_vocab, yle_vocab
 
 
+def lineage_tables(parsed: DataFrame) -> Dict[str, DataFrame]:
+    """The identifier -> URI tables of the fused parse (S7: the
+    reference's mapping CSVs), keyed by their ``run_pipeline`` stage
+    names; the flow (J3) and subtitle (J4) links join against them."""
+    return {
+        "lineage_ld": ldp.ld_lineage(fup.of_kind(parsed, "ld_program")),
+        "lineage_pa": pap.pa_lineage(fup.of_kind(parsed, "pa")),
+        "lineage_yle": ylep.yle_lineage(fup.of_kind(parsed, "yle")),
+    }
+
+
 def assemble_triples(
     spark: SparkSession,
-    programs: DataFrame,
-    segments: DataFrame,
-    pa_full: DataFrame,
-    yle: DataFrame,
-    asr: DataFrame,
-    flow: DataFrame,
-    ld_lin: DataFrame,
-    pa_lin: DataFrame,
-    yle_lin: DataFrame,
+    parsed: DataFrame,
+    lineage: Dict[str, DataFrame],
     dedup: bool = True,
 ) -> DataFrame:
-    """Every graph's triples from the parsed kinds and their lineage
-    tables: the 11-part union (per-kind emission, the controlled
-    vocabularies, the flow links and the subtitles), deduplicated.
+    """Every graph's triples from the fused parse and its
+    ``lineage_tables`` (or their stage read-backs): the 11-part union
+    (per-kind emission with the PA heure carry and the J2 segment
+    times, the controlled vocabularies, the flow links and the
+    subtitles), deduplicated.
 
     ``dedup=False`` lets callers that need a different survivor key
     (the compat CLI dedups within (graph, yle dataset) so a triple
     emitted by pages of TWO datasets reaches both datasets' files, like
     the reference's per-dataset graphs) run their own dedup_triples."""
+    programs = fup.of_kind(parsed, "ld_program")
+    segments = fup.of_kind(parsed, "ld_segment")
+    pa = fup.of_kind(parsed, "pa")
+    flow = flp.parse_flow(parsed)
+    ld_lin = lineage["lineage_ld"]
     parts = [
         ldp.ld_program_triples(programs),
         ina_vocab(spark, "ld"),
         ldp.ld_segment_triples(ldp.ld_segments_with_times(segments, programs)),
-        pap.pa_triples(pa_full),
+        pap.pa_triples(pap.pa_with_segment_times(pap.with_heure2(pa))),
         ina_vocab(spark, "pa"),
-        ylep.yle_triples(yle),
+        ylep.yle_triples(fup.of_kind(parsed, "yle")),
         yle_vocab(spark, "yle"),
         flp.flow_triples(flow, ld_lin, "ld_flow"),
-        flp.flow_triples(flow, pa_lin, "pa_flow"),
-        flp.yle_flow_triples(flow, yle_lin),
-        subp.subtitle_triples(asr, ld_lin),
+        flp.flow_triples(flow, lineage["lineage_pa"], "pa_flow"),
+        flp.yle_flow_triples(flow, lineage["lineage_yle"]),
+        subp.subtitle_triples(fup.of_kind(parsed, "asr"), ld_lin),
     ]
     acc = parts[0]
     for p in parts[1:]:
@@ -86,12 +97,10 @@ def assemble_triples(
     return dedup_triples(acc) if dedup else acc
 
 
-def build_triples_inmem(
-    spark: SparkSession, routed: DataFrame, dedup: bool = True
-) -> DataFrame:
+def build_triples_inmem(spark: SparkSession, routed: DataFrame) -> DataFrame:
     """Single-plan variant (no staged materialization): routed rows ->
-    deduplicated triple table. Used by ``convert.py``, the benchmark's
-    fused cross-check and tests; the staged ``run_pipeline`` is the
+    deduplicated triple table. Used by the benchmark's fused
+    cross-check and tests; the staged ``run_pipeline`` is the
     resumable production shape.
 
     Parse strategy: ONE fused Python pass over the corpus
@@ -99,22 +108,7 @@ def build_triples_inmem(
     downstream branch (triples, lineage, joins) is then a pure-JVM
     scan of the narrow parsed columns."""
     parsed = fup.parse_all(routed).localCheckpoint(eager=True)
-    programs = fup.of_kind(parsed, "ld_program")
-    pa = fup.of_kind(parsed, "pa")
-    yle = fup.of_kind(parsed, "yle")
-    return assemble_triples(
-        spark,
-        programs=programs,
-        segments=fup.of_kind(parsed, "ld_segment"),
-        pa_full=pap.pa_with_segment_times(pap.with_heure2(pa)),
-        yle=yle,
-        asr=fup.of_kind(parsed, "asr"),
-        flow=flp.parse_flow(routed),
-        ld_lin=ldp.ld_lineage(programs),
-        pa_lin=pap.pa_lineage(pa),
-        yle_lin=ylep.yle_lineage(yle),
-        dedup=dedup,
-    )
+    return assemble_triples(spark, parsed, lineage_tables(parsed))
 
 
 def build_triples_extraction(spark: SparkSession, routed: DataFrame) -> DataFrame:
@@ -158,75 +152,36 @@ def run_pipeline(
     web_pages_path: str,
     work_dir: str,
     resume: bool = True,
-    route_partitions: int = 0,
 ) -> Dict[str, DataFrame]:
     """Execute the full pipeline; returns the named output frames.
 
-    ``route_partitions`` spreads the routed materialization when the
-    input arrives in fewer splits than the cluster has slots (small
-    files bin-packed by maxPartitionBytes would otherwise cap the
-    parallelism of the parse); 0 = keep the scan's partitioning (the
-    right choice when the input is already a well-partitioned table).
-
     With ``resume`` a completed stage of ``work_dir`` is read back
-    only when the run fingerprint — the input listing, the
-    ``route_partitions`` setting, the package sources and the
-    ``MEMAD_MAPPINGS_DIR`` vocabularies — equals the one in
-    ``work_dir/_run.json``; otherwise every stage is recomputed and
-    ``_run.json`` records why.
+    only when the run fingerprint — the input listing, the package
+    sources and the ``MEMAD_MAPPINGS_DIR`` vocabularies — equals the
+    one in ``work_dir/_run.json``; otherwise every stage is recomputed
+    and ``_run.json`` records why.
     """
     sr = StageRunner(spark, work_dir, resume=resume, fingerprint={
         "inputs": listing_sha1(spark, web_pages_path),
-        "route_partitions": route_partitions,
         "sources": package_sha1(),
         "mappings": mappings_sha1(),
     })
-
-    def build_routed() -> DataFrame:
-        r = route(read_web_pages(spark, web_pages_path))
-        if route_partitions:
-            r = r.repartition(route_partitions)
-        return r
-
-    routed = sr.stage("routed", build_routed, partition_by=["doc_type"])
-    parsed = sr.stage("parsed_docs", lambda: fup.parse_all(routed),
-                      partition_by=["doc_type"])
-    programs = fup.of_kind(parsed, "ld_program")
-    pa = fup.of_kind(parsed, "pa")
-    yle = fup.of_kind(parsed, "yle")
-    flow = sr.stage("parsed_flow", lambda: flp.parse_flow(routed))
-
-    ld_lin = sr.stage("lineage_ld", lambda: ldp.ld_lineage(programs))
-    pa_full = sr.stage(
-        "pa_derived",
-        lambda: pap.pa_with_segment_times(pap.with_heure2(pa)),
+    parsed = sr.stage(
+        "parsed_docs",
+        lambda: fup.parse_all(route(read_web_pages(spark, web_pages_path))),
+        partition_by=["doc_type"],
     )
-    pa_lin = sr.stage("lineage_pa", lambda: pap.pa_lineage(pa))
-    yle_lin = sr.stage("lineage_yle", lambda: ylep.yle_lineage(yle))
-
+    lineage = {name: sr.stage(name, lambda df=df: df)
+               for name, df in lineage_tables(parsed).items()}
     triples = sr.stage(
         "triples",
-        lambda: assemble_triples(
-            spark,
-            programs=programs,
-            segments=fup.of_kind(parsed, "ld_segment"),
-            pa_full=pa_full,
-            yle=yle,
-            asr=fup.of_kind(parsed, "asr"),
-            flow=flow,
-            ld_lin=ld_lin,
-            pa_lin=pa_lin,
-            yle_lin=yle_lin,
-        ),
+        lambda: assemble_triples(spark, parsed, lineage),
         partition_by=["graph"],
     )
     sr.write_metrics()
     return {
-        "routed": routed,
         "triples": triples,
-        "lineage_ld": ld_lin,
-        "lineage_pa": pa_lin,
-        "lineage_yle": yle_lin,
+        **lineage,
         "metrics": spark.createDataFrame(
             [
                 (m["stage"], m["rows"], m["partitions"], m["files"],

@@ -31,7 +31,6 @@ in Arrow kernels):
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession

@@ -6,9 +6,8 @@ routing, so doc-kind dispatch (the reference's column-presence /
 id-shape checks, ld_converter.py:69-72, pa_converter.py:348) is a pure
 Spark expression: envelope attributes are pulled with
 ``regexp_extract`` and the payload with ``unbase64`` — no Python.
-The routed output is materialized partitioned by ``doc_type`` so every
-downstream per-kind parse is a partition-pruned scan that reads only
-its own bytes.
+The fused parse (pipelines.fused) reads it straight from the scan; it
+is not materialized.
 """
 
 from __future__ import annotations

@@ -17,7 +17,6 @@ They mirror the reference's input handling exactly:
 from __future__ import annotations
 
 import io
-import json
 import xml.etree.ElementTree as ET
 from typing import Dict, List, Optional
 
@@ -250,7 +249,3 @@ def parse_asr_unit(payload: bytes, filename: str) -> List[Dict]:
         )
     return rows
 
-
-def parse_flow_unit(payload: bytes) -> Dict:
-    """One flow-mapping JSON object: {"name": ..., "flowHRef": ...}."""
-    return json.loads(payload.decode("utf-8"))

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import base64
 import re
-from typing import Optional, Tuple
+from typing import Tuple
 
 from pyspark.sql import types as T
 

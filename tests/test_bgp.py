@@ -174,11 +174,11 @@ def test_filter_null_optional_is_error_is_false(triples):
 
 
 def test_union_pads_branch_only_variables_with_null(triples):
-    from rdf_converter_spark.operators.bgp import bgp_union
+    from rdf_converter_spark.operators.bgp import bag_union
 
-    out = bgp_union(triples, [
-        [("?s", "type", "Person")],
-        [("?s", "likes", "?w")],
+    out = bag_union([
+        bgp_match(triples, [("?s", "type", "Person")]),
+        bgp_match(triples, [("?s", "likes", "?w")]),
     ])
     assert out.columns == ["s", "w"]
     rows = sorted((r.s, r.w) for r in out.collect())
@@ -186,34 +186,31 @@ def test_union_pads_branch_only_variables_with_null(triples):
 
 
 def test_union_is_bag_not_set(triples):
-    from rdf_converter_spark.operators.bgp import bgp_union
+    from rdf_converter_spark.operators.bgp import bag_union
 
-    out = bgp_union(triples, [
-        [("?s", "type", "Person")],
-        [("?s", "type", "Person")],
+    out = bag_union([
+        bgp_match(triples, [("?s", "type", "Person")]),
+        bgp_match(triples, [("?s", "type", "Person")]),
     ])
     assert sorted(r.s for r in out.collect()) == ["a", "a", "b", "b"]
 
 
 def test_union_per_branch_filters(triples):
-    from rdf_converter_spark.operators.bgp import bgp_union
+    from rdf_converter_spark.operators.bgp import bag_union
 
-    out = bgp_union(
-        triples,
-        [[("?s", "type", "Person")], [("?s", "type", "Place")]],
-        filters=[["?s = 'a'"], []],
-    )
+    out = bag_union([
+        bgp_match(triples, [("?s", "type", "Person")],
+                  filters=["?s = 'a'"]),
+        bgp_match(triples, [("?s", "type", "Place")]),
+    ])
     assert sorted(r.s for r in out.collect()) == ["a", "c"]
 
 
 def test_union_validation(triples):
-    from rdf_converter_spark.operators.bgp import bgp_union
+    from rdf_converter_spark.operators.bgp import bag_union
 
     with pytest.raises(ValueError, match="empty UNION"):
-        bgp_union(triples, [])
-    with pytest.raises(ValueError, match="align"):
-        bgp_union(triples, [[("?s", "type", "Person")]],
-                  filters=[[], []])
+        bag_union([])
 
 
 def test_construct_template_instantiation(triples):

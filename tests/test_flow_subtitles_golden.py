@@ -18,9 +18,10 @@ def _check(mine, golden_outputs, names):
 def test_ld_flow(spark, routed, golden_outputs):
     from rdf_converter_spark.operators.emit import dedup_triples
     from rdf_converter_spark.pipelines import flow as flp
+    from rdf_converter_spark.pipelines.fused import parse_all
     from rdf_converter_spark.pipelines import ld as ldp
 
-    flow = flp.parse_flow(routed)
+    flow = flp.parse_flow(parse_all(routed, kinds=("flow",)))
     lineage = ldp.ld_lineage(ldp.parse_ld_programs(routed))
     mine = collect_triples(
         dedup_triples(flp.flow_triples(flow, lineage, "ld_flow"))
@@ -31,9 +32,10 @@ def test_ld_flow(spark, routed, golden_outputs):
 def test_pa_flow(spark, routed, golden_outputs):
     from rdf_converter_spark.operators.emit import dedup_triples
     from rdf_converter_spark.pipelines import flow as flp
+    from rdf_converter_spark.pipelines.fused import parse_all
     from rdf_converter_spark.pipelines import pa as pap
 
-    flow = flp.parse_flow(routed)
+    flow = flp.parse_flow(parse_all(routed, kinds=("flow",)))
     lineage = pap.pa_lineage(pap.parse_pa(routed))
     mine = collect_triples(
         dedup_triples(flp.flow_triples(flow, lineage, "pa_flow"))
@@ -44,9 +46,10 @@ def test_pa_flow(spark, routed, golden_outputs):
 def test_yle_flow(spark, routed, golden_outputs):
     from rdf_converter_spark.operators.emit import dedup_triples
     from rdf_converter_spark.pipelines import flow as flp
+    from rdf_converter_spark.pipelines.fused import parse_all
     from rdf_converter_spark.pipelines import yle as ylep
 
-    flow = flp.parse_flow(routed)
+    flow = flp.parse_flow(parse_all(routed, kinds=("flow",)))
     lineage = ylep.yle_lineage(ylep.parse_yle(routed))
     mine = collect_triples(dedup_triples(flp.yle_flow_triples(flow, lineage)))
     _check(mine, golden_outputs, {"yle_flow_filenames.ttl"})

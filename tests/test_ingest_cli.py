@@ -115,3 +115,16 @@ def test_convert_cli_ld(spark, corpus, tmp_path):
     assert len(triples) > 50
     subjects = {t[0] for t in triples}
     assert any("memad" in s or "data" in s for s in subjects)
+
+    # the mapping CSV is the lineage of the one parse the triples used
+    from rdf_converter_spark.pipelines import ld as ldp
+    from rdf_converter_spark.sources.ingest import ingest_reference_layout
+    from rdf_converter_spark.sources.route import route
+
+    routed = route(ingest_reference_layout(spark,
+                                           ld=os.path.join(corpus, "ld")))
+    want = ldp.ld_lineage(ldp.parse_ld_programs(routed)).toPandas()
+    with open(os.path.join(out, "ina_ld_mapping.csv")) as fh:
+        got = sorted(fh.read().splitlines())
+    assert len(got) > 10
+    assert got == sorted(want.to_csv(index=False).splitlines())

@@ -1,4 +1,5 @@
-"""Every package module is reached from the KG's entry points.
+"""Every package module is reached from the KG's entry points, and
+reads every name it imports.
 
 Walks `import` statements with `ast` (no module is executed, no Spark
 session is started) from the four roots the KG is built and served
@@ -6,6 +7,8 @@ through, and asserts that each module under `rdf_converter_spark/` is
 reached from them or is one of the named exceptions, each kept on
 purpose with its reason. A module that nothing reaches is dead weight
 for the graph: delete it with its tests, or add it here with a reason.
+Likewise an imported name that its module never reads is a dead
+import: delete it.
 """
 from __future__ import annotations
 
@@ -100,3 +103,25 @@ def test_every_package_module_is_reached_from_the_kg():
     for name, reason in EXCEPTIONS.items():
         assert name in modules, f"{name} ({reason}) no longer exists"
         assert name not in reached, f"{name} is reached; drop its exception"
+
+
+def _unread_imports(path: Path) -> list:
+    """Names the module at `path` binds by `import` but never reads."""
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    bound = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            bound |= {a.asname or a.name.split(".")[0] for a in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound |= {a.asname or a.name for a in node.names}
+    read = {n.id for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+    return sorted(bound - read)
+
+
+def test_no_package_module_imports_a_name_it_never_reads():
+    # a package's __init__ re-exports what it imports
+    unread = {name: names for name, path in _module_files().items()
+              if path.name != "__init__.py"
+              for names in [_unread_imports(path)] if names}
+    assert not unread, f"imported but never read: {unread}"

@@ -26,7 +26,7 @@ def test_full_pipeline_and_resume(spark, corpus, golden_outputs, tmp_path_factor
     # metrics + per-partition lineage written
     metrics = json.load(open(os.path.join(work, "_metrics.json")))
     stages = {m["stage"] for m in metrics}
-    assert {"routed", "triples", "lineage_ld"} <= stages
+    assert {"parsed_docs", "triples", "lineage_ld"} <= stages
     assert all(m["rows"] >= 0 for m in metrics)
     assert os.path.exists(os.path.join(work, "_lineage", "triples.json"))
 
@@ -39,7 +39,7 @@ def test_full_pipeline_and_resume(spark, corpus, golden_outputs, tmp_path_factor
     assert mine2 == mine
     metrics2 = json.load(open(os.path.join(work, "_metrics.json")))
     resumed = {m["stage"] for m in metrics2 if m["resumed"]}
-    assert "routed" in resumed and "parsed_docs" in resumed
+    assert "parsed_docs" in resumed
     recomputed = {m["stage"] for m in metrics2 if not m["resumed"]}
     assert recomputed == {"triples"}
 
@@ -170,8 +170,7 @@ def test_resume_recomputes_only_the_deleted_stage(spark, corpus,
 
     metrics = json.load(open(os.path.join(work, "_metrics.json")))
     assert [m["stage"] for m in metrics] == [
-        "routed", "parsed_docs", "parsed_flow", "lineage_ld",
-        "pa_derived", "lineage_pa", "lineage_yle", "triples",
+        "parsed_docs", "lineage_ld", "lineage_pa", "lineage_yle", "triples",
     ]
 
     shutil.rmtree(os.path.join(work, "triples"))
@@ -179,8 +178,34 @@ def test_resume_recomputes_only_the_deleted_stage(spark, corpus,
     assert _digest(again["triples"]) == first
     metrics = json.load(open(os.path.join(work, "_metrics.json")))
     resumed = {m["stage"] for m in metrics if m["resumed"]}
-    assert {"routed", "parsed_docs"} <= resumed
+    assert {"parsed_docs", "lineage_ld", "lineage_pa",
+            "lineage_yle"} <= resumed
     assert {m["stage"] for m in metrics if not m["resumed"]} == {"triples"}
+
+
+def test_staged_equals_fused_on_the_five_stages(spark, corpus,
+                                                tmp_path_factory):
+    """Without the reference: the staged build's triples equal the
+    single-plan build's, and the work dir holds exactly the five stage
+    tables, in the order ``_metrics.json`` lists them."""
+    from rdf_converter_spark.pipelines.runner import (build_triples_inmem,
+                                                      run_pipeline)
+    from rdf_converter_spark.sources.route import route
+    from rdf_converter_spark.sources.web_pages import read_web_pages
+
+    pages = os.path.join(corpus, "web_pages")
+    work = str(tmp_path_factory.mktemp("staged_vs_fused"))
+    staged = _digest(run_pipeline(spark, pages, work, resume=False)["triples"])
+    routed = route(read_web_pages(spark, pages))
+    fused = _digest(build_triples_inmem(spark, routed))
+    assert staged == fused and staged[0] > 1000
+
+    stages = ["parsed_docs", "lineage_ld", "lineage_pa", "lineage_yle",
+              "triples"]
+    metrics = json.load(open(os.path.join(work, "_metrics.json")))
+    assert [m["stage"] for m in metrics] == stages
+    assert sorted(n for n in os.listdir(work)
+                  if not n.startswith("_")) == sorted(stages)
 
 
 def test_lineage_rows_equal_footer_counts(spark, tmp_path):
@@ -263,10 +288,10 @@ def test_resume_on_new_inputs_recomputes_every_stage(spark, tmp_path_factory):
     assert not any(stages().values())
     run = json.load(open(os.path.join(work, "_run.json")))
     assert run["recomputed"] == "fingerprint changed: inputs"
-    assert len(run["stages"]) == 8
+    assert len(run["stages"]) == 5
 
     assert _digest(run_pipeline(spark, pages["b"], work)["triples"]) == fresh_b
-    assert all(stages().values()) and len(stages()) == 8
+    assert all(stages().values()) and len(stages()) == 5
     run = json.load(open(os.path.join(work, "_run.json")))
     assert run["recomputed"] is None
 
@@ -297,11 +322,11 @@ def test_resume_after_an_override_mapping_change_recomputes_every_stage(
         return [m["resumed"] for m in metrics], run["recomputed"]
 
     try:
-        assert run() == ([False] * 8, "no _run.json in the work dir")
-        assert run() == ([True] * 8, None)
+        assert run() == ([False] * 5, "no _run.json in the work dir")
+        assert run() == ([True] * 5, None)
         table["unused-test-channel"] = "x"
         (override / "yle_channel2code.json").write_text(json.dumps(table))
-        assert run() == ([False] * 8, "fingerprint changed: mappings")
+        assert run() == ([False] * 5, "fingerprint changed: mappings")
     finally:
         mappings.load.cache_clear()
 
